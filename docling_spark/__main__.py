@@ -22,9 +22,21 @@ import sys
 def convert_main(argv: list[str]) -> int:
     """Reference-CLI parity (`docling <sources> --to md --output dir`,
     /root/reference/docling/cli/main.py:307): convert local files through
-    the same extraction cores, no Spark session needed."""
+    the job's format sniff and backends, no Spark session needed."""
+    from .job import CONTENT_TYPES, _doc_backend, sniff_content_type
+
+    def content_types(value: str) -> set[str]:
+        names = {f.strip() for f in value.split(",") if f.strip()}
+        unknown = sorted(names - set(CONTENT_TYPES))
+        if unknown:
+            raise argparse.ArgumentTypeError(
+                f"unknown format(s) {','.join(unknown)}; "
+                f"choose from {','.join(CONTENT_TYPES)}"
+            )
+        return names
+
     p = argparse.ArgumentParser(prog="docling_spark convert")
-    p.add_argument("sources", nargs="+", help="html/pdf files")
+    p.add_argument("sources", nargs="+", help="input files of any supported format")
     p.add_argument(
         "--to",
         default="md",
@@ -61,285 +73,82 @@ def convert_main(argv: list[str]) -> int:
     p.add_argument(
         "--from",
         dest="from_formats",
+        type=content_types,
         default=None,
-        help="comma allowlist of input formats (html,pdf,docx,xlsx,pptx,md,"
-        "asciidoc,csv,vtt,jats,uspto,ofd,json); others are skipped",
+        help=f"comma allowlist of input formats ({', '.join(CONTENT_TYPES)}); "
+        "others are skipped",
     )
     args = p.parse_args(argv)
     page_range = (1, 2**31 - 1)
     if args.page_range:
         a, _, b = args.page_range.partition("-")
         page_range = (int(a), int(b or a))
-    allowed = (
-        {f.strip() for f in args.from_formats.split(",") if f.strip()}
-        if args.from_formats
-        else None
-    )
-
-    def fmt_allowed(fmt: str) -> bool:
-        return allowed is None or fmt in allowed
-
-    def detect_fmt(path, raw: bytes) -> str:
-        """Mirror of the dispatch chain below, for the --from allowlist."""
-        suf = path.suffix.lower()
-        if raw[:5] == b"%PDF-" or suf == ".pdf":
-            return "pdf"
-        if raw[:6] == b"WEBVTT" or suf == ".vtt":
-            return "vtt"
-        if suf == ".docx" or (raw[:2] == b"PK" and b"word/document.xml" in raw):
-            return "docx"
-        if suf in (".pptx", ".pptm", ".potx") or (
-            raw[:2] == b"PK" and b"ppt/presentation.xml" in raw
-        ):
-            return "pptx"
-        if suf in (".xlsx", ".xlsm") or (
-            raw[:2] == b"PK" and b"xl/workbook.xml" in raw
-        ):
-            return "xlsx"
-        from .usptox import looks_like_uspto
-
-        if suf != ".nxml" and looks_like_uspto(raw):
-            return "uspto"
-        if suf == ".nxml" or (
-            b"JATS-journalpublishing" in raw[:8192]
-            or b"JATS-archive" in raw[:8192]
-        ):
-            return "jats"
-        if suf in (".adoc", ".asciidoc", ".asc"):
-            return "asciidoc"
-        if suf in (".md", ".markdown"):
-            return "md"
-        if suf == ".ofd" or (raw[:2] == b"PK" and b"OFD.xml" in raw):
-            return "ofd"
-        if suf == ".csv":
-            return "csv"
-        return "html"
 
     from pathlib import Path
 
-    from .htmlx.extract import extract_html
     from .pdfx.extract import extract_pdf_text
     from .serialize import to_itxt, to_markdown
+    from .serialize_doctags import to_doctags
+    from .serialize_html import to_html
     from .serialize_json import to_docling_json
 
     formats = [f.strip() for f in args.to.split(",") if f.strip()]
+    ext_map = {
+        "md": ".md",
+        "itxt": ".itxt",
+        "json": ".json",
+        "text": ".txt",
+        "html": ".html",
+        "doctags": ".doctags.txt",
+    }
     outdir = Path(args.output)
     outdir.mkdir(parents=True, exist_ok=True)
     failures = 0
     for src in args.sources:
         path = Path(src)
         raw = path.read_bytes()
-        doc = None
-        if not fmt_allowed(detect_fmt(path, raw)):
-            print(f"skipped {path.name}: format not in --from")
+        fmt = sniff_content_type(path.name, raw)
+        if args.from_formats is not None and fmt not in args.from_formats:
+            print(f"skipped {path.name}: format {fmt} not in --from")
             continue
         try:
-            if raw[:5] == b"%PDF-" or path.suffix.lower() == ".pdf":
+            if fmt == "pdf":
+                # the PDF text path has no SpanDoc: md/text outputs only
                 res = extract_pdf_text(
                     raw,
                     password=args.pdf_password,
                     page_range=page_range,
                     max_num_pages=args.max_num_pages,
                 )
-                if res.status in ("failure",):
+                if res.status == "failure":
                     raise RuntimeError(res.error or res.status)
-                outputs = {"md": res.text, "text": res.text, "itxt": None, "json": None}
-            elif raw[:6] == b"WEBVTT" or path.suffix.lower() == ".vtt":
-                from .vttx import extract_vtt
-
-                doc = extract_vtt(raw, name=path.stem)
-                # reference vtt goldens export with escape_html=False
-                # (tests/test_backend_vtt.py:220) — same as the job path
-                outputs = {
-                    "md": to_markdown(doc, escape_html=False),
-                    "text": to_markdown(doc, escape_html=False),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(doc, path.name, raw, mimetype="text/vtt"),
-                }
-            elif path.suffix.lower() == ".docx" or (
-                raw[:2] == b"PK" and b"word/document.xml" in raw
-            ):
-                from .docxx import extract_docx
-
-                doc = extract_docx(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc,
-                        path.name,
-                        raw,
-                        mimetype=(
-                            "application/vnd.openxmlformats-officedocument."
-                            "wordprocessingml.document"
-                        ),
-                    ),
-                }
-            elif path.suffix.lower() in (".pptx", ".pptm", ".potx") or (
-                raw[:2] == b"PK" and b"ppt/presentation.xml" in raw
-            ):
-                from .pptxx import extract_pptx
-
-                doc = extract_pptx(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc,
-                        path.name,
-                        raw,
-                        mimetype="application/vnd.ms-powerpoint",
-                    ),
-                }
-            elif path.suffix.lower() in (".xlsx", ".xlsm") or (
-                raw[:2] == b"PK" and b"xl/workbook.xml" in raw
-            ):
-                from .xlsxx import extract_xlsx
-
-                doc = extract_xlsx(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc,
-                        path.name,
-                        raw,
-                        mimetype=(
-                            "application/vnd.openxmlformats-officedocument."
-                            "spreadsheetml.sheet"
-                        ),
-                    ),
-                }
-            elif path.suffix.lower() != ".nxml" and __import__(
-                "docling_spark.usptox", fromlist=["looks_like_uspto"]
-            ).looks_like_uspto(raw):
-                from .usptox import extract_uspto
-
-                doc = extract_uspto(raw, name=path.name)
-                mime = (
-                    "text/plain" if raw.startswith(b"PATN") else "application/xml"
-                )
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, None),
-                    "json": to_docling_json(doc, path.name, raw, mimetype=mime),
-                }
-            elif path.suffix.lower() == ".nxml" or (
-                b"JATS-journalpublishing" in raw[:8192]
-                or b"JATS-archive" in raw[:8192]
-            ):
-                from .jatsx import extract_jats
-
-                doc = extract_jats(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="application/xml"
-                    ),
-                }
-            elif path.suffix.lower() in (".adoc", ".asciidoc", ".asc"):
-                from .asciidocx import extract_asciidoc
-
-                doc = extract_asciidoc(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="text/asciidoc"
-                    ),
-                }
-            elif path.suffix.lower() in (".md", ".markdown"):
-                from .mdx import extract_markdown
-
-                doc = extract_markdown(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="text/markdown"
-                    ),
-                }
-            elif raw.lstrip()[:8] == b"<doctag>":
-                from .doctagsx import parse_doctags
-
-                doc = parse_doctags(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="text/plain"
-                    ),
-                }
-            elif path.suffix.lower() == ".ofd" or (
-                raw[:2] == b"PK" and b"OFD.xml" in raw
-            ):
-                from .ofdx import extract_ofd
-
-                doc = extract_ofd(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="application/zip"
-                    ),
-                }
-            elif path.suffix.lower() == ".csv":
-                from .csvx import extract_csv
-
-                doc = extract_csv(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(doc, path.name, raw, mimetype="text/csv"),
-                }
+                outputs = {"md": res.text, "text": res.text}
             else:
-                doc = extract_html(raw, base_uri="None", name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(doc, path.name, raw),
+                routed = _doc_backend(fmt, raw, path.name, "none")
+                if routed is None:
+                    print(f"skipped {path.name}: unsupported format {fmt}")
+                    continue
+                doc, filename, mimetype, itxt_width, md_kwargs = routed
+                kw = {} if mimetype is None else {"mimetype": mimetype}
+                serializers = {
+                    "md": lambda: to_markdown(doc, **md_kwargs),
+                    "text": lambda: to_markdown(doc, **md_kwargs),
+                    "itxt": lambda: to_itxt(doc, itxt_width),
+                    "json": lambda: to_docling_json(doc, filename, raw, **kw),
+                    "html": lambda: to_html(doc),
+                    "doctags": lambda: to_doctags(doc),
                 }
+                outputs = {f: serializers[f]() for f in formats if f in serializers}
         except Exception as e:  # noqa: BLE001 — per-file containment
             print(f"FAILED {path.name}: {e}", file=sys.stderr)
             failures += 1
             if args.abort_on_error:
                 return 1
             continue
-        if doc is not None:
-            # formats every SpanDoc backend supports; the PDF text path has
-            # no SpanDoc and keeps its md/text-only outputs
-            if "html" in formats:
-                from .serialize_html import to_html
-
-                outputs["html"] = to_html(doc)
-            if "doctags" in formats:
-                from .serialize_doctags import to_doctags
-
-                outputs["doctags"] = to_doctags(doc)
-        ext_map = {
-            "md": ".md",
-            "itxt": ".itxt",
-            "json": ".json",
-            "text": ".txt",
-            "html": ".html",
-            "doctags": ".doctags.txt",
-        }
-        for fmt in formats:
-            content = outputs.get(fmt)
+        for to in formats:
+            content = outputs.get(to)
             if content is not None:
-                (outdir / (path.stem + ext_map.get(fmt, f".{fmt}"))).write_text(content)
+                (outdir / (path.stem + ext_map.get(to, f".{to}"))).write_text(content)
         print(f"converted {path.name}")
     return 1 if failures else 0
 

@@ -26,9 +26,12 @@ Scale design notes
 
 from __future__ import annotations
 
+import re
 import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from functools import reduce
+from operator import and_, or_
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -36,6 +39,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schema import EXTRACTED_SCHEMA, LINEAGE_SCHEMA
+
+# ------------------------------------------------------------ format dispatch
+# DISPATCH_RULES decides a blob's content type everywhere: with_content_type
+# compiles it to the job's JVM CaseWhen, sniff_content_type evaluates it in
+# Python for single files (CLI, web demo). Every content probe reads a
+# BOUNDED window, never the full blob (the reference sniffs only the first
+# 8 KB — document.py:513,527), so a marker buried at byte 50 M cannot flip
+# the format: markers, regexes and the CSV sniff read the PREFIX_BYTES
+# head; zip-member probes read a ZIP_PROBE_BYTES head (first local-file
+# headers) plus the same-sized tail (the central directory, which names
+# every member). Known limit: an EXTENSIONLESS archive whose identifying
+# member is in neither window (a central directory of hundreds of members)
+# routes to 'other' — real OOXML/OFD writers put the document part first
+# and crawl rows carry extensions.
+PREFIX_BYTES = 8192
+ZIP_PROBE_BYTES = 65536
+MAGIC_BYTES = 12  # every magic atom lies inside this head
+
+# url extension, lower-cased (Python compiles it with re.ASCII; Java's '.'
+# and '$' also stop at \r and Unicode line breaks, which urls never carry)
+_EXT_RE = r"\.([A-Za-z0-9]+)(?:[?#].*)?$"
 
 # HTML sniff pattern re-derived from the reference's _detect_html_xhtml
 # (/root/reference/docling/datamodel/document.py:620-657): optional leading
@@ -45,184 +69,132 @@ _HTML_SNIFF_RE = (
     r"(<!doctype\s+html|<html|<head|<body)"
 )
 
+# First match wins; one row per CASE branch. A row is
+# (content_type, *alternatives): alternatives are ORed, and each is one
+# atom or a tuple of atoms that must all hold. Atoms:
+#   ("magic", sig[, offset])  bytes at an offset of the blob
+#   ("ext", *names)           url extension
+#   ("marker", needle)        bytes inside the PREFIX_BYTES head
+#   ("zip", member)           "PK" magic and a member name in a zip window
+#   ("regex", pattern)        Java-compatible regex on the decoded head
+#   ("csv",)                  the CSV sniff (_csv_sniff)
+# The order mirrors the reference _guess_format (document.py:488-554):
+# content magic first, then url extension, then content sniffing.
+DISPATCH_RULES = (
+    ("pdf", ("magic", b"%PDF-")),
+    ("html", ("ext", "html", "htm", "xhtml")),
+    ("pdf", ("ext", "pdf")),
+    ("csv", ("ext", "csv")),
+    ("vtt", ("magic", b"WEBVTT")),
+    ("vtt", ("ext", "vtt")),
+    ("md", ("ext", "md", "markdown")),
+    ("asciidoc", ("ext", "adoc", "asciidoc", "asc")),
+    ("jats", ("marker", b"JATS-journalpublishing"),
+     ("marker", b"JATS-archive"), ("ext", "nxml")),
+    ("uspto", ("magic", b"PATN"), ("marker", b"us-patent-application-v4"),
+     ("marker", b"us-patent-grant-v4"), ("marker", b"us-grant-025"),
+     ("marker", b"US-Grant-025"),
+     (("marker", b"patent-application-publication"), ("marker", b"pap-v1"))),
+    ("ofd", ("ext", "ofd")),
+    ("ofd", ("zip", b"OFD.xml")),
+    ("docx", ("ext", "docx")),
+    ("xlsx", ("ext", "xlsx", "xlsm")),
+    ("pptx", ("ext", "pptx", "pptm", "potx")),
+    ("docx", ("zip", b"word/document.xml")),
+    ("xlsx", ("zip", b"xl/workbook.xml")),
+    ("pptx", ("zip", b"ppt/presentation.xml")),
+    # gzip → mets_gbs candidate: the backend inspects the tar and skips
+    # non-METS archives (reference _guess_format, document.py:688-707)
+    ("mets_gbs", ("magic", b"\x1f\x8b")),
+    # images get an explicit needs_ocr status (reference image_backend)
+    ("image", ("magic", b"\x89PNG")),
+    ("image", ("magic", b"\xff\xd8\xff")),
+    ("image", ("magic", b"GIF8")),
+    ("image", ("magic", b"II*\x00")),
+    ("image", ("magic", b"MM\x00*")),
+    ("image", ("magic", b"BM")),
+    ("image", (("magic", b"RIFF"), ("magic", b"WEBP", 8))),
+    ("image", ("ext", "png", "jpg", "jpeg", "gif", "tif", "tiff", "bmp", "webp")),
+    # audio needs ASR (reference NoOpBackend; NN, out of contract)
+    ("audio", (("magic", b"RIFF"), ("magic", b"WAVE", 8))),
+    ("audio", ("magic", b"ID3")),
+    ("audio", ("ext", "wav", "mp3", "m4a", "flac", "ogg")),
+    ("docling_json",
+     ("regex", r'(?s)^\s*\{\s*"schema_name"\s*:\s*"DoclingDocument"')),
+    ("doctags", ("regex", r"(?s)^\s*<doctag>")),
+    ("html", ("regex", _HTML_SNIFF_RE)),
+    ("csv", ("csv",)),
+)
+CONTENT_TYPES = tuple(dict.fromkeys(rule[0] for rule in DISPATCH_RULES))
 
-def with_content_type(
-    df: DataFrame, prefix_bytes: int = 8192, zip_probe_bytes: int = 65536
-) -> DataFrame:
-    """Add the dispatch column. Pure JVM expressions — no Python.
 
-    Order mirrors the reference _guess_format (document.py:488-554):
-    content magic (mime) first, then url extension, then content sniffing.
+def _alternatives(rule) -> list[tuple]:
+    return [alt if isinstance(alt[0], tuple) else (alt,) for alt in rule[1:]]
 
-    Every content probe runs on a BOUNDED window, never the full blob
-    (the reference sniffs only the first 8 KB — document.py:513,527):
-    XML-marker probes use the ``prefix_bytes`` head; zip-member probes use
-    a ``zip_probe_bytes`` head plus the same-sized tail (a zip's central
-    directory — which names every member — sits at EOF, and the first
-    local-file headers sit at offset 0). At 100 TB this removes up to
-    ~10 full scans of a 64 MB blob per fall-through row, and a marker
-    buried at byte 50 M can no longer flip the format.
 
-    Known zip-probe limit: an EXTENSIONLESS archive whose central
-    directory exceeds the 64 KB tail window (hundreds of members) AND
-    whose identifying member (word/document.xml, OFD.xml, …) is neither
-    in the first local headers nor the visible directory suffix routes to
-    'other' instead of its office type. Anchoring the window off the
-    end-of-central-directory offset would need binary little-endian
-    parsing in a JVM expression; real OOXML/OFD writers put the document
-    part first and crawl rows carry extensions, so the fixed window is
-    the deliberate trade (raise ``zip_probe_bytes`` per-deployment if
-    such archives matter).
-    """
+def _jvm_atom(atom):
+    kind, *args = atom
+    if kind == "magic":
+        sig, at = (*args, 0)[:2]
+        assert at + len(sig) <= MAGIC_BYTES, atom
+        return F.substring(F.col("_magic"), at + 1, len(sig)) == F.lit(sig)
+    if kind == "ext":
+        return F.col("_ext").isin(*args)
+    if kind == "marker":
+        return F.contains(F.col("_head_bin"), F.lit(args[0]))
+    if kind == "zip":
+        html = F.col("html")
+        tail_at = F.greatest(F.length(html) - F.lit(ZIP_PROBE_BYTES - 1), F.lit(1))
+        return _jvm_atom(("magic", b"PK")) & (
+            F.contains(F.substring(html, 1, ZIP_PROBE_BYTES), F.lit(args[0]))
+            | F.contains(
+                F.substring(html, tail_at, F.lit(ZIP_PROBE_BYTES)), F.lit(args[0])
+            )
+        )
+    if kind == "regex":
+        return F.col("_head").rlike(args[0])
+    return _csv_sniff(F.col("_head"))
+
+
+def with_content_type(df: DataFrame) -> DataFrame:
+    """Add the dispatch column: DISPATCH_RULES compiled to one CaseWhen.
+    Pure JVM expressions — no Python."""
     # Probe inputs are materialized ONCE in a preceding projection:
     # CaseWhen branches get no cross-branch subexpression elimination, so
-    # leaving them inline would re-slice the blob (and re-run the
-    # extension regex) on every probe a fall-through row reaches — ~10
-    # window slices + casts per row. CollapseProject keeps the split
-    # because each alias is non-cheap and referenced many times.
-    # The cast is lenient (invalid UTF-8 → replacement chars): a crawl
-    # blob with arbitrary binary bytes must never crash the dispatch
-    # expression (F.decode raises MALFORMED_CHARACTER_CODING on such
-    # input). The 64 KB zip windows stay INSIDE the chain: they are only
-    # reached by rows whose first two bytes are "PK" (short-circuit &&),
-    # so materializing them for every row would be a net loss.
-    head_bin_e = F.substring(F.col("html"), 1, prefix_bytes)
+    # inline probes would re-slice the blob (and re-run the extension
+    # regex) on every branch a fall-through row reaches. The cast is
+    # lenient (invalid UTF-8 → replacement chars; F.decode would raise on
+    # binary crawl blobs). The zip windows stay INSIDE the chain: only rows
+    # starting with "PK" reach them (short-circuit &&).
+    head_bin = F.substring(F.col("html"), 1, PREFIX_BYTES)
     df = df.withColumns(
         {
-            "_magic": F.substring(F.col("html"), 1, 12),
-            "_head_bin": head_bin_e,
-            "_head": head_bin_e.cast("string"),
-            "_ext": F.lower(
-                F.regexp_extract(
-                    F.col("url"), r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1
-                )
-            ),
+            "_magic": F.substring(F.col("html"), 1, MAGIC_BYTES),
+            "_head_bin": head_bin,
+            "_head": head_bin.cast("string"),
+            "_ext": F.lower(F.regexp_extract(F.col("url"), _EXT_RE, 1)),
         }
     )
-    magic = F.col("_magic")
-    head_bin = F.col("_head_bin")
-    head = F.col("_head")
-    zip_head = F.substring(F.col("html"), 1, zip_probe_bytes)
-    # bounded tail window (1-based start, clamped to the blob start)
-    zip_tail = F.substring(
-        F.col("html"),
-        F.greatest(
-            F.length(F.col("html")) - F.lit(zip_probe_bytes - 1), F.lit(1)
-        ),
-        F.lit(zip_probe_bytes),
+    case = F  # F.when opens the CaseWhen, Column.when extends it
+    for rule in DISPATCH_RULES:
+        alts = (reduce(and_, map(_jvm_atom, alt)) for alt in _alternatives(rule))
+        case = case.when(reduce(or_, alts), rule[0])
+    return df.withColumn("content_type", case.otherwise("other")).drop(
+        "_magic", "_head_bin", "_head", "_ext"
     )
 
-    def zip_member(name: bytes):
-        return F.contains(zip_head, F.lit(name)) | F.contains(
-            zip_tail, F.lit(name)
-        )
 
-    ext = F.col("_ext")
-    return df.withColumn(
-        "content_type",
-        F.when(F.substring(magic, 1, 5) == F.lit(b"%PDF-"), "pdf")
-        .when(ext.isin("html", "htm", "xhtml"), "html")
-        .when(ext == "pdf", "pdf")
-        .when(ext == "csv", "csv")
-        .when(F.substring(magic, 1, 6) == F.lit(b"WEBVTT"), "vtt")
-        .when(ext == "vtt", "vtt")
-        .when(ext.isin("md", "markdown"), "md")
-        .when(ext.isin("adoc", "asciidoc", "asc"), "asciidoc")
-        .when(
-            F.contains(head_bin, F.lit(b"JATS-journalpublishing"))
-            | F.contains(head_bin, F.lit(b"JATS-archive")),
-            "jats",
-        )
-        .when(
-            (F.substring(magic, 1, 4) == F.lit(b"PATN"))
-            | F.contains(head_bin, F.lit(b"us-patent-application-v4"))
-            | F.contains(head_bin, F.lit(b"us-patent-grant-v4"))
-            | F.contains(head_bin, F.lit(b"us-grant-025"))
-            | F.contains(head_bin, F.lit(b"US-Grant-025"))
-            | (
-                F.contains(head_bin, F.lit(b"patent-application-publication"))
-                & F.contains(head_bin, F.lit(b"pap-v1"))
-            ),
-            "uspto",
-        )
-        .when(ext == "ofd", "ofd")
-        .when(
-            (F.substring(magic, 1, 2) == F.lit(b"PK"))
-            & zip_member(b"OFD.xml"),
-            "ofd",
-        )
-        .when(ext == "docx", "docx")
-        .when(ext.isin("xlsx", "xlsm"), "xlsx")
-        .when(ext.isin("pptx", "pptm", "potx"), "pptx")
-        .when(
-            (F.substring(magic, 1, 2) == F.lit(b"PK"))
-            & zip_member(b"word/document.xml"),
-            "docx",
-        )
-        .when(
-            (F.substring(magic, 1, 2) == F.lit(b"PK"))
-            & zip_member(b"xl/workbook.xml"),
-            "xlsx",
-        )
-        .when(
-            (F.substring(magic, 1, 2) == F.lit(b"PK"))
-            & zip_member(b"ppt/presentation.xml"),
-            "pptx",
-        )
-        # gzip magic → mets_gbs candidate (the branch inspects the tar and
-        # gracefully skips non-METS archives, mirroring the reference's
-        # content-inspecting _guess_format, document.py:688-707)
-        .when(F.substring(magic, 1, 2) == F.lit(b"\x1f\x8b"), "mets_gbs")
-        # image magics (reference image_backend routing — such rows get an
-        # explicit needs_ocr status rather than silently skipping)
-        .when(F.substring(magic, 1, 4) == F.lit(b"\x89PNG"), "image")
-        .when(F.substring(magic, 1, 3) == F.lit(b"\xff\xd8\xff"), "image")
-        .when(F.substring(magic, 1, 4) == F.lit(b"GIF8"), "image")
-        .when(F.substring(magic, 1, 4) == F.lit(b"II*\x00"), "image")
-        .when(F.substring(magic, 1, 4) == F.lit(b"MM\x00*"), "image")
-        .when(F.substring(magic, 1, 2) == F.lit(b"BM"), "image")
-        .when(
-            (F.substring(magic, 1, 4) == F.lit(b"RIFF"))
-            & (F.substring(magic, 9, 4) == F.lit(b"WEBP")),
-            "image",
-        )
-        .when(
-            ext.isin("png", "jpg", "jpeg", "gif", "tif", "tiff", "bmp", "webp"),
-            "image",
-        )
-        # audio magics/extensions (reference NoOpBackend → ASR pipeline,
-        # NN and out of contract — explicit status instead of silent skip)
-        .when(
-            (F.substring(magic, 1, 4) == F.lit(b"RIFF"))
-            & (F.substring(magic, 9, 4) == F.lit(b"WAVE")),
-            "audio",
-        )
-        .when(F.substring(magic, 1, 3) == F.lit(b"ID3"), "audio")
-        .when(ext.isin("wav", "mp3", "m4a", "flac", "ogg"), "audio")
-        .when(
-            head.rlike(r'(?s)^\s*\{\s*"schema_name"\s*:\s*"DoclingDocument"'),
-            "docling_json",
-        )
-        .when(head.rlike(r"(?s)^\s*<doctag>"), "doctags")
-        .when(head.rlike(_HTML_SNIFF_RE), "html")
-        .when(_csv_sniff(head, prefix_bytes), "csv")
-        .otherwise("other"),
-    ).drop("_magic", "_head_bin", "_head", "_ext")
-
-
-def _csv_sniff(head, prefix_bytes: int):
+def _csv_sniff(head):
     """Content-level CSV detection on the bounded head window — the JVM
     analog of the reference's _detect_csv (csv.Sniffer over the first 8 KB,
     document.py:659-686): an extensionless blob is CSV when one of the
     common delimiters {, ; TAB |} appears a CONSISTENT number of times
-    (>=1) on each of the first complete lines (>=2 lines required). Runs
-    after the HTML sniff, before the text/plain fallthrough, matching the
-    reference's detection order (document.py:540-542)."""
+    (>=1) on each of the first complete lines (>=2 lines required)."""
     lines_all = F.split(head, r"\r\n|\r|\n")
     # the head window may have truncated the blob mid-line: drop the final
     # (possibly partial) line in that case so counts are never skewed
     n_complete = F.when(
-        F.length(F.col("html")) > prefix_bytes, F.size(lines_all) - 1
+        F.length(F.col("html")) > PREFIX_BYTES, F.size(lines_all) - 1
     ).otherwise(F.size(lines_all))
     nonempty = F.filter(
         F.slice(lines_all, F.lit(1), n_complete),
@@ -240,12 +212,51 @@ def _csv_sniff(head, prefix_bytes: int):
             & (F.element_at(counts, 1) >= 1)
         )
 
-    return (
-        consistent(",")
-        | consistent(";")
-        | consistent("\t")
-        | consistent(r"\|")
+    return reduce(or_, map(consistent, (",", ";", "\t", r"\|")))
+
+
+def _py_atom(atom, raw: bytes, ext: str, head: str) -> bool:
+    """_jvm_atom's twin. Regexes run with re.ASCII because Java's \\s and
+    (?i) are ASCII-only."""
+    kind, *args = atom
+    if kind == "magic":
+        sig, at = (*args, 0)[:2]
+        return raw[at:at + len(sig)] == sig
+    if kind == "ext":
+        return ext in args
+    if kind == "marker":
+        return args[0] in raw[:PREFIX_BYTES]
+    if kind == "zip":
+        return raw[:2] == b"PK" and (
+            args[0] in raw[:ZIP_PROBE_BYTES] or args[0] in raw[-ZIP_PROBE_BYTES:]
+        )
+    if kind == "regex":
+        return re.search(args[0], head, re.ASCII) is not None
+    lines = re.split(r"\r\n|\r|\n", head)
+    if len(raw) > PREFIX_BYTES:
+        lines = lines[:-1]
+    sample = [line for line in lines if line][:5]
+    return len(sample) >= 2 and any(
+        len({line.count(d) for line in sample}) == 1 and sample[0].count(d) >= 1
+        for d in ",;\t|"
     )
+
+
+def sniff_content_type(name: Optional[str], raw: Optional[bytes]) -> str:
+    """with_content_type for one file: the same DISPATCH_RULES over the
+    same windows, so a file gets the type its row gets in the job
+    (``name`` plays the row's url)."""
+    raw = bytes(raw or b"")
+    m = re.search(_EXT_RE, name or "", re.ASCII)
+    ext = m.group(1).lower() if m else ""
+    head = raw[:PREFIX_BYTES].decode("utf-8", "replace")
+    for rule in DISPATCH_RULES:
+        if any(
+            all(_py_atom(a, raw, ext, head) for a in alt)
+            for alt in _alternatives(rule)
+        ):
+            return rule[0]
+    return "other"
 
 
 def dedup_latest_crawl(df: DataFrame) -> DataFrame:

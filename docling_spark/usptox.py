@@ -843,22 +843,6 @@ def select_parser(content: str):
     return None
 
 
-def looks_like_uspto(raw: bytes) -> bool:
-    head = raw[:4096].decode("utf-8", "replace")
-    if head.startswith("PATN\n") or head.startswith("PATN\r\n"):
-        return True
-    low = head.lower()
-    return "<!doctype" in low and any(
-        k in low
-        for k in (
-            "us-patent-application-v4",
-            "us-patent-grant-v4",
-            "us-grant-025",
-            "pap-v1",
-        )
-    )
-
-
 def extract_uspto(raw: bytes, name: str = "file") -> SpanDoc:
     content = raw.decode("utf-8")
     parser = select_parser(content)

@@ -6,9 +6,10 @@ The reference ships a Flask app (POST /api/upload → task id, GET
 /api/supported-formats, /api/tasks — /root/reference/web_demo.py:255-491)
 wrapping `DocumentConverter.convert()`. This module keeps the SAME route
 shape and output formats (md / text / itxt / json / doctags) but routes
-through :func:`docling_spark.job._extract_one` — the exact per-document
-core the Spark job runs — so the demo, the CLI and the cluster job share
-one conversion path. No Flask/CORS/yaml dependencies: `http.server` +
+through :func:`docling_spark.job.sniff_content_type` and
+:func:`docling_spark.job._extract_one` — the format rule table and the
+per-document core the Spark job runs — so the demo, the CLI and the
+cluster job share one conversion path. No Flask/CORS/yaml dependencies: `http.server` +
 a minimal multipart reader (this sandbox installs nothing).
 
 Run: ``python -m docling_spark.web_demo [port]`` then POST a file to
@@ -24,87 +25,19 @@ import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-SUPPORTED_INPUTS = [
-    "html", "pdf", "docx", "xlsx", "pptx", "md", "asciidoc", "csv", "vtt",
-    "jats", "uspto", "ofd", "doctags", "docling_json", "mets_gbs", "image",
-    "audio", "warc-less-single-doc",
-]
+from .job import CONTENT_TYPES, _extract_one, sniff_content_type
+
+SUPPORTED_INPUTS = list(CONTENT_TYPES)
 OUTPUT_FORMATS = ["md", "text", "itxt", "json", "doctags"]
 
 _TASKS: dict[str, dict] = {}
 _LOCK = threading.Lock()
 
 
-def sniff_format(filename: str, raw: bytes) -> str:
-    """Python mirror of the job's JVM dispatch chain (job.with_content_type)
-    for the single-file path — magic bytes first, then extension, then
-    content sniffing, same order as the reference _guess_format."""
-    suf = ("." + filename.rsplit(".", 1)[-1].lower()) if "." in filename else ""
-    head = raw[:8192]
-    if raw[:5] == b"%PDF-" or suf == ".pdf":
-        return "pdf"
-    if suf in (".html", ".htm", ".xhtml"):
-        return "html"
-    if suf == ".csv":
-        return "csv"
-    if raw[:6] == b"WEBVTT" or suf == ".vtt":
-        return "vtt"
-    if suf in (".md", ".markdown"):
-        return "md"
-    if suf in (".adoc", ".asciidoc", ".asc"):
-        return "asciidoc"
-    if b"JATS-journalpublishing" in head or b"JATS-archive" in head or suf == ".nxml":
-        return "jats"
-    from .usptox import looks_like_uspto
-
-    if looks_like_uspto(raw):
-        return "uspto"
-    if suf == ".ofd" or (raw[:2] == b"PK" and b"OFD.xml" in raw[:65536]):
-        return "ofd"
-    if suf == ".docx" or (raw[:2] == b"PK" and b"word/document.xml" in raw[:65536]):
-        return "docx"
-    if suf in (".xlsx", ".xlsm") or (
-        raw[:2] == b"PK" and b"xl/workbook.xml" in raw[:65536]
-    ):
-        return "xlsx"
-    if suf in (".pptx", ".pptm", ".potx") or (
-        raw[:2] == b"PK" and b"ppt/presentation.xml" in raw[:65536]
-    ):
-        return "pptx"
-    if raw[:2] == b"\x1f\x8b":
-        return "mets_gbs"
-    for magic, fmt in (
-        (b"\x89PNG", "image"), (b"\xff\xd8\xff", "image"), (b"GIF8", "image"),
-        (b"II*\x00", "image"), (b"MM\x00*", "image"), (b"BM", "image"),
-        (b"ID3", "audio"),
-    ):
-        if raw.startswith(magic):
-            return fmt
-    if raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
-        return "image"
-    if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
-        return "audio"
-    try:
-        text_head = head.decode("utf-8", "replace").lstrip().lower()
-    except Exception:  # pragma: no cover - decode with replace cannot raise
-        text_head = ""
-    if text_head.startswith('{"schema_name": "doclingdocument"') or (
-        text_head.startswith("{") and '"schema_name"' in text_head
-    ):
-        return "docling_json"
-    if text_head.startswith("<doctag>"):
-        return "doctags"
-    if text_head.startswith(("<!doctype html", "<html", "<head", "<body")):
-        return "html"
-    return "html"  # the reference also falls through to HTML for web text
-
-
 def convert_bytes(filename: str, raw: bytes) -> dict:
     """One document through the job's per-document core; returns the task
     record (status, error, outputs per format)."""
-    from .job import _extract_one
-
-    fmt = sniff_format(filename, raw)
+    fmt = sniff_content_type(filename, raw)
     res = _extract_one(
         filename, raw, fmt, "none", 60.0, with_doc_json=True, with_doctags=True
     )

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from docling_spark.job import extract_pages, with_content_type
+from docling_spark.job import extract_pages, sniff_content_type, with_content_type
 from docling_spark.ops.corpus import synth_pages, synth_pages_pdf
 from docling_spark.schema import PAGES_SCHEMA
 
@@ -76,8 +76,9 @@ def test_sniff_prefers_magic_over_extension(spark):
     pdf_named_html = synth_pages_pdf(spark, SF).limit(1).withColumn(
         "url", F.lit("https://t/lies.html")
     )
-    ct = with_content_type(pdf_named_html).select("content_type").first()[0]
-    assert ct == "pdf"  # %PDF- magic wins over .html extension
+    row = with_content_type(pdf_named_html).select("html", "content_type").first()
+    assert row.content_type == "pdf"  # %PDF- magic wins over .html extension
+    assert sniff_content_type("https://t/lies.html", row.html) == "pdf"
 
 
 def test_convert_cli(tmp_path):
@@ -102,10 +103,14 @@ def test_convert_cli(tmp_path):
 
 # ---------------------------------------------- round-4 dispatch hygiene
 def _ct(spark, rows):
+    """JVM dispatch column per url; asserts the Python sniffer agrees."""
     out = with_content_type(_mk_pages(spark, rows)).select(
         "url", "content_type"
     ).collect()
-    return {r.url: r.content_type for r in out}
+    got = {r.url: r.content_type for r in out}
+    for url, blob in rows:
+        assert sniff_content_type(url, blob) == got[url], url
+    return got
 
 
 def test_sniff_probes_are_prefix_bounded(spark):
@@ -187,6 +192,145 @@ def test_html_sniff_wins_over_csv(spark):
     blob = b"<html><body><table><tr><td>a,b\nc,d</td></tr></table></body></html>"
     ct = _ct(spark, [("https://t/page", blob)])
     assert ct["https://t/page"] == "html"
+
+
+# ------------------------------------- one rule table, two compilers
+def _zip(member: bytes, pad: int = 0) -> bytes:
+    return b"PK\x03\x04" + b"\x00" * pad + member + b"\x00" * 16
+
+
+# (url, blob, content type); None = agreement only (seeded random rows)
+DISPATCH_CASES = [
+    ("https://t/a.html", b"plain words", "html"),
+    ("https://t/a.HTM?q=1#top", b"", "html"),
+    ("https://t/a.xhtml#frag", b"\x00\x01", "html"),
+    ("https://t/dir.html/", b"plain words", "other"),
+    ("https://t/a.pdf", b"<html><body>x</body></html>", "pdf"),
+    ("https://t/magic", b"%PDF-1.7\n", "pdf"),
+    ("https://t/short", b"%PDF", "other"),
+    ("https://t/a.csv", b"no delimiters here", "csv"),
+    ("https://t/cues", b"WEBVTT\n\n00:00.000 --> 00:01.000\nhi\n", "vtt"),
+    ("https://t/cues.html", b"WEBVTT\n\n00:00.000 --> 00:01.000\nhi\n", "html"),
+    ("https://t/a.vtt", b"not a cue file", "vtt"),
+    ("https://t/a.md", b"# t", "md"),
+    ("https://t/a.markdown", b"# t", "md"),
+    ("https://t/a.adoc", b"= t", "asciidoc"),
+    ("https://t/a.asciidoc", b"= t", "asciidoc"),
+    ("https://t/a.asc", b"= t", "asciidoc"),
+    ("https://t/art", b'<!DOCTYPE article PUBLIC "JATS-archive">', "jats"),
+    ("https://t/art.xml", b"<!DOCTYPE article JATS-journalpublishing>", "jats"),
+    ("https://t/art.nxml", b"<article><body/></article>", "jats"),
+    ("https://t/art.html", b"<!DOCTYPE article JATS-archive>", "html"),
+    ("https://t/aps.txt", b"PATN\r\nWKU  01\n", "uspto"),
+    ("https://t/ice.xml", b"<!DOCTYPE x us-patent-application-v44>", "uspto"),
+    ("https://t/grant.xml", b"<!DOCTYPE x us-patent-grant-v45>", "uspto"),
+    ("https://t/g25", b"<!DOCTYPE x us-grant-025>", "uspto"),
+    ("https://t/G25", b"<!DOCTYPE x US-Grant-025>", "uspto"),
+    ("https://t/pap", b"patent-application-publication pap-v16", "uspto"),
+    ("https://t/pap-only", b"<!DOCTYPE x pap-v16>", "other"),
+    ("https://t/a.ofd", b"x", "ofd"),
+    ("https://t/ofd", _zip(b"OFD.xml"), "ofd"),
+    ("https://t/a.docx", b"x", "docx"),
+    ("https://t/a.xlsm", b"x", "xlsx"),
+    ("https://t/a.potx", b"x", "pptx"),
+    ("https://t/w", _zip(b"word/document.xml"), "docx"),
+    ("https://t/x", _zip(b"xl/workbook.xml"), "xlsx"),
+    ("https://t/p", _zip(b"ppt/presentation.xml"), "pptx"),
+    ("https://t/w-tail", _zip(b"word/document.xml", pad=70_000), "docx"),
+    ("https://t/w-mid", _zip(b"word/document.xml", pad=70_000) + b"\x00" * 70_000,
+     "other"),
+    ("https://t/no-pk", b"word/document.xml", "other"),
+    ("https://t/a.tar.gz", b"\x1f\x8b\x08\x00", "mets_gbs"),
+    ("https://t/png", b"\x89PNG\r\n\x1a\n", "image"),
+    ("https://t/jpg", b"\xff\xd8\xff\xe0", "image"),
+    ("https://t/gif", b"GIF89a", "image"),
+    ("https://t/tif-le", b"II*\x00", "image"),
+    ("https://t/tif-be", b"MM\x00*", "image"),
+    ("https://t/bmp", b"BM\x00\x00", "image"),
+    ("https://t/webp", b"RIFF\x00\x00\x00\x00WEBPVP8 ", "image"),
+    ("https://t/a.JPEG", b"x", "image"),
+    ("https://t/wav", b"RIFF\x00\x00\x00\x00WAVEfmt ", "audio"),
+    ("https://t/mp3", b"ID3\x04", "audio"),
+    ("https://t/a.flac", b"x", "audio"),
+    ("https://t/doc.json", b' \n{ "schema_name" : "DoclingDocument"}', "docling_json"),
+    ("https://t/other.json", b'{"schema_name": "Other"}', "other"),
+    ("https://t/dt", b"\n <doctag><text>x</text></doctag>", "doctags"),
+    ("https://t/DT", b"<DOCTAG><text>x</text></DOCTAG>", "other"),
+    ("https://t/h1", b"<!-- a -->\n<!-- b --><!DOCTYPE HTML><p>x", "html"),
+    ("https://t/h2", b"<script>var a = 1;</script>\n<html>", "html"),
+    ("https://t/h3", b"  \t<HEAD><title>t</title>", "html"),
+    ("https://t/h4", b"<body>x</body>", "html"),
+    # Java's \s and (?i) are ASCII-only: BOM, NBSP and the long s do not
+    # match, so none of these is html (nor csv)
+    ("https://t/bom", b"\xef\xbb\xbf<html><body>x</body></html>", "other"),
+    ("https://t/nbsp", b"\xc2\xa0<html><body>x</body></html>", "other"),
+    ("https://t/long-s", "<ſcript>x</ſcript><html>".encode(), "other"),
+    ("https://t/c1", b"a,b,c\n1,2,3\n", "csv"),
+    ("https://t/c2", b"x;y\r\n1;2\r\n", "csv"),
+    ("https://t/c3", b"p|q\r1|2\r", "csv"),
+    ("https://t/c4", b"k\tv\n\n1\t2\n", "csv"),
+    ("https://t/c5", b"a,b\n\xff\xfe,c\n", "csv"),
+    ("https://t/c6", b"a,b\nc,d\n" + b"x" * 9000, "csv"),  # partial line dropped
+    ("https://t/c7", b"a,b\nc,d\n" + b"x" * 100, "other"),
+    ("https://t/c8", b"a,b\n" * 3000, "csv"),
+    ("https://t/prose", b"Hello, world, again\nsecond line here\n", "other"),
+    ("https://t/txt.txt", b"just text\n", "other"),
+    ("https://t/empty", b"", "other"),
+    ("https://t/null.html", None, "html"),
+    ("https://t/null", None, "other"),
+    ("https://t/deep", b"A" * 9000 + b"JATS-archive", "other"),
+    ("https://t/bin", bytes(range(256)) * 8, "other"),
+]
+
+
+def _random_cases(n: int = 200, seed: int = 7):
+    """Seeded blobs built from the atoms the rules test for (magics,
+    markers, html/json/doctags heads, delimiter lines) plus random bytes,
+    under urls with and without known extensions."""
+    import random
+
+    rng = random.Random(seed)
+    heads = [b"", b"%PDF-", b"WEBVTT", b"PK\x03\x04", b"\x1f\x8b", b"\x89PNG",
+             b"RIFF1234WEBP", b"RIFF1234WAVE", b"ID3", b"BM", b"PATN\n",
+             b"<!DOCTYPE us-grant-025>", b"JATS-archive", b" <html>",
+             b"<!--x-->", b'{"schema_name":"DoclingDocument"', b"<doctag>",
+             b"a,b\n", b"a;b\r\n", b"a|b\r", b"a\tb\n", b"\xef\xbb\xbf"]
+    tails = [b"word/document.xml", b"OFD.xml", b"xl/workbook.xml", b"\n", b",",
+             b"\r\n", b"|", b"\t", b";", b"<body>", b"\xff", b" "]
+    exts = ["", ".html", ".pdf", ".csv", ".vtt", ".md", ".docx", ".ofd", ".png",
+            ".wav", ".nxml", ".txt", ".bin", ".Html", ".CSV?x=1"]
+    cases = []
+    for i in range(n):
+        blob = rng.choice(heads)
+        for _ in range(rng.randrange(0, 12)):
+            blob += rng.choice(tails) if rng.random() < 0.5 else bytes(
+                rng.randrange(256) for _ in range(rng.randrange(1, 8))
+            )
+        cases.append((f"https://r/{i}{rng.choice(exts)}", blob, None))
+    return cases
+
+
+ALL_DISPATCH_CASES = DISPATCH_CASES + _random_cases()
+
+
+@pytest.fixture(scope="module")
+def jvm_content_types(spark):
+    return dict(
+        with_content_type(
+            _mk_pages(spark, [(u, b) for u, b, _ in ALL_DISPATCH_CASES])
+        ).select("url", "content_type").collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "url,blob,want", ALL_DISPATCH_CASES, ids=[c[0] for c in ALL_DISPATCH_CASES]
+)
+def test_python_sniffer_agrees_with_jvm_dispatch(jvm_content_types, url, blob, want):
+    """job.sniff_content_type (CLI, web demo) and the job's JVM column are
+    compiled from one rule table and must agree on every row."""
+    assert sniff_content_type(url, blob) == jvm_content_types[url]
+    if want is not None:
+        assert jvm_content_types[url] == want
 
 
 # ------------------------------------------------- giant-blob skew defense

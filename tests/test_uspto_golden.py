@@ -18,7 +18,8 @@ import pytest
 
 from docling_spark.serialize import to_itxt, to_markdown
 from docling_spark.serialize_json import to_docling_dict
-from docling_spark.usptox import extract_uspto, looks_like_uspto
+from docling_spark.job import sniff_content_type
+from docling_spark.usptox import extract_uspto
 
 DATA = Path("/root/reference/tests/data/uspto")
 GT = DATA.parent / "groundtruth" / "docling_v2"
@@ -56,9 +57,9 @@ def test_uspto_json_golden(path: Path):
 
 def test_uspto_sniff():
     for p in FIXTURES:
-        assert looks_like_uspto(p.read_bytes()), p.name
-    assert not looks_like_uspto(b"<html><body>x</body></html>")
-    assert not looks_like_uspto(b"random text")
+        assert sniff_content_type(p.name, p.read_bytes()) == "uspto", p.name
+    assert sniff_content_type("x", b"<html><body>x</body></html>") != "uspto"
+    assert sniff_content_type("x", b"random text") != "uspto"
 
 
 def test_uspto_spark_dispatch():

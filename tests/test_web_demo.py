@@ -9,7 +9,8 @@ import urllib.request
 import pytest
 
 from docling_spark.ops.corpus import synth_pdf_bytes
-from docling_spark.web_demo import make_server, sniff_format
+from docling_spark.job import sniff_content_type
+from docling_spark.web_demo import make_server
 
 HTML = (
     b"<html><head><title>T</title></head><body><h1>Demo</h1>"
@@ -108,9 +109,9 @@ def test_corrupt_upload_contained(base_url):
 
 
 def test_sniffer_matches_job_dispatch_family():
-    assert sniff_format("a.pdf", b"%PDF-1.4") == "pdf"
-    assert sniff_format("x", b"WEBVTT\n") == "vtt"
-    assert sniff_format("x", b"\x89PNG1234") == "image"
-    assert sniff_format("x", b"RIFF0000WAVE") == "audio"
-    assert sniff_format("x", b"<!doctype html><html>") == "html"
-    assert sniff_format("x", b'{"schema_name": "DoclingDocument"}') == "docling_json"
+    assert sniff_content_type("a.pdf", b"%PDF-1.4") == "pdf"
+    assert sniff_content_type("x", b"WEBVTT\n") == "vtt"
+    assert sniff_content_type("x", b"\x89PNG1234") == "image"
+    assert sniff_content_type("x", b"RIFF0000WAVE") == "audio"
+    assert sniff_content_type("x", b"<!doctype html><html>") == "html"
+    assert sniff_content_type("x", b'{"schema_name": "DoclingDocument"}') == "docling_json"
