@@ -1961,13 +1961,17 @@ def q_lang_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "rate", "weight")
 
 
-def q_curate_web(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed RefinedWeb-shaped pipeline in ONE plan: URL gate
-    (blocklist + keyword/spam/depth) → Gopher repetition/quality gate →
-    LM perplexity bucket, with stage-prefixed first-failing reasons.
-    Per-stage verdicts are slim (doc_id, reason) frames joined on the
-    key — at scale three co-partitioned exchanges of verdict rows, never
-    a second pass over the text."""
+def _curate_stages(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The per-stage curation verdicts that curate_web and gate_ablation
+    both read, as slim frames keyed on doc_id: the URL gate (blocklist +
+    keyword/spam/depth) ``(doc_id, url_reason)``, the Gopher
+    repetition/quality gate ``(doc_id, gopher_reason)`` and the LM
+    perplexity bucket ``(doc_id, bucket)``. Each query joins them on the
+    key — at scale three co-partitioned exchanges of verdict rows, never a
+    second pass over the text. The oracle mirror is
+    ``_curate_stage_ctes``."""
     from docling_spark.ops import lm_quality as lmq
     from docling_spark.ops import urlfilter
     from docling_spark.ops.webtext import (
@@ -1989,7 +1993,13 @@ def q_curate_web(spark: SparkSession, sf_dir: str) -> DataFrame:
     lb = lmq.lm_score(wt, lm, text_col="wtext", head=3.3, tail=9.0).select(
         "doc_id", "bucket"
     )
-    out = uf.join(gq, "doc_id").join(lb, "doc_id")
+    return uf, gq, lb
+
+
+def q_curate_web(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The composed RefinedWeb-shaped pipeline in ONE plan: URL gate →
+    Gopher gate → LM perplexity bucket (``_curate_stages``), with
+    stage-prefixed first-failing reasons."""
     reason = (
         F.when(F.col("url_reason") != "keep", F.concat(F.lit("url:"), "url_reason"))
         .when(
@@ -1999,7 +2009,8 @@ def q_curate_web(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("bucket") == "tail", "lm_tail")
         .otherwise("keep")
     )
-    return out.select(
+    uf, gq, lb = _curate_stages(spark, sf_dir)
+    return uf.join(gq, "doc_id").join(lb, "doc_id").select(
         "doc_id", reason.alias("reason"), (reason == "keep").alias("keep")
     )
 
@@ -2009,32 +2020,18 @@ def q_gate_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     each gate rejects, and how many it UNIQUELY rejects (the docs only
     it catches) — the table a curation team reads before removing or
     re-tuning a gate; first-failing reasons cannot answer it, so the
-    independent stage verdicts are aggregated directly. One agg row
-    exploded into one row per gate; stage frames are the same slim
-    verdict joins as curate_web."""
-    from docling_spark.ops import lm_quality as lmq
-    from docling_spark.ops import urlfilter
-    from docling_spark.ops.webtext import (
-        gopher_filter,
-        repetition_signals,
-        synth_webtext,
+    independent stage verdicts of ``_curate_stages`` are aggregated
+    directly. One agg row exploded into one row per gate; each verdict is
+    reduced to a boolean before the join, so only flags are shuffled."""
+    uf, gq, lb = _curate_stages(spark, sf_dir)
+    j = (
+        uf.select("doc_id", (F.col("url_reason") != "keep").alias("r_url"))
+        .join(
+            gq.select("doc_id", (F.col("gopher_reason") != "keep").alias("r_gopher")),
+            "doc_id",
+        )
+        .join(lb.select("doc_id", (F.col("bucket") == "tail").alias("r_lm")), "doc_id")
     )
-
-    wt = synth_webtext(spark, sf_dir)
-    gq = gopher_filter(repetition_signals(wt)).select(
-        "doc_id", (F.col("reject_reason") != "keep").alias("r_gopher")
-    )
-    uf = urlfilter.url_filter(
-        urlfilter.synth_urls(wt.select("doc_id")),
-        urlfilter.blocked_domains(spark),
-    ).select("doc_id", (F.col("reason") != "keep").alias("r_url"))
-    lm = lmq.train_unigram_lm(
-        wt.filter(F.col("doc_id") < 300), text_col="wtext"
-    )
-    lb = lmq.lm_score(wt, lm, text_col="wtext", head=3.3, tail=9.0).select(
-        "doc_id", (F.col("bucket") == "tail").alias("r_lm")
-    )
-    j = uf.join(gq, "doc_id").join(lb, "doc_id")
     i = lambda c: c.cast("int")
     agg = j.agg(
         F.count("*").alias("n_docs"),

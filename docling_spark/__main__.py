@@ -35,6 +35,15 @@ def convert_main(argv: list[str]) -> int:
             )
         return names
 
+    def page_range(value: str) -> tuple[int, int]:
+        a, _, b = value.partition("-")
+        try:
+            return int(a), int(b or a)
+        except ValueError:
+            raise argparse.ArgumentTypeError(
+                f"invalid page range {value!r}; expected A-B or A"
+            ) from None
+
     p = argparse.ArgumentParser(prog="docling_spark convert")
     p.add_argument("sources", nargs="+", help="input files of any supported format")
     p.add_argument(
@@ -50,7 +59,8 @@ def convert_main(argv: list[str]) -> int:
     )
     p.add_argument(
         "--page-range",
-        default=None,
+        type=page_range,
+        default=(1, 2**31 - 1),
         metavar="A-B",
         help="1-based inclusive PDF page range (reference --page-range)",
     )
@@ -79,10 +89,6 @@ def convert_main(argv: list[str]) -> int:
         "others are skipped",
     )
     args = p.parse_args(argv)
-    page_range = (1, 2**31 - 1)
-    if args.page_range:
-        a, _, b = args.page_range.partition("-")
-        page_range = (int(a), int(b or a))
 
     from pathlib import Path
 
@@ -117,7 +123,7 @@ def convert_main(argv: list[str]) -> int:
                 res = extract_pdf_text(
                     raw,
                     password=args.pdf_password,
-                    page_range=page_range,
+                    page_range=args.page_range,
                     max_num_pages=args.max_num_pages,
                 )
                 if res.status == "failure":

@@ -30,8 +30,8 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from docling_spark.ops.corpus import read_docs
 from docling_spark.ops.imagededup import dhash_near_dups as banded_hamming_pairs
 
 N_FRAMES = 65  # 64 energy comparisons = 64 bits
@@ -107,10 +107,7 @@ def _aud_law_params(base: int) -> tuple[int, int, int, int]:
 
 
 def synth_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:
-        docs = docs.repartition(par, "doc_id")
+    docs = read_docs(spark, sf_dir, "doc_id")
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np

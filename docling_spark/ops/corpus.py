@@ -1,38 +1,125 @@
 """Deterministic Common-Crawl-shaped corpus synthesis.
 
 Builds the ``(url, warc_ts, html, text, lang)`` pages table (BASELINE.json
-``input_hint``) from the driver-provided ``documents`` parquet — entirely with
-JVM-side expressions so synthesis never bottlenecks the bench. The HTML
-template is simple enough that the expected extraction output is expressible
-in ANSI SQL (giving the whole UDF path a DuckDB value oracle) yet exercises
-headings, paragraphs, lists and tables.
+``input_hint``) from the driver-provided ``documents`` parquet. The row law
+lives in three helpers: ``read_docs`` (the scan and its one-partition-per-core
+widening), ``_jvm_pages`` (text formats, built with JVM-side expressions so
+synthesis never bottlenecks the bench) and ``_blob_pages`` (binary formats,
+one Arrow-batched mapInPandas builder). The HTML template is simple enough
+that the expected extraction output is expressible in ANSI SQL (giving the
+whole UDF path a DuckDB value oracle) yet exercises headings, paragraphs,
+lists and tables.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+PAGES_SCHEMA = (
+    "url string, warc_ts timestamp, html binary, text string, lang string"
+)
+
+
+# ------------------------------------------------------------ the row law
+def read_docs(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """documents.parquet, projected to ``cols`` when given, widened to one
+    partition per core when the scan has fewer files than cores.
+
+    Widening happens on the small source rows, BEFORE any blob build or
+    explode: the shuffle moves only those rows, and every downstream stage
+    inherits the parallel partitioning (extract_pages' auto repartition then
+    skips its blob shuffle). Width = exactly one partition per core (NOT
+    par*4): every extra Python-stage wave pays a measured ~150 ms fixed
+    mapInPandas round-trip latency per task, and the synthetic corpus is
+    uniform so over-decomposition buys no balance (at 100 TB the scan's file
+    splits set the width and each task amortizes the fixed cost over
+    100+ MB anyway)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    if cols:
+        docs = docs.select(*cols)
+    par = spark.sparkContext.defaultParallelism
+    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
+        docs = docs.repartition(par, F.col("doc_id"))
+    return docs
+
+
+def _did() -> Column:
+    return F.col("doc_id").cast("string")
+
+
+def _id2() -> Column:
+    """The two-digit table key ``doc_id % 100`` (k07 / v07)."""
+    return F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0")
+
+
+def _word(k: int) -> Column:
+    return F.split_part(F.col("text"), F.lit(" "), F.lit(k))
+
+
+def _doc_url(*tail: Column | str) -> Column:
+    """``https://synth.test/doc/{doc_id}`` followed by ``tail``."""
+    return F.concat(
+        F.lit("https://synth.test/doc/"), _did(),
+        *(F.lit(t) if isinstance(t, str) else t for t in tail),
+    )
+
+
+def _jvm_pages(docs: DataFrame, url: Column, body: Column) -> DataFrame:
+    """The pages row from a url and a string body, built in the JVM:
+    ``warc_ts`` = 2024-01-01 + doc_id seconds, ``html`` = UTF-8 body."""
+    return docs.select(
+        url.alias("url"),
+        (
+            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
+            + F.make_interval(secs=F.col("doc_id").cast("double"))
+        ).alias("warc_ts"),
+        F.encode(body, "UTF-8").alias("html"),
+        F.col("text").alias("text"),
+        F.col("lang").alias("lang"),
+    )
+
+
+def _blob_pages(
+    spark: SparkSession, sf_dir: str, url: str, build: Callable[[int, str], bytes]
+) -> DataFrame:
+    """The pages row with a Python-built blob ``build(doc_id, text)`` and
+    the url ``url.format(doc_id)``; same law as ``_jvm_pages``.
+
+    Blob assembly is bytes-in-Python, so it runs as a vectorized Arrow batch
+    (mapInPandas) — never per-row ``udf()``."""
+    import pandas as pd
+
+    def gen(batches):
+        for b in batches:
+            yield pd.DataFrame(
+                {
+                    "url": [url.format(i) for i in b["doc_id"]],
+                    "warc_ts": pd.Timestamp("2024-01-01")
+                    + pd.to_timedelta(b["doc_id"], unit="s"),
+                    "html": [
+                        build(int(i), t)
+                        for i, t in zip(b["doc_id"], b["text"])
+                    ],
+                    "text": b["text"],
+                    "lang": b["lang"],
+                }
+            )
+
+    return read_docs(spark, sf_dir, "doc_id", "text", "lang").mapInPandas(
+        gen, schema=PAGES_SCHEMA
+    )
 
 
 def synth_pages(
     spark: SparkSession, sf_dir: str, variants: int = 1
 ) -> DataFrame:
     """documents.parquet → deterministic pages table (xN url variants)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # spread synthesis across cores BEFORE the explode and the (big) html
-    # string build: the shuffle moves only the small source rows, and every
-    # downstream stage inherits the parallel partitioning (extract_pages'
-    # auto repartition then skips its blob shuffle). Keeping the explode
-    # upstream of the shuffle would serialize variant fan-out in one task.
-    # Width = exactly one partition per core (NOT par*4): every extra
-    # Python-stage wave pays a measured ~150 ms fixed mapInPandas
-    # round-trip latency per task, and the synthetic corpus is uniform so
-    # over-decomposition buys no balance (at 100 TB the scan's file
-    # splits set the width and each task amortizes the fixed cost over
-    # 100+ MB anyway).
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    # the variant explode runs after the widening shuffle: upstream of it,
+    # variant fan-out would serialize in one task
+    docs = read_docs(spark, sf_dir)
     if variants > 1:
         docs = docs.withColumn(
             "_v", F.explode(F.sequence(F.lit(0), F.lit(variants - 1)))
@@ -40,55 +127,34 @@ def synth_pages(
     else:
         docs = docs.withColumn("_v", F.lit(0))
 
-    id2 = F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0")
     html_str = F.concat(
-        F.lit("<html><head><title>Doc "),
-        F.col("doc_id").cast("string"),
-        F.lit("</title></head><body>\n<h1>Document "),
-        F.col("doc_id").cast("string"),
-        F.lit("</h1>\n<p>"),
-        F.col("text"),
-        F.lit("</p>\n<ul><li>"),
-        F.split_part(F.col("text"), F.lit(" "), F.lit(1)),
-        F.lit("</li><li>"),
-        F.split_part(F.col("text"), F.lit(" "), F.lit(2)),
-        F.lit("</li><li>"),
-        F.split_part(F.col("text"), F.lit(" "), F.lit(3)),
+        F.lit("<html><head><title>Doc "), _did(),
+        F.lit("</title></head><body>\n<h1>Document "), _did(),
+        F.lit("</h1>\n<p>"), F.col("text"),
+        F.lit("</p>\n<ul><li>"), _word(1),
+        F.lit("</li><li>"), _word(2),
+        F.lit("</li><li>"), _word(3),
         F.lit("</li></ul>\n<table><tr><th>K</th><th>V</th></tr><tr><td>k"),
-        id2,
-        F.lit("</td><td>v"),
-        id2,
+        _id2(),
+        F.lit("</td><td>v"), _id2(),
         F.lit("</td></tr></table>\n</body></html>"),
     )
-    return docs.select(
-        F.concat(
-            F.lit("https://synth.test/doc/"),
-            F.col("doc_id").cast("string"),
-            F.when(F.col("_v") > 0, F.concat(F.lit("-v"), F.col("_v").cast("string"))).otherwise(F.lit("")),
-            F.lit(".html"),
-        ).alias("url"),
-        (
-            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-            + F.make_interval(secs=F.col("doc_id").cast("double"))
-        ).alias("warc_ts"),
-        F.encode(html_str, "UTF-8").alias("html"),
-        F.col("text").alias("text"),
-        F.col("lang").alias("lang"),
-    )
+    variant = F.when(
+        F.col("_v") > 0, F.concat(F.lit("-v"), F.col("_v").cast("string"))
+    ).otherwise(F.lit(""))
+    return _jvm_pages(docs, _doc_url(variant, ".html"), html_str)
 
 
 # ----------------------------------------------------------- synthetic PDFs
-def synth_pdf_bytes(doc_id: int, text: str) -> bytes:
-    """Deterministic one-page digital-born PDF whose extracted text is exactly
-    ``Document {doc_id}\\n\\n{text}`` under the pdfx layout path (title block,
-    then one paragraph of wrapped lines). Classic xref, Helvetica, ASCII."""
+def _pdf_esc(s: str) -> str:
+    return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
 
-    def esc(s: str) -> str:
-        return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
 
+def _wrap60(words: list[str]) -> list[str]:
+    """Greedy line wrap at 60 chars (the synth PDF / OFD body paragraph)."""
     lines: list[str] = []
     cur: list[str] = []
-    for w in text.split(" "):
+    for w in words:
         if cur and len(" ".join(cur + [w])) > 60:
             lines.append(" ".join(cur))
             cur = [w]
@@ -96,22 +162,25 @@ def synth_pdf_bytes(doc_id: int, text: str) -> bytes:
             cur.append(w)
     if cur:
         lines.append(" ".join(cur))
+    return lines
 
-    ops = [f"BT /F1 18 Tf 72 720 Td ({esc(f'Document {doc_id}')}) Tj ET"]
-    y = 680
-    for ln in lines:
-        ops.append(f"BT /F1 11 Tf 72 {y} Td ({esc(ln)}) Tj ET")
-        y -= 13
+
+def _pdf_file(ops: list[str], images: Sequence[bytes] = ()) -> bytes:
+    """One-page Helvetica PDF with content stream ``ops`` and a classic
+    xref; image XObject k is object 6 + k, named /Im{k}."""
     content = "\n".join(ops).encode("ascii")
-
+    refs = b" ".join(b"/Im%d %d 0 R" % (k, 6 + k) for k in range(len(images)))
+    xres = b" /XObject << " + refs + b" >>" if images else b""
     objs = [
         b"<< /Type /Catalog /Pages 2 0 R >>",
         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
         b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 4 0 R >> >> /Contents 5 0 R >>",
+        b"/Resources << /Font << /F1 4 0 R >>" + xres
+        + b" >> /Contents 5 0 R >>",
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
         b"/Encoding /WinAnsiEncoding >>",
         b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+        *images,
     ]
     out = bytearray(b"%PDF-1.4\n")
     offsets = []
@@ -129,44 +198,20 @@ def synth_pdf_bytes(doc_id: int, text: str) -> bytes:
     return bytes(out)
 
 
+def synth_pdf_bytes(doc_id: int, text: str) -> bytes:
+    """Deterministic one-page digital-born PDF whose extracted text is exactly
+    ``Document {doc_id}\\n\\n{text}`` under the pdfx layout path (title block,
+    then one paragraph of wrapped lines). Classic xref, Helvetica, ASCII."""
+    ops = [f"BT /F1 18 Tf 72 720 Td ({_pdf_esc(f'Document {doc_id}')}) Tj ET"]
+    for k, ln in enumerate(_wrap60(text.split(" "))):
+        ops.append(f"BT /F1 11 Tf 72 {680 - 13 * k} Td ({_pdf_esc(ln)}) Tj ET")
+    return _pdf_file(ops)
+
+
 def synth_pages_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet → pages table of deterministic PDF blobs.
-
-    Blob assembly is bytes-in-Python, so it runs as a vectorized Arrow batch
-    (mapInPandas) — never per-row ``udf()``."""
-    import pandas as pd
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    # same upstream-widening as synth_pages: shuffle the small source rows so
-    # blob assembly (and extraction downstream) runs on every core without
-    # extract_pages ever needing to reshuffle the built blobs
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
-
-    def build(batches):
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        f"https://synth.test/doc/{i}.pdf" for i in b["doc_id"]
-                    ],
-                    "warc_ts": pd.Timestamp("2024-01-01")
-                    + pd.to_timedelta(b["doc_id"], unit="s"),
-                    "html": [
-                        synth_pdf_bytes(int(i), t)
-                        for i, t in zip(b["doc_id"], b["text"])
-                    ],
-                    "text": b["text"],
-                    "lang": b["lang"],
-                }
-            )
-
-    return docs.mapInPandas(
-        build,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
+    """documents.parquet → pages table of deterministic PDF blobs."""
+    return _blob_pages(
+        spark, sf_dir, "https://synth.test/doc/{}.pdf", synth_pdf_bytes
     )
 
 
@@ -206,45 +251,14 @@ def synth_pdf_images_bytes(doc_id: int) -> bytes:
             f"q {100 + 10 * k} 0 0 {50 + 5 * k} {72 + 20 * k} {100 + 30 * k} cm "
             f"/Im{k} Do Q"
         )
-    content = "\n".join(ops).encode("ascii")
-    xobj_refs = " ".join(
-        f"/Im{k} {6 + k} 0 R" for k in range(n_imgs)
-    ).encode()
-    objs = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 4 0 R >> /XObject << " + xobj_refs
-        + b" >> >> /Contents 5 0 R >>",
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>",
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
-        *img_objs,
-    ]
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs, 1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n%s\nendobj\n" % (i, body)
-    xref_at = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)
+    return _pdf_file(ops, img_objs)
 
 
 def synth_pages_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → PDFs carrying real embedded images."""
     import pandas as pd
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_docs(spark, sf_dir, "doc_id")
 
     def build(batches):
         for b in batches:
@@ -279,36 +293,9 @@ def invoice_text(doc_id: int) -> str:
 def synth_pages_pdf_invoice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → invoice-style PDF blobs (template-engine corpus:
     every field of the invoice is a deterministic function of doc_id)."""
-    import pandas as pd
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:
-        docs = docs.repartition(par, F.col("doc_id"))
-
-    def build(batches):
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        f"https://synth.test/inv/{i}.pdf" for i in b["doc_id"]
-                    ],
-                    "warc_ts": pd.Timestamp("2024-01-01")
-                    + pd.to_timedelta(b["doc_id"], unit="s"),
-                    "html": [
-                        synth_pdf_bytes(int(i), invoice_text(int(i)))
-                        for i in b["doc_id"]
-                    ],
-                    "text": b["text"],
-                    "lang": b["lang"],
-                }
-            )
-
-    return docs.mapInPandas(
-        build,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
+    return _blob_pages(
+        spark, sf_dir, "https://synth.test/inv/{}.pdf",
+        lambda i, _t: synth_pdf_bytes(i, invoice_text(i)),
     )
 
 
@@ -319,39 +306,11 @@ def synth_pages_pdf_encrypted(
     variants of the synthetic PDFs, all locked with ``password``. Extracting
     with the right password must byte-match the plaintext corpus; without it
     every row must fail cleanly."""
-    import pandas as pd
-
     from ..pdfx.crypt import encrypt_pdf_rc4
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
-
-    def build(batches):
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        f"https://synth.test/doc/{i}-enc.pdf"
-                        for i in b["doc_id"]
-                    ],
-                    "warc_ts": pd.Timestamp("2024-01-01")
-                    + pd.to_timedelta(b["doc_id"], unit="s"),
-                    "html": [
-                        encrypt_pdf_rc4(synth_pdf_bytes(int(i), t), password)
-                        for i, t in zip(b["doc_id"], b["text"])
-                    ],
-                    "text": b["text"],
-                    "lang": b["lang"],
-                }
-            )
-
-    return docs.mapInPandas(
-        build,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
+    return _blob_pages(
+        spark, sf_dir, "https://synth.test/doc/{}-enc.pdf",
+        lambda i, t: encrypt_pdf_rc4(synth_pdf_bytes(i, t), password),
     )
 
 
@@ -362,27 +321,12 @@ def synth_pdf_structured_bytes(doc_id: int, text: str) -> bytes:
     list, a 2×2 two-column table (column gap >> line height so the grid
     detector sees separate cells), then the wrapped body paragraph. Every
     block's label/level/parent and text are expressible in ANSI SQL."""
-
-    def esc(s: str) -> str:
-        return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
-
+    esc = _pdf_esc
     words = text.split(" ")
     w1 = words[0] if words else "w"
     w2 = words[1] if len(words) > 1 else w1
     w3 = words[2] if len(words) > 2 else w1
     kv = f"{doc_id % 100:02d}"
-
-    lines: list[str] = []
-    cur: list[str] = []
-    for w in words:
-        if cur and len(" ".join(cur + [w])) > 60:
-            lines.append(" ".join(cur))
-            cur = [w]
-        else:
-            cur.append(w)
-    if cur:
-        lines.append(" ".join(cur))
-
     ops = [
         f"BT /F1 18 Tf 72 720 Td ({esc(f'Document {doc_id}')}) Tj ET",
         f"BT /F1 14 Tf 72 670 Td ({esc(f'Section {w1}')}) Tj ET",
@@ -394,70 +338,16 @@ def synth_pdf_structured_bytes(doc_id: int, text: str) -> bytes:
         f"BT /F1 11 Tf 72 547 Td ({esc('k' + kv)}) Tj ET",
         f"BT /F1 11 Tf 172 547 Td ({esc('v' + kv)}) Tj ET",
     ]
-    y = 500
-    for ln in lines:
-        ops.append(f"BT /F1 11 Tf 72 {y} Td ({esc(ln)}) Tj ET")
-        y -= 13
-    content = "\n".join(ops).encode("ascii")
-
-    objs = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 4 0 R >> >> /Contents 5 0 R >>",
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>",
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
-    ]
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs, 1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n%s\nendobj\n" % (i, body)
-    xref_at = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)
+    for k, ln in enumerate(_wrap60(words)):
+        ops.append(f"BT /F1 11 Tf 72 {500 - 13 * k} Td ({esc(ln)}) Tj ET")
+    return _pdf_file(ops)
 
 
 def synth_pages_pdf_structured(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → pages table of structured PDF blobs."""
-    import pandas as pd
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
-
-    def build(batches):
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        f"https://synth.test/doc/{i}-struct.pdf"
-                        for i in b["doc_id"]
-                    ],
-                    "warc_ts": pd.Timestamp("2024-01-01")
-                    + pd.to_timedelta(b["doc_id"], unit="s"),
-                    "html": [
-                        synth_pdf_structured_bytes(int(i), t)
-                        for i, t in zip(b["doc_id"], b["text"])
-                    ],
-                    "text": b["text"],
-                    "lang": b["lang"],
-                }
-            )
-
-    return docs.mapInPandas(
-        build,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
+    return _blob_pages(
+        spark, sf_dir, "https://synth.test/doc/{}-struct.pdf",
+        synth_pdf_structured_bytes,
     )
 
 
@@ -467,41 +357,18 @@ def synth_pages_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     deeper than 2 parent hops: the innermost list item is 6 links from its
     section_header, so the chunker's bounded ancestor walk (not a fixed
     2-hop lookup) is required to resolve its heading."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
-    w = lambda k: F.split_part(F.col("text"), F.lit(" "), F.lit(k))  # noqa: E731
     html_str = F.concat(
-        F.lit("<html><head><title>Doc "),
-        F.col("doc_id").cast("string"),
-        F.lit("</title></head><body>\n<h1>Document "),
-        F.col("doc_id").cast("string"),
-        F.lit("</h1>\n<p>"),
-        F.col("text"),
-        F.lit("</p>\n<h2>Section "),
-        F.col("doc_id").cast("string"),
-        F.lit("</h2>\n<ul><li>"),
-        w(1),
-        F.lit("<ul><li>"),
-        w(2),
-        F.lit("<ul><li>"),
-        w(3),
+        F.lit("<html><head><title>Doc "), _did(),
+        F.lit("</title></head><body>\n<h1>Document "), _did(),
+        F.lit("</h1>\n<p>"), F.col("text"),
+        F.lit("</p>\n<h2>Section "), _did(),
+        F.lit("</h2>\n<ul><li>"), _word(1),
+        F.lit("<ul><li>"), _word(2),
+        F.lit("<ul><li>"), _word(3),
         F.lit("</li></ul></li></ul></li></ul>\n</body></html>"),
     )
-    return docs.select(
-        F.concat(
-            F.lit("https://synth.test/doc/"),
-            F.col("doc_id").cast("string"),
-            F.lit("-deep.html"),
-        ).alias("url"),
-        (
-            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-            + F.make_interval(secs=F.col("doc_id").cast("double"))
-        ).alias("warc_ts"),
-        F.encode(html_str, "UTF-8").alias("html"),
-        F.col("text").alias("text"),
-        F.col("lang").alias("lang"),
+    return _jvm_pages(
+        read_docs(spark, sf_dir), _doc_url("-deep.html"), html_str
     )
 
 
@@ -559,19 +426,9 @@ def synth_ofd_bytes(doc_id: int, text: str) -> bytes:
     only exists as <CGTransform><Glyphs> ids through the embedded font's
     cmap — extracting it proves the ofd_glyphs decode path end-to-end."""
     ns = "http://www.ofdspec.org/2016"
-    lines: list[str] = []
-    cur: list[str] = []
-    for w in text.split(" "):
-        if cur and len(" ".join(cur + [w])) > 60:
-            lines.append(" ".join(cur))
-            cur = [w]
-        else:
-            cur.append(w)
-    if cur:
-        lines.append(" ".join(cur))
     objs = []
     y = 40.0
-    for i, ln in enumerate(lines):
+    for i, ln in enumerate(_wrap60(text.split(" "))):
         objs.append(
             f'<ofd:TextObject ID="{100 + i}" Boundary="20 {y} 170 5" '
             f'Font="1" Size="4">'
@@ -635,41 +492,25 @@ def synth_ofd_bytes(doc_id: int, text: str) -> bytes:
 
 def synth_pages_ofd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → pages table of deterministic OFD blobs."""
-    return _synth_office_pages(spark, sf_dir, synth_ofd_bytes, ".ofd")
+    return _blob_pages(
+        spark, sf_dir, "https://synth.test/doc/{}.ofd", synth_ofd_bytes
+    )
 
 
 def synth_pages_doctags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → doctags source blobs (the VLM-interchange input
     format), pure JVM string build mirroring the HTML corpus structure."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
-    w = lambda k: F.split_part(F.col("text"), F.lit(" "), F.lit(k))  # noqa: E731
-    did = F.col("doc_id").cast("string")
-    id2 = F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0")
     dt = F.concat(
-        F.lit("<doctag><title>Document "), did, F.lit("</title>\n"),
+        F.lit("<doctag><title>Document "), _did(), F.lit("</title>\n"),
         F.lit("<text>"), F.col("text"), F.lit("</text>\n"),
-        F.lit("<unordered_list><list_item>"), w(1),
-        F.lit("</list_item>\n<list_item>"), w(2),
-        F.lit("</list_item>\n<list_item>"), w(3),
+        F.lit("<unordered_list><list_item>"), _word(1),
+        F.lit("</list_item>\n<list_item>"), _word(2),
+        F.lit("</list_item>\n<list_item>"), _word(3),
         F.lit("</list_item>\n</unordered_list>\n"),
-        F.lit("<otsl><ched>K<ched>V<nl><fcel>k"), id2,
-        F.lit("<fcel>v"), id2, F.lit("<nl></otsl>\n</doctag>"),
+        F.lit("<otsl><ched>K<ched>V<nl><fcel>k"), _id2(),
+        F.lit("<fcel>v"), _id2(), F.lit("<nl></otsl>\n</doctag>"),
     )
-    return docs.select(
-        F.concat(
-            F.lit("https://synth.test/doc/"), did, F.lit(".doctags.txt")
-        ).alias("url"),
-        (
-            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-            + F.make_interval(secs=F.col("doc_id").cast("double"))
-        ).alias("warc_ts"),
-        F.encode(dt, "UTF-8").alias("html"),
-        F.col("text").alias("text"),
-        F.col("lang").alias("lang"),
-    )
+    return _jvm_pages(read_docs(spark, sf_dir), _doc_url(".doctags.txt"), dt)
 
 
 def synth_pages_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -677,94 +518,35 @@ def synth_pages_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     no format hint, so dispatch must detect CSV from content (the JVM
     analog of the reference's _detect_csv, document.py:659-686). Pure JVM
     string build: a 2-column header + one data row."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
-    did = F.col("doc_id").cast("string")
-    id2 = F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0")
     csv_str = F.concat(
-        F.lit("K,V\nk"), id2, F.lit(",v"), id2, F.lit("\n")
+        F.lit("K,V\nk"), _id2(), F.lit(",v"), _id2(), F.lit("\n")
     )
-    return docs.select(
-        F.concat(F.lit("https://synth.test/data/"), did).alias("url"),
-        (
-            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-            + F.make_interval(secs=F.col("doc_id").cast("double"))
-        ).alias("warc_ts"),
-        F.encode(csv_str, "UTF-8").alias("html"),
-        F.col("text").alias("text"),
-        F.col("lang").alias("lang"),
-    )
+    url = F.concat(F.lit("https://synth.test/data/"), _did())
+    return _jvm_pages(read_docs(spark, sf_dir), url, csv_str)
 
 
 # ----------------------------------------- synthetic md / asciidoc sources
 def synth_pages_md(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → markdown source blobs (pure JVM string build)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
     md_str = F.concat(
-        F.lit("# Document "),
-        F.col("doc_id").cast("string"),
-        F.lit("\n\n"),
-        F.col("text"),
-        F.lit("\n\n- "),
-        F.split_part(F.col("text"), F.lit(" "), F.lit(1)),
-        F.lit("\n- "),
-        F.split_part(F.col("text"), F.lit(" "), F.lit(2)),
-        F.lit("\n- "),
-        F.split_part(F.col("text"), F.lit(" "), F.lit(3)),
+        F.lit("# Document "), _did(), F.lit("\n\n"), F.col("text"),
+        F.lit("\n\n- "), _word(1),
+        F.lit("\n- "), _word(2),
+        F.lit("\n- "), _word(3),
         F.lit("\n"),
     )
-    return docs.select(
-        F.concat(
-            F.lit("https://synth.test/doc/"),
-            F.col("doc_id").cast("string"),
-            F.lit(".md"),
-        ).alias("url"),
-        (
-            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-            + F.make_interval(secs=F.col("doc_id").cast("double"))
-        ).alias("warc_ts"),
-        F.encode(md_str, "UTF-8").alias("html"),
-        F.col("text").alias("text"),
-        F.col("lang").alias("lang"),
-    )
+    return _jvm_pages(read_docs(spark, sf_dir), _doc_url(".md"), md_str)
 
 
 def synth_pages_asciidoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → asciidoc source blobs (pure JVM string build)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
     adoc_str = F.concat(
-        F.lit("= Document "),
-        F.col("doc_id").cast("string"),
-        F.lit("\n\n"),
-        F.col("text"),
-        F.lit("\n\n* "),
-        F.split_part(F.col("text"), F.lit(" "), F.lit(1)),
-        F.lit("\n* "),
-        F.split_part(F.col("text"), F.lit(" "), F.lit(2)),
+        F.lit("= Document "), _did(), F.lit("\n\n"), F.col("text"),
+        F.lit("\n\n* "), _word(1),
+        F.lit("\n* "), _word(2),
         F.lit("\n"),
     )
-    return docs.select(
-        F.concat(
-            F.lit("https://synth.test/doc/"),
-            F.col("doc_id").cast("string"),
-            F.lit(".adoc"),
-        ).alias("url"),
-        (
-            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-            + F.make_interval(secs=F.col("doc_id").cast("double"))
-        ).alias("warc_ts"),
-        F.encode(adoc_str, "UTF-8").alias("html"),
-        F.col("text").alias("text"),
-        F.col("lang").alias("lang"),
-    )
+    return _jvm_pages(read_docs(spark, sf_dir), _doc_url(".adoc"), adoc_str)
 
 
 # -------------------------------------------- synthetic docx / xlsx sources
@@ -857,41 +639,6 @@ def _zip_bytes(parts: dict[str, str]) -> bytes:
     return buf.getvalue()
 
 
-def _synth_office_pages(spark, sf_dir, build, suffix):
-    import pandas as pd
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
-
-    def gen(batches):
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        f"https://synth.test/doc/{i}{suffix}"
-                        for i in b["doc_id"]
-                    ],
-                    "warc_ts": pd.Timestamp("2024-01-01")
-                    + pd.to_timedelta(b["doc_id"], unit="s"),
-                    "html": [
-                        build(int(i), t)
-                        for i, t in zip(b["doc_id"], b["text"])
-                    ],
-                    "text": b["text"],
-                    "lang": b["lang"],
-                }
-            )
-
-    return docs.mapInPandas(
-        gen,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-
-
 def synth_uspto_bytes(doc_id: int, text: str) -> bytes:
     """Minimal deterministic USPTO v4.x ICE application: title + abstract +
     one claim. Extracted markdown is
@@ -915,20 +662,21 @@ def synth_uspto_bytes(doc_id: int, text: str) -> bytes:
 
 
 def synth_pages_uspto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _synth_office_pages(
-        spark, sf_dir, synth_uspto_bytes, ".uspto.xml"
+    return _blob_pages(
+        spark, sf_dir, "https://synth.test/doc/{}.uspto.xml", synth_uspto_bytes
     )
 
 
 def synth_pages_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _synth_office_pages(
-        spark, sf_dir, synth_docx_bytes, ".docx"
+    return _blob_pages(
+        spark, sf_dir, "https://synth.test/doc/{}.docx", synth_docx_bytes
     )
 
 
 def synth_pages_xlsx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _synth_office_pages(
-        spark, sf_dir, lambda i, t: synth_xlsx_bytes(i), ".xlsx"
+    return _blob_pages(
+        spark, sf_dir, "https://synth.test/doc/{}.xlsx",
+        lambda i, _t: synth_xlsx_bytes(i),
     )
 
 

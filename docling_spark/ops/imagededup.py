@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .corpus import read_docs
+
 HAMMING_MAX = 6
 GRID_W, GRID_H = 9, 8  # 9 samples/row -> 8 comparisons x 8 rows = 64 bits
 
@@ -154,10 +156,7 @@ def _law_px(base: int, x: int, y: int, boost3: bool) -> int:
 def synth_phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, png) — REAL PNGs (ops/png.py encoder) whose pixels obey
     the module law; includes brightness twins and local-edit twins."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:
-        docs = docs.repartition(par, "doc_id")
+    docs = read_docs(spark, sf_dir, "doc_id")
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from docling_spark.ops.png import encode_png

@@ -32,8 +32,8 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from .corpus import read_docs
 from .mp4 import build_mp4 as _build_mp4
 from .mp4 import build_mp4_pcm as _build_mp4_pcm
 
@@ -260,10 +260,7 @@ def _decode_real(blob: bytes):
 # ---------------------------------------------------------------- synthesis
 def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (doc_id, image binary, video binary, audio binary)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, "doc_id")
+    docs = read_docs(spark, sf_dir, "doc_id")
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

@@ -168,3 +168,23 @@ def test_cli_from_help_lists_the_table(capsys):
         convert_main(["--help"])
     help_text = " ".join(capsys.readouterr().out.split())
     assert ", ".join(CONTENT_TYPES) in help_text
+
+
+@pytest.mark.parametrize("value", ["abc", "1-x", "x-2", "1.5"])
+def test_cli_malformed_page_range_is_a_usage_error(tmp_path, capsys, value):
+    """A malformed --page-range exits through argparse (code 2, one error
+    line) instead of a ValueError traceback."""
+    src = _write(tmp_path, "doc.pdf", synth_pdf_bytes(1, "alpha beta"))
+    with pytest.raises(SystemExit) as exc:
+        convert_main([str(src), "--output", str(tmp_path / "out"), "--page-range", value])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert f"invalid page range '{value}'" in err and "Traceback" not in err
+
+
+def test_cli_page_range_parses(tmp_path):
+    src = _write(tmp_path, "doc.pdf", synth_pdf_bytes(1, "alpha beta"))
+    out = tmp_path / "out"
+    for value in ("1-1", "1"):
+        assert convert_main([str(src), "--output", str(out), "--page-range", value]) == 0
+        assert (out / "doc.md").read_text() == "Document 1\n\nalpha beta"
