@@ -25,15 +25,27 @@ def convert_main(argv: list[str]) -> int:
     the job's format sniff and backends, no Spark session needed."""
     from .job import CONTENT_TYPES, _doc_backend, sniff_content_type
 
-    def content_types(value: str) -> set[str]:
-        names = {f.strip() for f in value.split(",") if f.strip()}
-        unknown = sorted(names - set(CONTENT_TYPES))
-        if unknown:
-            raise argparse.ArgumentTypeError(
-                f"unknown format(s) {','.join(unknown)}; "
-                f"choose from {','.join(CONTENT_TYPES)}"
-            )
-        return names
+    ext_map = {
+        "md": ".md",
+        "itxt": ".itxt",
+        "json": ".json",
+        "text": ".txt",
+        "html": ".html",
+        "doctags": ".doctags.txt",
+    }
+
+    def comma_list(choices, what: str):
+        def parse(value: str) -> list[str]:
+            names = [f.strip() for f in value.split(",") if f.strip()]
+            unknown = sorted(set(names) - set(choices))
+            if unknown:
+                raise argparse.ArgumentTypeError(
+                    f"unknown {what}(s) {','.join(unknown)}; "
+                    f"choose from {','.join(choices)}"
+                )
+            return names
+
+        return parse
 
     def page_range(value: str) -> tuple[int, int]:
         a, _, b = value.partition("-")
@@ -48,8 +60,9 @@ def convert_main(argv: list[str]) -> int:
     p.add_argument("sources", nargs="+", help="input files of any supported format")
     p.add_argument(
         "--to",
+        type=comma_list(ext_map, "output format"),
         default="md",
-        help="comma list of md,itxt,json,text,html,doctags",
+        help=f"comma list of {','.join(ext_map)}",
     )
     p.add_argument("--output", default=".", help="output directory")
     p.add_argument(
@@ -83,7 +96,7 @@ def convert_main(argv: list[str]) -> int:
     p.add_argument(
         "--from",
         dest="from_formats",
-        type=content_types,
+        type=comma_list(CONTENT_TYPES, "format"),
         default=None,
         help=f"comma allowlist of input formats ({', '.join(CONTENT_TYPES)}); "
         "others are skipped",
@@ -98,26 +111,17 @@ def convert_main(argv: list[str]) -> int:
     from .serialize_html import to_html
     from .serialize_json import to_docling_json
 
-    formats = [f.strip() for f in args.to.split(",") if f.strip()]
-    ext_map = {
-        "md": ".md",
-        "itxt": ".itxt",
-        "json": ".json",
-        "text": ".txt",
-        "html": ".html",
-        "doctags": ".doctags.txt",
-    }
     outdir = Path(args.output)
     outdir.mkdir(parents=True, exist_ok=True)
     failures = 0
     for src in args.sources:
         path = Path(src)
-        raw = path.read_bytes()
-        fmt = sniff_content_type(path.name, raw)
-        if args.from_formats is not None and fmt not in args.from_formats:
-            print(f"skipped {path.name}: format {fmt} not in --from")
-            continue
         try:
+            raw = path.read_bytes()
+            fmt = sniff_content_type(path.name, raw)
+            if args.from_formats is not None and fmt not in args.from_formats:
+                print(f"skipped {path.name}: format {fmt} not in --from")
+                continue
             if fmt == "pdf":
                 # the PDF text path has no SpanDoc: md/text outputs only
                 res = extract_pdf_text(
@@ -144,17 +148,17 @@ def convert_main(argv: list[str]) -> int:
                     "html": lambda: to_html(doc),
                     "doctags": lambda: to_doctags(doc),
                 }
-                outputs = {f: serializers[f]() for f in formats if f in serializers}
+                outputs = {f: serializers[f]() for f in args.to if f in serializers}
         except Exception as e:  # noqa: BLE001 — per-file containment
             print(f"FAILED {path.name}: {e}", file=sys.stderr)
             failures += 1
             if args.abort_on_error:
                 return 1
             continue
-        for to in formats:
+        for to in args.to:
             content = outputs.get(to)
             if content is not None:
-                (outdir / (path.stem + ext_map.get(to, f".{to}"))).write_text(content)
+                (outdir / (path.stem + ext_map[to])).write_text(content)
         print(f"converted {path.name}")
     return 1 if failures else 0
 

@@ -26,6 +26,7 @@ Scale design notes
 
 from __future__ import annotations
 
+import importlib
 import re
 import time
 from dataclasses import dataclass
@@ -305,101 +306,93 @@ def _doc_to_spans(doc, offsets: "dict | None" = None) -> list[dict]:
     return spans
 
 
-def _doc_backend(content_type: str, blob: bytes, url: str, base_uri_mode: str):
-    """Route one blob to its SpanDoc-producing backend.
+# Conversion table: content type -> (module, backend, mimetype, itxt width,
+# md kwargs) for every type with a SpanDoc backend. The backend is stored by
+# NAME and resolved on each call: imports stay lazy (worker start-up pays
+# only for the types it meets) and wrappers installed by attribute see every
+# call. Mimetype None is the serializer default (text/html); itxt width None
+# is untruncated.
+_OOXML = "application/vnd.openxmlformats-officedocument."
+CONVERSIONS = {
+    "html": (".htmlx.extract", "HtmlExtractor", None, 70, {}),
+    # reference vtt goldens are exported with escape_html=False
+    # (tests/test_backend_vtt.py:220)
+    "vtt": (".vttx", "extract_vtt", "text/vtt", 70, {"escape_html": False}),
+    "docling_json": (".jsonx", "parse_docling_json", "application/json", 70, {}),
+    "docx": (".docxx", "extract_docx", _OOXML + "wordprocessingml.document", 70, {}),
+    "xlsx": (".xlsxx", "extract_xlsx", _OOXML + "spreadsheetml.sheet", 70, {}),
+    "pptx": (".pptxx", "extract_pptx", "application/vnd.ms-powerpoint", 70, {}),
+    # USPTO keeps untruncated itxt (reference pftaps/grant goldens)
+    "uspto": (".usptox", "extract_uspto", "application/xml", None, {}),
+    "jats": (".jatsx", "extract_jats", "application/xml", 70, {}),
+    "asciidoc": (".asciidocx", "extract_asciidoc", "text/asciidoc", 70, {}),
+    "md": (".mdx", "extract_markdown", "text/markdown", 70, {}),
+    "csv": (".csvx", "extract_csv", "text/csv", 70, {}),
+    # VLM-interchange format (docling-core DocTagsDocument role);
+    # round-trip-exact inverse of serialize_doctags.to_doctags
+    "doctags": (".doctagsx", "parse_doctags", "text/plain", 70, {}),
+    # reference OFD origin mimetype is application/zip (ofd_backend.py:581)
+    "ofd": (".ofdx", "extract_ofd", "application/zip", 70, {}),
+}
 
-    Returns ``(doc, filename, mimetype, itxt_width, md_kwargs)`` or ``None``
-    when the content type has no SpanDoc backend (pdf/mets/audio/image/etc.
-    are handled separately in :func:`_extract_one`). Mimetype ``None`` means
-    the serializer default (text/html).
-    """
+# Types whose backend returns a result object (text, spans, optional
+# SpanDoc), and types with no text backend, which get a fixed row.
+RESULT_TYPES = ("pdf", "mets_gbs")
+NO_TEXT = {
+    # reference NoOpBackend → ASR pipeline (whisper NN, out of contract)
+    "audio": ("skipped", "audio input requires ASR (not in contract)"),
+    # reference ImageDocumentBackend → 1-page doc with zero text cells → OCR
+    # (NN, out of contract; image_backend.py:121-190): the row gets the
+    # needs_ocr status a 0-cell PDF page gets
+    "image": ("needs_ocr", "image input requires OCR (not in contract)"),
+}
+DOC_TIMEOUT_S = 60.0  # per-document deadline (enforced in the PDF page loop)
+
+
+def _doc_backend(content_type: str, blob: bytes, url: str, base_uri_mode: str):
+    """Route one blob to its SpanDoc backend through :data:`CONVERSIONS`:
+    ``(doc, filename, mimetype, itxt_width, md_kwargs)``, or ``None`` for a
+    type without one. The doc is named after the url's file stem, except
+    that Docling JSON keeps its own name and USPTO the full filename."""
+    if content_type not in CONVERSIONS:
+        return None
+    module, func, mimetype, itxt_width, md_kwargs = CONVERSIONS[content_type]
+    backend = getattr(importlib.import_module(module, __package__), func)
     filename = url.rstrip("/").rsplit("/", 1)[-1] or "file"
     stem = filename.rsplit(".", 1)[0] or "file"
     if content_type == "html":
-        from .htmlx.extract import HtmlExtractor
-
         base = url if base_uri_mode == "url" else "None"
-        doc = HtmlExtractor(base_uri=base).convert(blob)
+        doc = backend(base_uri=base).convert(blob)
         doc.name = stem
-        return doc, filename, None, 70, {}
-    if content_type == "vtt":
-        from .vttx import extract_vtt
+    elif content_type == "docling_json":
+        doc = backend(blob)
+    elif content_type == "uspto":
+        doc = backend(blob, name=filename)
+        if blob.startswith(b"PATN"):
+            mimetype = "text/plain"
+    else:
+        doc = backend(blob, name=stem)
+    return doc, filename, mimetype, itxt_width, md_kwargs
 
-        # reference vtt goldens are exported with escape_html=False
-        # (tests/test_backend_vtt.py:220)
-        return (
-            extract_vtt(blob, name=stem),
-            filename,
-            "text/vtt",
-            70,
-            {"escape_html": False},
-        )
-    if content_type == "docling_json":
-        from .jsonx import parse_docling_json
 
-        return parse_docling_json(blob), filename, "application/json", 70, {}
-    if content_type == "docx":
-        from .docxx import extract_docx
+def _png_picture(raw: bytes) -> dict:
+    """Spans of the reference's 1-page image doc for a PNG (the one codec
+    here, ops/png.py): one picture item sized to the decoded image, the
+    structure the reference builds before OCR. Undecodable: no spans."""
+    try:
+        from .model import SpanDoc
+        from .ops.png import decode_png, is_png
 
-        mime = (
-            "application/vnd.openxmlformats-officedocument."
-            "wordprocessingml.document"
-        )
-        return extract_docx(blob, name=stem), filename, mime, 70, {}
-    if content_type == "xlsx":
-        from .xlsxx import extract_xlsx
-
-        mime = (
-            "application/vnd.openxmlformats-officedocument."
-            "spreadsheetml.sheet"
-        )
-        return extract_xlsx(blob, name=stem), filename, mime, 70, {}
-    if content_type == "pptx":
-        from .pptxx import extract_pptx
-
-        return (
-            extract_pptx(blob, name=stem),
-            filename,
-            "application/vnd.ms-powerpoint",
-            70,
-            {},
-        )
-    if content_type == "uspto":
-        from .usptox import extract_uspto
-
-        mime = "text/plain" if blob.startswith(b"PATN") else "application/xml"
-        # USPTO keeps the full filename as doc name and untruncated itxt
-        # (reference pftaps/grant goldens)
-        return extract_uspto(blob, name=filename), filename, mime, None, {}
-    if content_type == "jats":
-        from .jatsx import extract_jats
-
-        return extract_jats(blob, name=stem), filename, "application/xml", 70, {}
-    if content_type == "asciidoc":
-        from .asciidocx import extract_asciidoc
-
-        return extract_asciidoc(blob, name=stem), filename, "text/asciidoc", 70, {}
-    if content_type == "md":
-        from .mdx import extract_markdown
-
-        return extract_markdown(blob, name=stem), filename, "text/markdown", 70, {}
-    if content_type == "csv":
-        from .csvx import extract_csv
-
-        return extract_csv(blob, name=stem), filename, "text/csv", 70, {}
-    if content_type == "doctags":
-        from .doctagsx import parse_doctags
-
-        # VLM-interchange format (docling-core DocTagsDocument role);
-        # round-trip-exact inverse of serialize_doctags.to_doctags
-        return parse_doctags(blob, name=stem), filename, "text/plain", 70, {}
-    if content_type == "ofd":
-        from .ofdx import extract_ofd
-
-        # reference OFD origin mimetype is application/zip
-        # (ofd_backend.py:581)
-        return extract_ofd(blob, name=stem), filename, "application/zip", 70, {}
-    return None
+        if not is_png(raw):
+            return {}
+        w, h, _c, _payload = decode_png(raw)
+        doc = SpanDoc("image")
+        pic = doc.add_picture()
+        pic.prov = (1, 0.0, 0.0, float(w), float(h))
+        doc.pages[1] = (float(w), float(h))
+        return {"spans": _doc_to_spans(doc), "n_items": len(doc.items)}
+    except Exception:
+        return {}
 
 
 def _extract_one(url: str, blob: Optional[bytes], content_type: str,
@@ -411,108 +404,55 @@ def _extract_one(url: str, blob: Optional[bytes], content_type: str,
     """One document through its backend; never raises (SURVEY §2.5:
     one bad doc must not kill a task)."""
     t0 = time.perf_counter()
-    out = {
-        "status": "failure",
-        "error": None,
-        "extracted_text": None,
-        "itxt": None,
-        "spans": None,
-        "n_items": None,
-        "n_chars": None,
-        "doc_json": None,
-        "doctags": None,
-    }
+    out = dict.fromkeys(
+        ("status", "error", "extracted_text", "itxt", "spans", "n_items",
+         "n_chars", "doc_json", "doctags")
+    )
     try:
-        if blob is None or len(blob) == 0:
-            out["status"] = "skipped"
-            out["error"] = "empty document"
-        elif content_type == "pdf":
-            from .pdfx.extract import extract_pdf_text
+        doc = None  # the SpanDoc this row's doctags are built from
+        raw = bytes(blob or b"")
+        if not raw:
+            out.update(status="skipped", error="empty document")
+        elif content_type in RESULT_TYPES:
+            if content_type == "pdf":
+                from .pdfx.extract import extract_pdf_text
 
-            deadline = (
-                time.monotonic() + doc_timeout_s if doc_timeout_s else None
-            )
-            # structural labeling (pdfx/structure.py: heading levels, list
-            # items, grid tables) is demand-gated: span consumers keep it on,
-            # text-only paths skip grid-detection + heading-ranking work
-            res = extract_pdf_text(
-                bytes(blob),
-                deadline=deadline,
-                with_structure=with_structure or with_doctags,
-                password=pdf_password,
-                with_span_doc=with_doctags,
-            )
-            spans = res.spans
-            doctags = None
-            if with_doctags and res.span_doc is not None:
-                from .serialize_doctags import to_doctags
+                deadline = time.monotonic() + doc_timeout_s if doc_timeout_s else None
+                # structural labeling (pdfx/structure.py) is demand-gated:
+                # text-only paths skip grid detection and heading ranking.
+                # The SpanDoc gives located DocTags: its loc tokens quantize
+                # REAL page geometry (block bboxes)
+                res = extract_pdf_text(
+                    raw,
+                    deadline=deadline,
+                    with_structure=with_structure or with_doctags,
+                    password=pdf_password,
+                    with_span_doc=with_doctags,
+                )
+                text = res.text  # a needs_ocr PDF keeps its "" text
+            else:
+                from .metsx import extract_mets_gbs
 
-                # located DocTags from the deterministic layout path — the
-                # loc tokens quantize REAL page geometry (block bboxes)
-                doctags = to_doctags(res.span_doc)
+                res = extract_mets_gbs(raw, with_span_doc=with_doctags)
+                text = res.text or None
+            doc = res.span_doc
             out.update(
                 status=res.status,
-                extracted_text=res.text,
-                error=res.error,
-                spans=spans,
-                n_items=len(spans) if spans else None,
-                n_chars=len(res.text) if res.text else None,
-                doctags=doctags,
-            )
-        elif content_type == "mets_gbs":
-            from .metsx import extract_mets_gbs
-
-            res = extract_mets_gbs(bytes(blob), with_span_doc=with_doctags)
-            doctags = None
-            if with_doctags and res.span_doc is not None:
-                from .serialize_doctags import to_doctags
-
-                doctags = to_doctags(res.span_doc)
-            out.update(
-                status=res.status,
-                extracted_text=res.text or None,
+                extracted_text=text,
                 error=res.error,
                 spans=res.spans,
                 n_items=len(res.spans) if res.spans else None,
                 n_chars=len(res.text) if res.text else None,
-                doctags=doctags,
             )
-        elif content_type == "audio":
-            # reference routes audio through NoOpBackend to the ASR
-            # pipeline (whisper NN — out of contract)
-            out["status"] = "skipped"
-            out["error"] = "audio input requires ASR (not in contract)"
-        elif content_type == "image":
-            # reference ImageDocumentBackend wraps images as a 1-page doc
-            # with zero text cells, which forces the OCR path
-            # (/root/reference/docling/backend/image_backend.py:121-190);
-            # OCR is NN-based and out of contract, so the row gets the same
-            # explicit needs_ocr status a 0-cell PDF page gets. For PNG (the
-            # one format with a real codec here, ops/png.py) the 1-page-doc
-            # wrap IS produced: a SpanDoc with a picture item sized to the
-            # genuinely decoded image, so downstream span consumers see the
-            # same structure the reference builds before OCR runs.
-            out["status"] = "needs_ocr"
-            out["error"] = "image input requires OCR (not in contract)"
-            try:
-                from .model import SpanDoc
-                from .ops.png import decode_png, is_png
-
-                if is_png(bytes(blob)):
-                    w, h, _c, _payload = decode_png(bytes(blob))
-                    doc = SpanDoc("image")
-                    pic = doc.add_picture()
-                    pic.prov = (1, 0.0, 0.0, float(w), float(h))
-                    doc.pages[1] = (float(w), float(h))
-                    out["spans"] = _doc_to_spans(doc)
-                    out["n_items"] = len(doc.items)
-            except Exception:
-                pass  # undecodable image keeps the bare needs_ocr row
+        elif content_type in NO_TEXT:
+            status, error = NO_TEXT[content_type]
+            out.update(status=status, error=error)
+            if content_type == "image":
+                out.update(_png_picture(raw))
         else:
-            routed = _doc_backend(content_type, bytes(blob), url, base_uri_mode)
+            routed = _doc_backend(content_type, raw, url, base_uri_mode)
             if routed is None:
-                out["status"] = "skipped"
-                out["error"] = "unsupported content_type"
+                out.update(status="skipped", error="unsupported content_type")
             else:
                 from .serialize import to_itxt, to_markdown_with_spans
 
@@ -520,17 +460,11 @@ def _extract_one(url: str, blob: Optional[bytes], content_type: str,
                 # byte-identical to to_markdown (golden-pinned) + per-item
                 # char offsets for the spans column
                 md, offsets = to_markdown_with_spans(doc, **md_kwargs)
-                doc_json = None
                 if with_doc_json:
                     from .serialize_json import to_docling_json
 
                     kw = {} if mimetype is None else {"mimetype": mimetype}
-                    doc_json = to_docling_json(doc, filename, bytes(blob), **kw)
-                doctags = None
-                if with_doctags:
-                    from .serialize_doctags import to_doctags
-
-                    doctags = to_doctags(doc)
+                    out["doc_json"] = to_docling_json(doc, filename, raw, **kw)
                 out.update(
                     status="success",
                     extracted_text=md,
@@ -538,51 +472,17 @@ def _extract_one(url: str, blob: Optional[bytes], content_type: str,
                     spans=_doc_to_spans(doc, offsets),
                     n_items=len(doc.items),
                     n_chars=len(md),
-                    doc_json=doc_json,
-                    doctags=doctags,
                 )
+        if with_doctags and doc is not None:
+            from .serialize_doctags import to_doctags
+
+            out["doctags"] = to_doctags(doc)
     except Exception as e:  # noqa: BLE001 — containment by design
-        out["status"] = "failure"
-        out["error"] = f"{type(e).__name__}: {e}"[:1000]
+        # a failure row carries nothing a step before the raise produced
+        out = dict.fromkeys(out)
+        out.update(status="failure", error=f"{type(e).__name__}: {e}"[:1000])
     out["proc_ms"] = (time.perf_counter() - t0) * 1e3
     return out
-
-
-def make_extract_udf(base_uri_mode: str = "none", doc_timeout_s: float = 60.0,
-                     with_doc_json: bool = False, with_doctags: bool = False,
-                     with_structure: bool = True, pdf_password: str = ""):
-    """Build the mapInPandas function. ``base_uri_mode``: "url" resolves
-    relative hrefs against the row's url; "none" mirrors the reference's
-    golden-generation default (source_uri=None). ``with_doc_json`` adds the
-    full DoclingDocument JSON per row (the reference's save format) — off by
-    default since it roughly doubles output bytes. ``with_doctags`` adds the
-    DocTags serialization (reference OutputFormat.DOCTAGS). ``with_structure``
-    gates the PDF structural labeler (off = text-only fast path)."""
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_in in batches:
-            rows = []
-            for r in pdf_in.itertuples(index=False):
-                res = _extract_one(
-                    r.url, r.html, r.content_type, base_uri_mode, doc_timeout_s,
-                    with_doc_json=with_doc_json,
-                    with_doctags=with_doctags,
-                    with_structure=with_structure,
-                    pdf_password=pdf_password,
-                )
-                rows.append(
-                    {
-                        "url": r.url,
-                        "warc_ts": r.warc_ts,
-                        "lang": r.lang,
-                        "doc_hash": r.doc_hash,
-                        "content_type": r.content_type,
-                        **res,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return extract_batches
 
 
 def extract_pages(
@@ -594,10 +494,17 @@ def extract_pages(
     with_doc_json: bool = False,
     with_doctags: bool = False,
     with_structure: bool = True,
-    doc_timeout_s: float = 60.0,
     pdf_password: str = "",
 ) -> DataFrame:
     """Logical plan for one extraction pass (no side effects).
+
+    ``base_uri_mode``: "url" resolves relative hrefs against the row's url;
+    "none" mirrors the reference's golden-generation default
+    (source_uri=None). ``with_doc_json`` adds the full DoclingDocument JSON
+    per row (the reference's save format) — off by default since it roughly
+    doubles output bytes. ``with_doctags`` adds the DocTags serialization
+    (reference OutputFormat.DOCTAGS). ``with_structure`` gates the PDF
+    structural labeler (off = text-only fast path).
 
     ``shuffle_partitions``: explicit salted-repartition width (north rule:
     defuse skew from giant HTML blobs). ``None``/0 = trust the upstream
@@ -615,16 +522,30 @@ def extract_pages(
     )
     if shuffle_partitions:
         df = _route_skew(df, shuffle_partitions, salt)
-    udf = make_extract_udf(
-        base_uri_mode=base_uri_mode,
-        doc_timeout_s=doc_timeout_s,
-        with_doc_json=with_doc_json,
-        with_doctags=with_doctags,
-        with_structure=with_structure,
-        pdf_password=pdf_password,
-    )
+
+    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf_in in batches:
+            yield pd.DataFrame([
+                {
+                    "url": r.url,
+                    "warc_ts": r.warc_ts,
+                    "lang": r.lang,
+                    "doc_hash": r.doc_hash,
+                    "content_type": r.content_type,
+                    **_extract_one(
+                        r.url, r.html, r.content_type, base_uri_mode,
+                        DOC_TIMEOUT_S,
+                        with_doc_json=with_doc_json,
+                        with_doctags=with_doctags,
+                        with_structure=with_structure,
+                        pdf_password=pdf_password,
+                    ),
+                }
+                for r in pdf_in.itertuples(index=False)
+            ])
+
     cols = ["url", "warc_ts", "lang", "doc_hash", "content_type", "html"]
-    return df.select(*cols).mapInPandas(udf, schema=EXTRACTED_SCHEMA)
+    return df.select(*cols).mapInPandas(extract_batches, schema=EXTRACTED_SCHEMA)
 
 
 # Blobs above this go to the dedicated big-row lane (SURVEY §4: length
@@ -634,19 +555,14 @@ def extract_pages(
 BIG_BLOB_BYTES = 4 * 1024 * 1024
 
 
-def _route_skew(
-    df: DataFrame,
-    shuffle_partitions: int,
-    salt: int,
-    big_bytes: int = BIG_BLOB_BYTES,
-) -> DataFrame:
+def _route_skew(df: DataFrame, shuffle_partitions: int, salt: int) -> DataFrame:
     """Skew-defused repartition: small rows hash-spread across
-    ``shuffle_partitions``; giant blobs (> ``big_bytes``) ride a separate
+    ``shuffle_partitions``; giant blobs (> ``BIG_BLOB_BYTES``) ride a separate
     lane partitioned on their own url hash, so no partition mixes a giant
     doc with a fair share of small ones — the stage wall becomes
     max(small-lane wall, slowest giant) instead of their sum. Exactly-once
     and ordering are unaffected (union of two disjoint filters)."""
-    big = F.length(F.col("html")) > F.lit(big_bytes)
+    big = F.length(F.col("html")) > F.lit(BIG_BLOB_BYTES)
     small_lane = df.filter(~big).repartition(
         shuffle_partitions, F.xxhash64(F.col("url"), F.lit(salt))
     )

@@ -1,0 +1,298 @@
+"""Byte lock on the per-document extraction core.
+
+Every output row of the job comes from ``job._extract_one``, so a change in
+any backend's md, itxt, spans, doctags or doc_json, or in a row's status or
+error, shows up here. Each case runs one input under both
+``base_uri_mode`` values and three flag sets, and pins a sha256 over the
+six rows, each minus ``proc_ms`` and serialized with
+``json.dumps(sort_keys=True, default=str)``.
+
+Inputs, all built in the repo (no reference corpus needed):
+
+- the 22 inputs of ``tests/test_cli_convert.py``;
+- the ``ops/corpus`` ``synth_*_bytes`` builders at several doc ids, one
+  of them with a paragraph longer than the itxt width;
+- a long paragraph in each text format (itxt truncation);
+- one seeded 300-byte junk blob routed to each ``CONTENT_TYPES`` entry;
+- a truncated, a blank (needs_ocr) and an encrypted PDF, an HTML page
+  with relative links, an empty blob, ``oversize`` and ``other``;
+- a minimal METS-GBS tar.gz: a ``PROFILE="gbs"`` manifest plus one hOCR
+  page.
+
+To regenerate after an intended output change, run
+``PYTHONPATH=. python tests/test_backend_lock.py`` and paste the printed
+table into ``DIGESTS``.
+"""
+
+from __future__ import annotations
+
+import gzip
+import hashlib
+import io
+import json
+import random
+import tarfile
+
+import pytest
+from test_cli_convert import CONVERTED, JATS_NO_DTD, SKIPPED
+
+from docling_spark.job import CONTENT_TYPES, _extract_one, sniff_content_type
+from docling_spark.ops import corpus
+from docling_spark.pdfx.crypt import encrypt_pdf_rc4
+
+BASE = "https://lock.test/docs/"
+FLAG_SETS = (
+    {},
+    {"with_doc_json": True, "with_doctags": True},
+    {"with_structure": False},
+)
+
+METS_MANIFEST = b"""<?xml version="1.0"?>
+<mets:mets xmlns:mets="http://www.loc.gov/METS/"
+           xmlns:xlink="http://www.w3.org/1999/xlink" PROFILE="gbs">
+ <mets:fileSec>
+  <mets:fileGrp USE="coordOCR">
+   <mets:file ID="ocr1"><mets:FLocat xlink:href="00000001.html"/></mets:file>
+  </mets:fileGrp>
+ </mets:fileSec>
+ <mets:structMap>
+  <mets:div TYPE="volume">
+   <mets:div TYPE="page" ORDER="1"><mets:fptr FILEID="ocr1"/></mets:div>
+  </mets:div>
+ </mets:structMap>
+</mets:mets>
+"""
+METS_HOCR = b"""<html><body>
+<div class="ocr_page" title="bbox 0 0 1000 1400">
+<span class="ocr_line" title="bbox 100 100 700 140; x_wconf 95">Chapter One</span>
+<span class="ocr_line" title="bbox 100 200 900 220; x_wconf 91">It was a dark and stormy night,</span>
+<span class="ocr_line" title="bbox 100 224 880 244; x_wconf 90">and the rain fell in torrents.</span>
+</div></body></html>
+"""
+
+# long enough that every itxt line it lands in is truncated at width 70
+WORDS = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+LONG = " ".join(f"{w}{k}" for k, w in enumerate(WORDS * 4))
+
+HTML_LINKS = (
+    b"<html><head><title>Links</title></head><body><h2>See also</h2>"
+    b'<p>Read <a href="../other.html">the other page</a> and '
+    b'<a href="https://ext.test/x">an outside one</a>.</p>'
+    b'<img src="img/fig.png" alt="a figure"></body></html>'
+)
+
+
+def _mets_tar_gz() -> bytes:
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tar:
+        for name, data in (("book/mets.xml", METS_MANIFEST),
+                           ("00000001.html", METS_HOCR)):
+            info = tarfile.TarInfo(name)
+            info.size, info.mtime = len(data), 0
+            tar.addfile(info, io.BytesIO(data))
+    return gzip.compress(buf.getvalue(), mtime=0)
+
+
+def _cases() -> dict[str, tuple[str, bytes, str]]:
+    """case id -> (url, blob, content type)."""
+    cases = {
+        f"cli:{name}": (BASE + name, raw, fmt)
+        for name, (raw, fmt) in {**CONVERTED, **SKIPPED}.items()
+    }
+    texts = {i: " ".join(WORDS[: 3 + i % 7]) for i in (1, 17, 250)}
+    for i, text in {**texts, 42: LONG}.items():
+        for name, raw in (
+            (f"{i}.pdf", corpus.synth_pdf_bytes(i, text)),
+            (f"{i}-img.pdf", corpus.synth_pdf_images_bytes(i)),
+            (f"{i}-struct.pdf", corpus.synth_pdf_structured_bytes(i, text)),
+            (f"{i}.ofd", corpus.synth_ofd_bytes(i, text)),
+            (f"{i}.docx", corpus.synth_docx_bytes(i, text)),
+            (f"{i}.xlsx", corpus.synth_xlsx_bytes(i)),
+            (f"{i}.xml", corpus.synth_uspto_bytes(i, text)),
+        ):
+            cases[f"synth:{name}"] = (BASE + name, raw, sniff_content_type(name, raw))
+    long = LONG.encode()
+    for name, raw in (
+        ("long.html", b"<html><body><h1>T</h1><p>" + long + b"</p></body></html>"),
+        ("long.md", b"# T\n\n" + long + b"\n"),
+        ("long.adoc", b"= T\n\n" + long + b"\n"),
+        ("long.vtt", b"WEBVTT\n\n00:00.000 --> 00:01.000\n" + long + b"\n"),
+        ("long.nxml", JATS_NO_DTD.replace(b"Hello jats", long)),
+        ("long.doctags.txt", b"<doctag><text>" + long + b"</text>\n</doctag>"),
+        ("long.csv", b"K,V\nk1," + long + b"\n"),
+    ):
+        cases[f"long:{name}"] = (BASE + name, raw, sniff_content_type(name, raw))
+    for k, ct in enumerate(CONTENT_TYPES):
+        junk = random.Random(1000 + k).randbytes(300)
+        cases[f"junk:{ct}"] = (BASE + f"junk-{ct}", junk, ct)
+    pdf = corpus.synth_pdf_bytes(3, "three words here")
+    mets = _mets_tar_gz()
+    cases.update({
+        "edge:truncated.pdf": (BASE + "truncated.pdf", pdf[: len(pdf) // 2], "pdf"),
+        "edge:blank.pdf": (BASE + "blank.pdf", corpus._pdf_file([]), "pdf"),
+        "edge:encrypted.pdf": (
+            BASE + "encrypted.pdf", encrypt_pdf_rc4(pdf, "secret"), "pdf"),
+        "edge:links.html": (BASE + "sub/links.html", HTML_LINKS, "html"),
+        "edge:empty": (BASE + "empty.html", b"", "html"),
+        "edge:oversize": (BASE + "big.html", b"<html>" + b"x" * 64, "oversize"),
+        "edge:other": (BASE + "notes.txt", b"plain prose\n", "other"),
+        "edge:book.tar.gz": (BASE + "book.tar.gz", mets, sniff_content_type("book.tar.gz", mets)),
+    })
+    return cases
+
+
+CASES = _cases()
+
+
+def _digest(url: str, blob: bytes, ct: str) -> str:
+    h = hashlib.sha256()
+    for mode in ("none", "url"):
+        for flags in FLAG_SETS:
+            row = _extract_one(url, blob, ct, mode, 60.0, **flags)
+            row.pop("proc_ms")
+            h.update(json.dumps(row, sort_keys=True, default=str).encode())
+            h.update(b"\n")
+    return h.hexdigest()
+
+
+# case id -> sha256 of its six rows, generated before the backend router
+# became a table
+DIGESTS = {
+    "cli:page.html": "d715e1795f7af7fe98fb5d2dbe79dd9a096ec16303870ad58e989dbee8ccbbb4",
+    "cli:page": "d02b40be79cd62ad5cec1c7897152f669a9b7711975b2daba6af383f18ee4fe8",
+    "cli:word.docx": "81ceca66939c011d20fb055ad79374b2fcd739252e68ba650230c575429250cf",
+    "cli:sheet.xlsx": "621087788e3652206222e99ab2c6aee1314ff44d815b9cd3b15936ed0ac0e4e8",
+    "cli:book.ofd": "41ba2a2eba5bbe336719c448fe067687ed7408e31fdfc38ccffbf214d3e3aef9",
+    "cli:patent.xml": "0350f7154f275cea9e681b587b5bea10f831454d09b73f1be59b84cdab3ab226",
+    "cli:table.csv": "1afbce2b44019ba29762d6c928de25249a2f0b2d0fbd8cb13a873b195691bf7b",
+    "cli:table": "85c006834a0da07fd91a52d7c1ea1d04bcc5917e75e27571ac61410513290aa8",
+    "cli:notes.md": "55f9e6d742341903041b802584e48984487df8e37e11efb580b588db1611a32b",
+    "cli:notes.adoc": "50e5c8379065cf4cf52a88787f3bd5e911a9feff5a3d1283cd64fe7b28e6181b",
+    "cli:subs.vtt": "6b2ecfd7c837e66267be21e7f8e4af749454018b8fa418c12c3dfe30007e8118",
+    "cli:subs.html": "399b7a8558abb2899f898d3e53a54275217a486a1fb6122e7a5101ddd89c0854",
+    "cli:page.doctags.txt": "2fa802f40a05425d43235dc31b0f86d5ca1e330d0f71f8330d6f0b5f08eb0cb9",
+    "cli:article.nxml": "2b5924c231be1049e896c475dcb3199d49f6fc5180f3d0db418e992aaf908ada",
+    "cli:page.json": "4513c22dbd3556b2720833be46646ca3fab14416fdbb0ed48991e188443e6f9e",
+    "cli:doc.pdf": "305bcd9b441979eca4098a14809279d55fe5cd285fd5cfeda5a87989c87f17bb",
+    "cli:struct.pdf": "1f3a2a365b3c69a395f89476fe4a8dd6d6ada4e9de70227abacb840aa122fd4b",
+    "cli:notes.txt": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",
+    "cli:empty.txt": "260438f423f84dd9d53d16a6e2fb84d80d34c71584cd2d6ee0c5661d427f3fa1",
+    "cli:blob.bin": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",
+    "cli:img.png": "9d658a17b36a43e14618f21e2c8ece658330652b22212f2d18455398c636d082",
+    "cli:arch.gz": "1b47a17106edf9ba921e05f1d6abfe721c70c3da2a1d03575991dd19d3475051",
+    "synth:1.pdf": "80f6372551db7b62c21829aaf4bc68b32d95bf8e672a1fe8838ed7d5496d05fb",
+    "synth:1-img.pdf": "79dedb5d679e1d9ee2696397aaee0d0b37f639f635235cb4f8e2a6a48acb6700",
+    "synth:1-struct.pdf": "d5141cb7ac6a7fe7f02167084f3c27c448974c621ddfde5738d48fe654766916",
+    "synth:1.ofd": "036eeefa9d48189cbaca87ce6c4770d6bb76440647d5fe477d24010bf801f62a",
+    "synth:1.docx": "51d02bbec3db7637c388320f9614dfa0df414a0fccd41e9426e397807b867ebb",
+    "synth:1.xlsx": "9201de4c4193c65b00d238b45a43c0007d06a6897fe2e78ce004a13deff8b393",
+    "synth:1.xml": "b6a6f528cfa86d29f6142f67a0a9ba6be879636339f7eeae10221a9b5e234a77",
+    "synth:17.pdf": "28ee99564836cd60348e9bd9b770b1ca88a697b7564f99e0753952095a717db9",
+    "synth:17-img.pdf": "d7cac80bdb88a3bf9f0e1a0ca3edaceb048d7ff60f5af653785b3d747e4b86d4",
+    "synth:17-struct.pdf": "a4d2bd4c0f09bc6c275f203083f7c94beeb9759726e17803a7b4b2bd49b9e065",
+    "synth:17.ofd": "99b44ba98c62090f23ebecbb6424e92bba813952c220e588444b462b81bf810b",
+    "synth:17.docx": "2c1bc19ba684d7878c3ba2700131983f86179710b7f55a39e56bd39884ee6a1d",
+    "synth:17.xlsx": "e8fafe6da8e53486d91e59e8c5f6843da64dbdbd09654049b3f83a56e773f891",
+    "synth:17.xml": "29a8b169d8531cc52deb6bbbc8258a91d8fca88738d61262b046cb833c00834d",
+    "synth:250.pdf": "c49c19990e4730e27063aaf03662ccc9cff6030e0054e6af47095f9e4ad796e2",
+    "synth:250-img.pdf": "e01f91c17141bc523beb51d9de1e8af13adb3764abeffddc2921ef3c91d6ebb7",
+    "synth:250-struct.pdf": "b7bbed2e632063cf7439e9911832b16c720d9666cdc011ae33bd64184c0d5443",
+    "synth:250.ofd": "5908665c52aaab753679f5177d5844e84296baaa30111d0d99b32256beaf8f71",
+    "synth:250.docx": "4b07ab45183bc1bc1405c9f409326a5df6a81acdc5160aed828e6a1eb03d083b",
+    "synth:250.xlsx": "d5b89cb22b3aefde824998eacf20349ca43c3b2bdaf4ac74b04f865284cafe86",
+    "synth:250.xml": "99aeb34b22cadf20fb06ce9f4d46c8c7ef13ffed5250f98902ea78e326d1d0a9",
+    "synth:42.pdf": "5b3f6c998707822ddc888af26181452c259282ef430214e9e955936145b69387",
+    "synth:42-img.pdf": "7b2e1dede4474f7c21fe241d5e636ecc3e976fca5e6f7ab79766117c651f8d6a",
+    "synth:42-struct.pdf": "405aee95717f88c330b811d1e2e69033e173c7942f9216a15db1c941a2b5152e",
+    "synth:42.ofd": "77034fbeb7694320cf70a7acb8cdc78f8a9448c9731c14116fbb3aca5a6887bd",
+    "synth:42.docx": "6651077a7cd093df22cc54853dc3994fb8e95bce55612c1d8a86df1a94f7e011",
+    "synth:42.xlsx": "6dacddd68025665909295097d318ad446d596b0d24a2756beb50b8294cea4126",
+    "synth:42.xml": "893cf7726fe4530dab340f1e70a0516ea3ca4d74d6c94a840bf33c826be08ded",
+    "long:long.html": "bef9c5bfb67717edcd7f7acffc3ea6d47ea5f69d0cf3e8bc32eb2d65e06642fc",
+    "long:long.md": "8c49da3bc845d2244eaebd7f5e2d5304d80204072ef13bbcbf55e3144a46fe59",
+    "long:long.adoc": "fb10016c041256c9058c083da569d4f2f173df8bf0fc7ccd9cca37f3ff808adb",
+    "long:long.vtt": "1efbb965c1be01cc71fdf96babc16577b3d0146f540dc93b953012eb1830fa2b",
+    "long:long.nxml": "359f272ccc7a3b10ef746ce6b1f76a4d373526931bc92e998e51c5c1559b4dd6",
+    "long:long.doctags.txt": "eca33a74a95604e92dbe518141597b8dd2fc4223cc1054bd46cacc4d4f6968a1",
+    "long:long.csv": "fea1897a4dd5d53a80acad2fae29cffc32e94bb7f2f52c5e453c0efef16596ac",
+    "junk:pdf": "3374c5cf5e29a0743434c884f12793a8e0e3fe55320365afc6ea84e74c98b066",
+    "junk:html": "5f994b6c8681999b2bc39896778a463906150f622798089fe4d0ba5084a1e3dd",
+    "junk:csv": "8a24df7eae207d9b4a7f3449f66d3c564006724fedffe794bece3d50f6da7967",
+    "junk:vtt": "a83bb3a83f70de7e3908bda229c9684cc0291964efe49c58bfedf65d6fa51cb6",
+    "junk:md": "1d3efa3b70ff60d9c9e074bb79613026382fb0a7a83effe51a1bdf8f9b06573a",
+    "junk:asciidoc": "98db0043347f3d18501512cd320b074993970af0de4570401493fde396233598",
+    "junk:jats": "0913e6b62f9294ed142f0e0ff9d1da0921bd752653c7c4b1a78e93fc11418aaa",
+    "junk:uspto": "de4b6ffa5f728ad85fb14105021bb409c57a933d1ed8f02f30cae86e6bb99cb3",
+    "junk:ofd": "fa5e387f944c61f281b70e9099050fedde96c73cd17f5e7c3bf0c03ad62b2cc9",
+    "junk:docx": "fa5e387f944c61f281b70e9099050fedde96c73cd17f5e7c3bf0c03ad62b2cc9",
+    "junk:xlsx": "fa5e387f944c61f281b70e9099050fedde96c73cd17f5e7c3bf0c03ad62b2cc9",
+    "junk:pptx": "fa5e387f944c61f281b70e9099050fedde96c73cd17f5e7c3bf0c03ad62b2cc9",
+    "junk:mets_gbs": "a08617760379366d3d3852acebf54edce8d58179bf46a0d6be2dc96aebd8dffb",
+    "junk:image": "5c29a5b55da1957760033b542afd97b48d044184751e04d09515d4b73a5ed9f4",
+    "junk:audio": "dd3b2c150834ee032f165eb301a5a27d739c0234779f8d0a215b86323ce64c48",
+    "junk:docling_json": "7706732cd414c64d79f24d9c349789b40c0bee0d55e1542d049a073a1a49b120",
+    "junk:doctags": "16e4fa8c385c01a2e6c081cbacccc3cdb533a9dfb1b0a5d4aad5ede13f0d2620",
+    "edge:truncated.pdf": "e28bd22c0badbe4b7ee6c666be25d82d62db6f14d24beea337674bc12e890178",
+    "edge:blank.pdf": "e28bd22c0badbe4b7ee6c666be25d82d62db6f14d24beea337674bc12e890178",
+    "edge:encrypted.pdf": "d1f29c91f6a7b8f3f148ba05bf41b4f0179e9c7e218d51dc6524bcf2f5ad05fc",
+    "edge:links.html": "31a6138347b7ceca6f9e68265bc4536a6e33d47a45fede6eb37d81076e710c23",
+    "edge:empty": "260438f423f84dd9d53d16a6e2fb84d80d34c71584cd2d6ee0c5661d427f3fa1",
+    "edge:oversize": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",
+    "edge:other": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",
+    "edge:book.tar.gz": "278d7cece4bf2314689b3d54ca4011d57d3f4f716bb86e86312ce38e4b9a0ba4",
+}
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_backend_output_locked(case):
+    url, blob, ct = CASES[case]
+    assert _digest(url, blob, ct) == DIGESTS[case]
+
+
+def test_every_case_is_locked():
+    assert sorted(DIGESTS) == sorted(CASES)
+
+
+def test_mets_fixture_converts():
+    """The in-test METS archive takes the success path, so the lock covers
+    the METS backend, not just its skip branch."""
+    url, blob, ct = CASES["edge:book.tar.gz"]
+    assert ct == "mets_gbs"
+    row = _extract_one(url, blob, ct, "none", 60.0, with_doctags=True)
+    assert row["status"] == "success", row["error"]
+    assert "stormy night" in row["extracted_text"] and row["doctags"]
+
+
+def test_every_content_type_has_exactly_one_route():
+    """The conversion tables partition CONTENT_TYPES, and every backend
+    name in CONVERSIONS resolves to a callable."""
+    import importlib
+
+    from docling_spark import job
+
+    routes = [*job.CONVERSIONS, *job.RESULT_TYPES, *job.NO_TEXT]
+    assert sorted(routes) == sorted(CONTENT_TYPES)
+    for module, func, *_ in job.CONVERSIONS.values():
+        assert callable(getattr(importlib.import_module(module, "docling_spark"), func))
+
+
+@pytest.mark.parametrize("case", ["cli:page.html", "synth:1-struct.pdf", "edge:book.tar.gz"])
+def test_late_failure_row_carries_only_status_and_error(monkeypatch, case):
+    """A step that raises after the backend succeeded (here DocTags) leaves
+    a failure row with no field of the partial result."""
+    from docling_spark import serialize_doctags
+
+    def boom(doc):
+        raise RuntimeError("doctags broke")
+
+    monkeypatch.setattr(serialize_doctags, "to_doctags", boom)
+    url, blob, ct = CASES[case]
+    row = _extract_one(url, blob, ct, "none", 60.0, with_doc_json=True, with_doctags=True)
+    assert row.pop("proc_ms") >= 0
+    assert row == {**dict.fromkeys(row), "status": "failure",
+                   "error": "RuntimeError: doctags broke"}
+
+
+if __name__ == "__main__":
+    for case, (url, blob, ct) in CASES.items():
+        print(f'    "{case}": "{_digest(url, blob, ct)}",')

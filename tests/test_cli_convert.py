@@ -188,3 +188,36 @@ def test_cli_page_range_parses(tmp_path):
     for value in ("1-1", "1"):
         assert convert_main([str(src), "--output", str(out), "--page-range", value]) == 0
         assert (out / "doc.md").read_text() == "Document 1\n\nalpha beta"
+
+
+def test_cli_missing_source_is_contained(tmp_path, capsys):
+    """A source that cannot be read fails like a bad document: the run
+    reports it, converts the rest and exits 1; --abort-on-error stops."""
+    good = _write(tmp_path, "table.csv", CONVERTED["table.csv"][0])
+    missing = tmp_path / "in" / "nope.html"
+    out = tmp_path / "out"
+    rc = convert_main([str(missing), str(good), "--to", "md", "--output", str(out)])
+    captured = capsys.readouterr()
+    assert rc == 1 and (out / "table.md").exists()
+    assert "FAILED nope.html:" in captured.err and "Traceback" not in captured.err
+    assert "converted table.csv" in captured.out
+    out2 = tmp_path / "out2"
+    rc = convert_main(
+        [str(missing), str(good), "--to", "md", "--output", str(out2), "--abort-on-error"]
+    )
+    assert rc == 1 and not (out2 / "table.md").exists()
+
+
+def test_cli_unknown_output_format_is_a_usage_error(tmp_path, capsys):
+    """An unknown --to name exits 2 with one error line instead of being
+    dropped while the known names are written."""
+    src = _write(tmp_path, "page.html", HTML)
+    out = tmp_path / "out"
+    with pytest.raises(SystemExit) as exc:
+        convert_main([str(src), "--to", "mdx,json", "--output", str(out)])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert "unknown output format(s) mdx" in err and "Traceback" not in err
+    assert not out.exists()
+    assert convert_main([str(src), "--to", "md,json", "--output", str(out)]) == 0
+    assert sorted(p.name for p in out.iterdir()) == ["page.json", "page.md"]
