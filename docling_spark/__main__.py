@@ -133,6 +133,12 @@ def convert_main(argv: list[str]) -> int:
                 if res.status == "failure":
                     raise RuntimeError(res.error or res.status)
                 outputs = {"md": res.text, "text": res.text}
+                dropped = [to for to in args.to if to not in outputs]
+                if dropped:
+                    print(
+                        f"skipped {path.name} outputs {','.join(dropped)}: "
+                        "the PDF text path writes md and text only"
+                    )
             else:
                 routed = _doc_backend(fmt, raw, path.name, "none")
                 if routed is None:
@@ -155,11 +161,11 @@ def convert_main(argv: list[str]) -> int:
             if args.abort_on_error:
                 return 1
             continue
-        for to in args.to:
-            content = outputs.get(to)
-            if content is not None:
-                (outdir / (path.stem + ext_map[to])).write_text(content)
-        print(f"converted {path.name}")
+        written = [to for to in args.to if outputs.get(to) is not None]
+        for to in written:
+            (outdir / (path.stem + ext_map[to])).write_text(outputs[to])
+        if written:
+            print(f"converted {path.name}")
     return 1 if failures else 0
 
 

@@ -27,16 +27,19 @@ Scale design notes
 from __future__ import annotations
 
 import importlib
+import io
 import re
+import threading
 import time
+import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
-from functools import reduce
+from functools import cached_property, reduce
 from operator import and_, or_
 from typing import Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .schema import EXTRACTED_SCHEMA, LINEAGE_SCHEMA
@@ -157,32 +160,50 @@ def _jvm_atom(atom):
     return _csv_sniff(F.col("_head"))
 
 
+# (py4j gateway, probe columns, CaseWhen) — see _dispatch_columns
+_dispatch_memo: tuple = (None, None, None)
+_dispatch_lock = threading.Lock()
+
+
+def _dispatch_columns() -> tuple[dict, object]:
+    """The probe columns and DISPATCH_RULES compiled to one CaseWhen, built
+    once per py4j gateway. Compiling the table is hundreds of py4j calls
+    (0.4–0.6 s); the Columns are unresolved expressions bound by column
+    name, so every frame can reuse them. The lock makes concurrent chunk
+    threads build them once."""
+    global _dispatch_memo
+    from pyspark import SparkContext
+
+    with _dispatch_lock:
+        if _dispatch_memo[0] is not SparkContext._gateway:
+            # Probe inputs are materialized ONCE in a preceding projection:
+            # CaseWhen branches get no cross-branch subexpression
+            # elimination, so inline probes would re-slice the blob (and
+            # re-run the extension regex) on every branch a fall-through row
+            # reaches. The cast is lenient (invalid UTF-8 → replacement
+            # chars; F.decode would raise on binary crawl blobs). The zip
+            # windows stay INSIDE the chain: only rows starting with "PK"
+            # reach them (short-circuit &&).
+            head_bin = F.substring(F.col("html"), 1, PREFIX_BYTES)
+            probes = {
+                "_magic": F.substring(F.col("html"), 1, MAGIC_BYTES),
+                "_head_bin": head_bin,
+                "_head": head_bin.cast("string"),
+                "_ext": F.lower(F.regexp_extract(F.col("url"), _EXT_RE, 1)),
+            }
+            case = F  # F.when opens the CaseWhen, Column.when extends it
+            for rule in DISPATCH_RULES:
+                alts = (reduce(and_, map(_jvm_atom, a)) for a in _alternatives(rule))
+                case = case.when(reduce(or_, alts), rule[0])
+            _dispatch_memo = (SparkContext._gateway, probes, case.otherwise("other"))
+        return _dispatch_memo[1:]
+
+
 def with_content_type(df: DataFrame) -> DataFrame:
     """Add the dispatch column: DISPATCH_RULES compiled to one CaseWhen.
     Pure JVM expressions — no Python."""
-    # Probe inputs are materialized ONCE in a preceding projection:
-    # CaseWhen branches get no cross-branch subexpression elimination, so
-    # inline probes would re-slice the blob (and re-run the extension
-    # regex) on every branch a fall-through row reaches. The cast is
-    # lenient (invalid UTF-8 → replacement chars; F.decode would raise on
-    # binary crawl blobs). The zip windows stay INSIDE the chain: only rows
-    # starting with "PK" reach them (short-circuit &&).
-    head_bin = F.substring(F.col("html"), 1, PREFIX_BYTES)
-    df = df.withColumns(
-        {
-            "_magic": F.substring(F.col("html"), 1, MAGIC_BYTES),
-            "_head_bin": head_bin,
-            "_head": head_bin.cast("string"),
-            "_ext": F.lower(F.regexp_extract(F.col("url"), _EXT_RE, 1)),
-        }
-    )
-    case = F  # F.when opens the CaseWhen, Column.when extends it
-    for rule in DISPATCH_RULES:
-        alts = (reduce(and_, map(_jvm_atom, alt)) for alt in _alternatives(rule))
-        case = case.when(reduce(or_, alts), rule[0])
-    return df.withColumn("content_type", case.otherwise("other")).drop(
-        "_magic", "_head_bin", "_head", "_ext"
-    )
+    probes, case = _dispatch_columns()
+    return df.withColumns(probes).withColumn("content_type", case).drop(*probes)
 
 
 def _csv_sniff(head):
@@ -514,11 +535,16 @@ def extract_pages(
     (see ops/corpus.synth_pages) or pass an explicit width. The runner
     computes the width once per run, not once per chunk.
     """
-    df = with_content_type(pages)
-    df = df.withColumn("doc_hash", F.sha2(F.col("html"), 256))
+    # with_content_type plus doc_hash and the oversize override in two
+    # projections: each DataFrame step is an eager JVM analysis, and the
+    # optimized plan is the same as with one step per column
+    probes, case = _dispatch_columns()
     oversize = F.length(F.col("html")) > F.lit(max_bytes)
-    df = df.withColumn(
-        "content_type", F.when(oversize, F.lit("oversize")).otherwise(F.col("content_type"))
+    df = pages.withColumns(probes).withColumns(
+        {
+            "content_type": F.when(oversize, F.lit("oversize")).otherwise(case),
+            "doc_hash": F.sha2(F.col("html"), 256),
+        }
     )
     if shuffle_partitions:
         df = _route_skew(df, shuffle_partitions, salt)
@@ -590,12 +616,21 @@ class RunConfig:
     max_concurrent_chunks: int = 4
 
 
+# Every status _extract_one writes. A chunk's lineage row counts each one
+# from an Observation on the chunk's write, so a new status must be added
+# here.
+STATUSES = ("success", "partial_success", "failure", "skipped", "needs_ocr")
+
+
 class ExtractionRunner:
     """Chunked, resumable execution of ``extract_pages``.
 
     Layout:
         {output}/data/run_id={run}/chunk_id={k}/*.parquet   (atomic per chunk)
         {output}/lineage/*.parquet                           (append-only)
+
+    A chunk is one Spark job, its parquet write: the lineage metrics are
+    observed on that write, and the driver writes the lineage row itself.
     """
 
     def __init__(self, spark: SparkSession, cfg: RunConfig):
@@ -606,28 +641,61 @@ class ExtractionRunner:
     def _lineage_path(self) -> str:
         return f"{self.cfg.output_path}/lineage"
 
+    @cached_property
+    def _lineage_dir(self):
+        """The lineage directory's FileSystem (the store Spark writes to:
+        local, HDFS, s3a, ...), its Hadoop Path and the Path class, looked
+        up once per runner: every py4j lookup is a round trip."""
+        sc = self.spark.sparkContext
+        path_cls = sc._jvm.org.apache.hadoop.fs.Path
+        path = path_cls(self._lineage_path())
+        return path.getFileSystem(sc._jsc.hadoopConfiguration()), path, path_cls
+
     def committed_chunks(self) -> set[int]:
-        try:
-            rows = (
-                self.spark.read.schema(LINEAGE_SCHEMA)
-                .parquet(self._lineage_path())
-                .filter(F.col("run_id") == self.cfg.run_id)
-                .select("chunk_id")
-                .collect()
-            )
-            return {r.chunk_id for r in rows}
-        except Exception:
+        """Chunk ids with a lineage row for this run. Only a missing lineage
+        directory means none: any other read error propagates, because a
+        corrupt lineage read as empty would re-extract every chunk and
+        append a second lineage row for each."""
+        fs, lineage, _ = self._lineage_dir
+        if not fs.exists(lineage):
             return set()
+        rows = (
+            self.spark.read.schema(LINEAGE_SCHEMA)
+            .parquet(self._lineage_path())
+            .filter(F.col("run_id") == self.cfg.run_id)
+            .select("chunk_id")
+            .collect()
+        )
+        return {r.chunk_id for r in rows}
 
     def _append_lineage(self, row: dict) -> None:
-        df = self.spark.createDataFrame([row], schema=LINEAGE_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self._lineage_path())
+        """Append one lineage row without a Spark job: pyarrow encodes it in
+        memory, the Hadoop FileSystem creates it under a '.'-prefixed name
+        (which Spark's readers skip) and renames it into place."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        buf = io.BytesIO()
+        table = pa.Table.from_pylist([row], schema=to_arrow_schema(LINEAGE_SCHEMA))
+        pq.write_table(table, buf)
+        fs, lineage, Path = self._lineage_dir
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = Path(lineage, f".{name}.tmp")
+        stream = fs.create(tmp, False)
+        try:
+            stream.write(buf.getvalue())
+        finally:
+            stream.close()
+        if not fs.rename(tmp, Path(lineage, name)):
+            raise IOError(f"could not rename {tmp} to {name} in {lineage}")
 
     # -- execution ------------------------------------------------------------
     def _run_chunk(self, pages: DataFrame, k: int, shuffle_partitions) -> dict:
-        """One chunk job: extract → atomic parquet write → metrics row.
-        Runs on a driver pool thread; Spark local properties are
-        thread-local, so each chunk lands in the FAIR pool "chunks"."""
+        """One chunk job: extract → atomic parquet write, with the metrics
+        row observed on the write. Runs on a driver pool thread; Spark
+        local properties are thread-local, so each chunk lands in the FAIR
+        pool "chunks"."""
         cfg = self.cfg
         t0 = time.perf_counter()
         try:
@@ -645,24 +713,25 @@ class ExtractionRunner:
             salt=k,
             pdf_password=cfg.pdf_password,
         )
+        metrics = Observation(f"chunk-{cfg.run_id}-{k}")
+        out = out.observe(
+            metrics,
+            F.count("*").alias("url_count"),
+            F.sum(F.coalesce("n_chars", F.lit(0))).alias("byte_count"),
+            *(F.count_if(F.col("status") == s).alias(s) for s in STATUSES),
+        )
         path = f"{cfg.output_path}/data/run_id={cfg.run_id}/chunk_id={k}"
         out.write.mode("overwrite").parquet(path)
-        # post-commit metrics from the just-written files (cheap scan of
-        # one chunk; avoids caching the UDF output twice)
-        written = self.spark.read.parquet(path)
-        agg = written.groupBy("status").agg(
-            F.count("*").alias("n"),
-            F.sum(F.coalesce("n_chars", F.lit(0))).alias("b"),
-        ).collect()
-        url_count = int(sum(r.n for r in agg))
+        m = metrics.get
+        url_count = int(m["url_count"])
         wall = time.perf_counter() - t0
         return {
             "run_id": cfg.run_id,
             "chunk_id": k,
             "num_chunks": cfg.num_chunks,
             "url_count": url_count,
-            "byte_count": int(sum(r.b or 0 for r in agg)),
-            "status_counts": {r.status: r.n for r in agg},
+            "byte_count": int(m["byte_count"] or 0),
+            "status_counts": {s: int(m[s]) for s in STATUSES if m[s]},
             "wall_sec": wall,
             "docs_per_sec": url_count / wall if wall > 0 else 0.0,
             "committed_at": datetime.now(timezone.utc),
@@ -670,6 +739,11 @@ class ExtractionRunner:
 
     def run(self, pages: DataFrame) -> dict:
         cfg = self.cfg
+        done = self.committed_chunks()
+        stats = {"chunks_total": cfg.num_chunks, "chunks_skipped": len(done)}
+        pending = [k for k in range(cfg.num_chunks) if k not in done]
+        if not pending:
+            return stats
         if cfg.dedup_latest:
             pages = dedup_latest_crawl(pages)
         pages = pages.withColumn(
@@ -688,9 +762,6 @@ class ExtractionRunner:
                     shuffle_partitions = default_par
             except Exception:
                 shuffle_partitions = None
-        done = self.committed_chunks()
-        stats = {"chunks_total": cfg.num_chunks, "chunks_skipped": len(done)}
-        pending = [k for k in range(cfg.num_chunks) if k not in done]
         workers = max(1, int(cfg.max_concurrent_chunks))
         if workers == 1 or len(pending) <= 1:
             for k in pending:
@@ -703,7 +774,6 @@ class ExtractionRunner:
         # an append only happens after its chunk's atomic write returned,
         # so a kill mid-run still leaves exactly the committed prefix set
         # (resume semantics identical to the serial path).
-        import threading
         from concurrent.futures import ThreadPoolExecutor
 
         lineage_lock = threading.Lock()

@@ -86,7 +86,7 @@ def _write(tmp_path, name: str, raw: bytes):
 
 
 @pytest.mark.parametrize("name", sorted(CONVERTED))
-def test_cli_output_equals_job_core(tmp_path, name):
+def test_cli_output_equals_job_core(tmp_path, capsys, name):
     raw, fmt = CONVERTED[name]
     assert sniff_content_type(name, raw) == fmt
     src = _write(tmp_path, name, raw)
@@ -100,8 +100,13 @@ def test_cli_output_equals_job_core(tmp_path, name):
     stem = src.stem
     assert (out / f"{stem}.md").read_text() == want["extracted_text"]
     assert (out / f"{stem}.txt").read_text() == want["extracted_text"]
-    if fmt == "pdf":  # the PDF text path writes md/text only
+    if fmt == "pdf":  # the PDF text path writes md/text only, and says so
         assert sorted(p.name for p in out.iterdir()) == [f"{stem}.md", f"{stem}.txt"]
+        assert capsys.readouterr().out.splitlines() == [
+            f"skipped {name} outputs itxt,json,html,doctags: "
+            "the PDF text path writes md and text only",
+            f"converted {name}",
+        ]
         return
     assert (out / f"{stem}.itxt").read_text() == want["itxt"]
     assert (out / f"{stem}.json").read_text() == want["doc_json"]
@@ -118,6 +123,18 @@ def test_cli_skips_unsupported_types(tmp_path, capsys, name):
     out = tmp_path / "out"
     assert convert_main([str(src), "--to", "md", "--output", str(out)]) == 0
     assert f"skipped {name}: unsupported format {fmt}" in capsys.readouterr().out
+    assert list(out.iterdir()) == []
+
+
+def test_cli_pdf_without_text_outputs_reports_the_skip(tmp_path, capsys):
+    """A PDF asked only for outputs its text path cannot write names them,
+    writes nothing and does not claim it converted the file."""
+    src = _write(tmp_path, "doc.pdf", CONVERTED["doc.pdf"][0])
+    out = tmp_path / "out"
+    assert convert_main([str(src), "--to", "json,itxt", "--output", str(out)]) == 0
+    assert capsys.readouterr().out.splitlines() == [
+        "skipped doc.pdf outputs json,itxt: the PDF text path writes md and text only"
+    ]
     assert list(out.iterdir()) == []
 
 
