@@ -611,8 +611,8 @@ class RunConfig:
     pdf_password: str = ""  # standard-security-handler password (pdfx/crypt)
     # concurrent chunk jobs (driver-side thread pool + FAIR scheduler pool):
     # >1 keeps the cluster busy through each chunk's job tail while
-    # preserving the per-chunk atomic commit + lineage append. 1 = the
-    # round-2 serial behavior.
+    # preserving the per-chunk atomic commit + lineage append. 1 runs the
+    # chunks one at a time.
     max_concurrent_chunks: int = 4
 
 
@@ -762,31 +762,33 @@ class ExtractionRunner:
                     shuffle_partitions = default_par
             except Exception:
                 shuffle_partitions = None
-        workers = max(1, int(cfg.max_concurrent_chunks))
-        if workers == 1 or len(pending) <= 1:
-            for k in pending:
-                self._append_lineage(
-                    self._run_chunk(pages, k, shuffle_partitions)
-                )
-            return stats
-        # bounded driver pool: chunk k's job tail overlaps chunk k+1's ramp.
-        # The lineage append stays on the SUBMITTING thread under a lock —
-        # an append only happens after its chunk's atomic write returned,
-        # so a kill mid-run still leaves exactly the committed prefix set
-        # (resume semantics identical to the serial path).
+        # bounded driver pool (one worker = a serial run): chunk k's job tail
+        # overlaps chunk k+1's ramp. An append follows its chunk's atomic
+        # write, under a lock, so a kill leaves exactly the committed chunks.
+        # After a failure no chunk starts; running ones finish and append.
+        # A flag, not Future.cancel: a worker that just failed would take the
+        # next queued chunk before the driver could cancel it.
         from concurrent.futures import ThreadPoolExecutor
 
         lineage_lock = threading.Lock()
+        failed = threading.Event()
 
         def submit(k: int) -> None:
-            row = self._run_chunk(pages, k, shuffle_partitions)
-            with lineage_lock:
-                self._append_lineage(row)
+            if failed.is_set():
+                return
+            try:
+                row = self._run_chunk(pages, k, shuffle_partitions)
+                with lineage_lock:
+                    self._append_lineage(row)
+            except BaseException:
+                failed.set()
+                raise
 
+        workers = max(1, min(int(cfg.max_concurrent_chunks), len(pending)))
         with ThreadPoolExecutor(max_workers=workers) as pool:
             futures = [pool.submit(submit, k) for k in pending]
-            for f in futures:
-                f.result()  # propagate the first failure
+        for f in futures:
+            f.result()  # re-raise the first failure in chunk order
         return stats
 
     def read_output(self) -> DataFrame:

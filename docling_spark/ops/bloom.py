@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_HEX = "0123456789abcdef"
+from .hll import md5int32
 
 DEFAULT_M = 1 << 18  # bits; n=10^4 keys, k=3 -> FP = (1-e^(-kn/m))^k ~ 1.3e-3
 DEFAULT_K = 3  # (5e-5 needs n ~ 2000 at this m; size m ~ 1.44·n·log2(1/p) bits)
@@ -53,11 +53,7 @@ BROADCAST_M_CEILING = 1 << 26
 def _hash_pos(key: Column, i: int, m: int) -> Column:
     """Bit position of hash #i: first 8 md5 nibbles of ('bloom:i:'||key),
     Horner-accumulated, mod m."""
-    h = F.md5(F.concat(F.lit(f"bloom:{i}:"), key.cast("string")))
-    val = F.lit(0).cast("long")
-    for j in range(8):
-        nib = F.instr(F.lit(_HEX), F.substring(h, j + 1, 1)) - 1
-        val = val * 16 + nib.cast("long")
+    val = md5int32(F.concat(F.lit(f"bloom:{i}:"), key.cast("string")))
     return (val % m).cast("long")
 
 

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .tokens import words
+
 __all__ = ["bm25_scores", "bm25_oracle_sql"]
 
 QUANT = 1024  # idf quantization denominator (dyadic => exact products)
@@ -41,12 +43,6 @@ B = 0.75
 
 def _eq_term(w: str):
     return lambda t: t == F.lit(w)
-
-
-def _toks(text: Column) -> Column:
-    return F.filter(
-        F.split(F.lower(text), r"\s+"), lambda t: F.length(t) > 0
-    )
 
 
 def bm25_scores(
@@ -64,7 +60,7 @@ def bm25_scores(
             "bm25_scores needs at least one query term (did upstream "
             "normalization drop them all?)"
         )
-    toks = _toks(F.col(text_col))
+    toks = words(F.col(text_col))
     base = docs.select(
         "doc_id",
         F.size(toks).alias("dl"),

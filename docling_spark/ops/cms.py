@@ -20,8 +20,10 @@ min. Zero Python. No reference counterpart.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .hll import md5int32
 
 __all__ = [
     "cms_counters",
@@ -32,15 +34,6 @@ __all__ = [
 ]
 
 _HEX = "0123456789abcdef"
-
-
-def _md5int32(col: Column) -> Column:
-    h = F.md5(col)
-    val = F.lit(0).cast("long")
-    for i in range(8):
-        nib = F.instr(F.lit(_HEX), F.substring(h, i + 1, 1)) - 1
-        val = val * 16 + nib.cast("long")
-    return val
 
 
 def _md5int32_sql(expr: str) -> str:
@@ -61,7 +54,7 @@ def cms_counters(
             F.struct(
                 F.lit(i).alias("r"),
                 (
-                    _md5int32(F.concat(F.lit(f"{i}:"), F.col(key_col)))
+                    md5int32(F.concat(F.lit(f"{i}:"), F.col(key_col)))
                     % F.lit(w)
                 )
                 .cast("int")
@@ -100,7 +93,7 @@ def cms_estimates(
                     F.struct(
                         F.lit(i).alias("r"),
                         (
-                            _md5int32(
+                            md5int32(
                                 F.concat(F.lit(f"{i}:"), F.col(key_col))
                             )
                             % F.lit(w)

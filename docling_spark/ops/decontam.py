@@ -23,15 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+from .tokens import words
 
 
 def ngram_hashes(text: Column, n: int = 13) -> Column:
     """Array of md5 hashes of the space-joined token N-grams of ``text``
     (one full-sequence gram when the doc is shorter than N tokens)."""
-    toks = _tokens(text)
+    toks = words(text)
     sz = F.size(toks)
     n_eff = F.least(F.lit(n), sz)
     starts = F.sequence(F.lit(1), sz - n_eff + 1)
@@ -65,7 +63,7 @@ def scrub_contaminated_spans(
     join-back into a broadcast join at runtime when the hit set is small
     (the common case); the rebuild is an in-row indexed lambda filter,
     the same pattern as C4 span removal (ops/c4.py)."""
-    toks = _tokens(F.col(text_col))
+    toks = words(F.col(text_col))
     sz = F.size(toks)
     n_eff = F.least(F.lit(n), sz)
     grams = docs.select(

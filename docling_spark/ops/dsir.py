@@ -42,6 +42,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .tokens import bucket, words
+
 N_BUCKETS = 64
 KEEP_FRAC = 0.25
 _Q = 1 << 20  # dyadic quantum 2^-20
@@ -52,24 +54,18 @@ def _qlog(x: Column) -> Column:
     return F.round(F.log(x) * _Q, 0) / _Q
 
 
-def _bucket(s: Column, n_buckets: int) -> Column:
-    return F.conv(F.substring(F.md5(s), 1, 3), 16, 10).cast("int") % n_buckets
-
-
 def _features(text: Column, n_buckets: int) -> Column:
     """Array of hashed unigram+bigram bucket ids (occurrences, not set)."""
-    words = F.filter(
-        F.split(F.lower(text), r"\s+"), lambda w: w != F.lit("")
-    )
-    nw = F.size(words)
-    unis = F.transform(words, lambda w: _bucket(w, n_buckets))
+    toks = words(text)
+    nw = F.size(toks)
+    unis = F.transform(toks, lambda w: bucket(w, n_buckets))
     bis = F.when(
         nw >= 2,
         F.transform(
             F.sequence(F.lit(1), nw - 1),
-            lambda i: _bucket(
+            lambda i: bucket(
                 F.concat_ws(
-                    " ", F.element_at(words, i), F.element_at(words, i + 1)
+                    " ", F.element_at(toks, i), F.element_at(toks, i + 1)
                 ),
                 n_buckets,
             ),

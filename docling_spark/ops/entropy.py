@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .tokens import words
+
 __all__ = ["entropy_signals", "entropy_oracle_sql"]
 
 QUANT = 1 << 20  # per-term quantization (finer than lm_quality's 1/1024:
@@ -61,19 +63,17 @@ def _entropy(symbols: Column) -> Column:
 
 def entropy_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, text) -> char/word unigram entropy + distinct counts."""
-    from .bm25 import _toks  # the one whitespace tokenizer, oracle-mirrored
-
     t = F.col(text_col)
     chars = F.filter(F.split(t, ""), lambda c: F.length(c) > 0)
-    words = _toks(t)
+    ws = words(t)
     return docs.select(
         "doc_id",
         F.size(chars).alias("n_chars"),
         F.size(F.array_distinct(chars)).alias("n_distinct_chars"),
         _entropy(chars).alias("char_entropy"),
-        F.size(words).alias("n_words"),
-        F.size(F.array_distinct(words)).alias("n_distinct_words"),
-        _entropy(words).alias("word_entropy"),
+        F.size(ws).alias("n_words"),
+        F.size(F.array_distinct(ws)).alias("n_distinct_words"),
+        _entropy(ws).alias("word_entropy"),
     )
 
 

@@ -9,7 +9,8 @@ value-oracled. This module builds classic HLL from scratch on the
 portable md5 hash so the whole sketch — registers, harmonic sum,
 estimate — is bit-reproducible on Spark AND DuckDB:
 
-- 32-bit key hash = the md5-Horner bigint (``ops/sampling`` idiom);
+- 32-bit key hash = the md5-Horner bigint :func:`md5int32` (also the
+  cms, bloom and sampling hash);
 - bucket = top ``b`` bits; ``rho`` = 1 + leading zeros of the
   remaining ``32-b`` bits, computed by an INTEGER comparison chain
   (never ``floor(log2(w))`` — a power-of-two ``w`` could round to
@@ -49,7 +50,8 @@ __all__ = [
 _HEX = "0123456789abcdef"
 
 
-def _md5int32(col: Column) -> Column:
+def md5int32(col: Column) -> Column:
+    """The first 8 hex digits of md5(string(col)) as a bigint."""
     h = F.md5(col.cast("string"))
     val = F.lit(0).cast("long")
     for i in range(8):
@@ -93,7 +95,7 @@ def hll_registers(
     (:func:`hll_estimate_from_registers`)."""
     low_bits = 32 - b
     gcols = list(group_cols or [])
-    val = _md5int32(F.col(key_col))
+    val = md5int32(F.col(key_col))
     bucket = F.floor(val / F.lit(1 << low_bits)).cast("int")
     w = val % F.lit(1 << low_bits)
     rho = F.lit(low_bits + 1)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tokens import words
+
 OOV_NLL = 16.0  # unseen-token penalty, ~e^-16 mass
 QUANT = 1024  # logprob quantization denominator (dyadic => exact sums)
 
@@ -32,10 +34,8 @@ QUANT = 1024  # logprob quantization denominator (dyadic => exact sums)
 def train_unigram_lm(ref_docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(token, nll) from a trusted reference slice: nll = ln(total/count),
     quantized to 1/QUANT. The CCNet 'train on Wikipedia' step."""
-    words = ref_docs.select(
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token")
-    ).filter(F.col("token") != "")
-    counts = words.groupBy("token").agg(F.count("*").alias("cnt"))
+    toks = ref_docs.select(F.explode(words(F.col(text_col))).alias("token"))
+    counts = toks.groupBy("token").agg(F.count("*").alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
     return (
         counts.crossJoin(F.broadcast(total))
@@ -60,10 +60,7 @@ BACKOFF_NLL = round(__import__("math").log(1.0 / BACKOFF_ALPHA) * QUANT) / QUANT
 
 def _pairs(text_col: str):
     """In-row (prev, cur) bigram structs of the whitespace tokens."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"),
-        lambda t: F.length(t) > 0,
-    )
+    toks = words(F.col(text_col))
     n = F.size(toks)
     return F.when(
         n >= 2,
@@ -116,10 +113,7 @@ def bigram_score(
     Scale shape mirrors lm_score: in-row item construction (rows stay
     in their partitions), two broadcast joins against the LM tables,
     one slim (doc_id, n, sum) partial-agg exchange."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"),
-        lambda t: F.length(t) > 0,
-    )
+    toks = words(F.col(text_col))
     n = F.size(toks)
     items = F.when(
         n >= 1,
@@ -170,9 +164,8 @@ def lm_score(
     (monotone in unigram perplexity). Docs whose text tokenizes to
     nothing produce no row (the corpus contract guarantees tokens)."""
     tokens = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token"),
-    ).filter(F.col("token") != "")
+        "doc_id", F.explode(words(F.col(text_col))).alias("token")
+    )
     scored = (
         tokens.join(F.broadcast(lm), "token", "left")
         .groupBy("doc_id")

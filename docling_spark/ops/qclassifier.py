@@ -48,6 +48,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .tokens import bucket, words
+
 N_BUCKETS = 64
 ITERS = 4
 LR = 64.0  # full-batch GD over length-normalized features (sum_b x = 1)
@@ -69,14 +71,9 @@ def _qpy(x: float) -> float:
     return (math.floor(s + 0.5) if s >= 0 else math.ceil(s - 0.5)) / _Q
 
 
-def _bucket(s: Column, n_buckets: int) -> Column:
-    return F.conv(F.substring(F.md5(s), 1, 3), 16, 10).cast("int") % n_buckets
-
-
 def _doc_features(text: Column, n_buckets: int) -> Column:
     """Array of hashed unigram bucket ids (occurrences)."""
-    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != F.lit(""))
-    return F.transform(words, lambda w: _bucket(w, n_buckets))
+    return F.transform(words(text), lambda w: bucket(w, n_buckets))
 
 
 def train_quality_classifier(

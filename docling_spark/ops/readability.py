@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tokens import words
+
 __all__ = ["readability", "readability_oracle_sql"]
 
 
@@ -64,12 +66,10 @@ def readability(docs: DataFrame) -> DataFrame:
     # inlining), so computing ari/coleman/flesch straight off the raw
     # split would tokenize the text ~8 times per row. After this
     # projection each count is a column reference — one pass per doc.
-    words = F.filter(
-        F.split(F.col("text"), r"\s+"), lambda w: F.length(w) > 0
-    )
+    ws = words(F.col("text"))
     counted = docs.select(
         "doc_id",
-        F.size(words).cast("bigint").alias("n_words"),
+        F.size(ws).cast("bigint").alias("n_words"),
         F.greatest(
             F.lit(1).cast("bigint"),
             F.size(
@@ -83,16 +83,12 @@ def readability(docs: DataFrame) -> DataFrame:
         .cast("bigint")
         .alias("n_letters"),
         F.aggregate(
-            words,
+            ws,
             F.lit(0).cast("bigint"),
             lambda acc, w: acc
             + F.greatest(
                 F.lit(1),
-                F.size(
-                    F.regexp_extract_all(
-                        F.lower(w), F.lit(r"[aeiouy]+"), 0
-                    )
-                ),
+                F.size(F.regexp_extract_all(w, F.lit(r"[aeiouy]+"), 0)),
             ).cast("bigint"),
         ).alias("n_syllables"),
     )

@@ -28,17 +28,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_HEX = "0123456789abcdef"
+from .hll import md5int32
 
 
 def hash_frac(key: Column, salt: str = "") -> Column:
     """Uniform [0,1) from the first 8 hex nibbles of md5(salt || key) —
     built from strpos arithmetic so Spark and DuckDB agree bit-for-bit."""
-    h = F.md5(F.concat(F.lit(salt), key.cast("string")))
-    val = F.lit(0).cast("long")
-    for i in range(8):
-        nib = F.instr(F.lit(_HEX), F.substring(h, i + 1, 1)) - 1
-        val = val * 16 + nib.cast("long")
+    val = md5int32(F.concat(F.lit(salt), key.cast("string")))
     return val / F.lit(float(2**32))
 
 

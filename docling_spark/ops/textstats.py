@@ -11,6 +11,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .tokens import words
+
 STOPWORDS = ["the", "a", "of", "and", "to", "in"]
 
 
@@ -94,9 +96,7 @@ def vocab_topk(docs: DataFrame, k: int = 50) -> DataFrame:
     (per-partition heaps, no global sort materialization); the two
     corpus constants ride a 1-row broadcast crossJoin. Zero Python.
     """
-    toks = docs.select(
-        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
-    ).where(F.length("tok") > 0)
+    toks = docs.select(F.explode(words(F.col("text"))).alias("tok"))
     tf = toks.groupBy("tok").agg(F.count("*").alias("tf"))
     consts = tf.agg(
         F.sum("tf").alias("total_tokens"),

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .tokens import words
+
 __all__ = ["tfidf_top_terms", "tfidf_oracle_sql"]
 
 QUANT = 1024
@@ -43,9 +45,7 @@ def tfidf_top_terms(
     tf·idf, ties broken by term ascending. Terms present in more than
     ``max_df_frac`` of docs (stop-words — also the skewed join keys)
     are dropped before scoring."""
-    from .bm25 import _toks  # the one whitespace tokenizer, oracle-mirrored
-
-    toks = _toks(F.col(text_col))
+    toks = words(F.col(text_col))
     tf = (
         docs.select("doc_id", F.explode(toks).alias("term"))
         .groupBy("doc_id", "term")

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tokens import words
+
 __all__ = ["sliding_windows", "sliding_windows_oracle_sql"]
 
 
@@ -35,9 +37,7 @@ def sliding_windows(
     """
     if not (0 < stride <= size):
         raise ValueError("need 0 < stride <= size")
-    from .bm25 import _toks  # the one whitespace tokenizer
-
-    toks = _toks(F.col(text_col))
+    toks = words(F.col(text_col))
     base = docs.select("doc_id", toks.alias("__toks"))
     ntok = F.size("__toks")
     n_win = (

@@ -25,7 +25,7 @@ import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from .job import CONTENT_TYPES, _extract_one, sniff_content_type
+from .job import CONTENT_TYPES, DOC_TIMEOUT_S, _extract_one, sniff_content_type
 
 SUPPORTED_INPUTS = list(CONTENT_TYPES)
 OUTPUT_FORMATS = ["md", "text", "itxt", "json", "doctags"]
@@ -39,7 +39,7 @@ def convert_bytes(filename: str, raw: bytes) -> dict:
     record (status, error, outputs per format)."""
     fmt = sniff_content_type(filename, raw)
     res = _extract_one(
-        filename, raw, fmt, "none", 60.0, with_doc_json=True, with_doctags=True
+        filename, raw, fmt, "none", DOC_TIMEOUT_S, with_doc_json=True, with_doctags=True
     )
     outputs = {}
     if res.get("extracted_text") is not None:
