@@ -17,7 +17,8 @@ Inputs, all built in the repo (no reference corpus needed):
 - a truncated, a blank (needs_ocr) and an encrypted PDF, an HTML page
   with relative links, an empty blob, ``oversize`` and ``other``;
 - a minimal METS-GBS tar.gz: a ``PROFILE="gbs"`` manifest plus one hOCR
-  page.
+  page;
+- small HTML pages, one per path of the HTML walker (``HTML_CASES``).
 
 To regenerate after an intended output change, run
 ``PYTHONPATH=. python tests/test_backend_lock.py`` and paste the printed
@@ -82,6 +83,74 @@ HTML_LINKS = (
 )
 
 
+# HTML walker paths: tables, lists, links, removals, body/br rules, headings,
+# images and the depth cap; each body is wrapped in <html><body> unless it
+# carries its own document structure
+HTML_CASES = {
+    "thead_tbody": "<table><thead><tr><th>H1</th><th>H2</th></tr></thead>"
+    "<tbody><tr><td>a</td><td>b</td></tr></tbody></table>",
+    "thead_holds_tbody": "<table><thead><tr><th>H</th></tr>"
+    "<tbody><tr><td>a</td></tr></tbody></thead></table>",
+    "spans": "<table><tr><td colspan=2>wide</td><td rowspan=3>tall</td></tr>"
+    '<tr><td colspan="2x">two-x</td></tr>'
+    "<tr><td colspan=1000000000 rowspan=1000000000>bomb</td></tr></table>",
+    "th_rowspan_row": "<table><tr><th rowspan=2>R1</th><th rowspan=3>R2</th></tr>"
+    "<tr><td>a</td><td>b</td></tr><tr><td>c</td></tr></table>",
+    "rich_cells": "<table><tr><td><b>bold</b></td><td><a href='/c'>link</a></td>"
+    "<td>one<!-- c -->two</td><td><ul><li>l1</li><li>l2</li></ul></td>"
+    "<td>plain</td><td><img src='c.png' alt='cell img'></td></tr></table>",
+    "formula_block": "<table><tr><td><span>a <b>bold</b> "
+    "<inline-formula>$$<p>x</p>$$</inline-formula></span></td></tr></table>",
+    "formula_plain": "<table><tr><td><inline-formula>$$y^2$$</inline-formula> and"
+    "</td><td><i>f</i> <inline-formula>E=mc2</inline-formula></td></tr></table>",
+    "ul_in_ul": "<ul><li>a</li><ul><li>inner</li></ul><li>b</li></ul>",
+    "li_runs_sublist": "<ul><li>plain <b>bold</b> <a href='/l'>link</a>"
+    "<ol><li>sub1</li><li>sub2</li></ol></li><li>one<ul><li>s</li></ul></li>"
+    "<li><ul><li>only sub</li></ul></li></ul>",
+    "ol_start": "<ol start=5><li>five</li><li>six</li></ol><ol start=x><li>n</li></ol>",
+    "a_b_span": "<a href='/x'><b><span>deep link</span></b></a>"
+    "<p><a href='/y'><b><span>in p</span> <i>it</i></b></a></p>",
+    "a_empty_href": "<a href=''><span>empty</span></a> <a href>bare</a>"
+    "<a href='/outer'><a href=''><span>nested</span></a></a>"
+    "<p><a href=''>in p</a></p>",
+    "hidden_in_hidden": "<div hidden>out<div hidden>in</div></div><p>kept</p>"
+    "<span hidden=hidden>h</span>",
+    "noscript_holds": "<p>before</p><noscript>ns<br><span hidden>h</span>"
+    "<body>fake body<br>x</body></noscript><p>after<br>line</p>",
+    "two_bodies": "<html><body><p>first<br>b</p></body>"
+    "<body><p>second<br>b</p></body></html>",
+    "br_before_body": "<html><head><title>T</title></head>a<br>b"
+    "<body><p>c<br>d</p></body></html>",
+    "headings_in_table": "<p>intro</p><table><tr><td><h2>cell head</h2></td></tr>"
+    "</table><p>outro</p>",
+    "h1_h4": "<h1>Top</h1><p>x</p><h4>Deep</h4><p>y</p><h2>Mid</h2>",
+    "footer_details_pre": "<h2>S</h2><details><summary>sum</summary><p>d</p></details>"
+    "<footer><p>foot</p></footer><pre>line 1\n  line <b>2</b>\n</pre>",
+    "figure": "<figure><img src='f.png' alt='alt text'><figcaption>the "
+    "<i>caption</i></figcaption></figure><figure><img src='g.png' alt='only alt'>"
+    "</figure>",
+    "img_in_a": "<a href='/pic'><img src='p.png' alt='pic'></a>"
+    "<a href='/pic2'><img src='q.png'></a>"
+    "<a href='/outer'><a href=''><img src='n.png' alt='nested'></a></a>",
+    "over_max_depth": "<div>" * 420 + "<p>deep p</p><ul><li>deep li</li></ul>"
+    "<span>run <b>b</b></span><table><tr><td>t</td></tr></table>" + "</div>" * 420,
+    "title_in_body": "<p>a</p><title>Late <b>title</b></title><p>b</p>",
+    "removed_body_first": "<html><head><noscript><body>ns body</body></noscript>"
+    "</head><body><p>real</p></body></html>",
+    "removed_heading": "<h2 hidden>gone</h2><noscript><h1>ns</h1></noscript>"
+    "<p>body text</p>",
+    "annotation_above_body": "<html><sup><sub><a href='/o'><a href=''><body>"
+    "<p>x <i>y</i></p><a href='/in'><b><span>s</span></b></a>"
+    "</body></a></a></sub></sup></html>",
+}
+
+
+def _html_case(body: str) -> bytes:
+    if body.startswith("<html>"):
+        return body.encode()
+    return f"<html><body>{body}</body></html>".encode()
+
+
 def _mets_tar_gz() -> bytes:
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w") as tar:
@@ -138,6 +207,8 @@ def _cases() -> dict[str, tuple[str, bytes, str]]:
         "edge:other": (BASE + "notes.txt", b"plain prose\n", "other"),
         "edge:book.tar.gz": (BASE + "book.tar.gz", mets, sniff_content_type("book.tar.gz", mets)),
     })
+    for name, body in HTML_CASES.items():
+        cases[f"html:{name}"] = (BASE + f"{name}.html", _html_case(body), "html")
     return cases
 
 
@@ -240,6 +311,32 @@ DIGESTS = {
     "edge:oversize": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",
     "edge:other": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",
     "edge:book.tar.gz": "278d7cece4bf2314689b3d54ca4011d57d3f4f716bb86e86312ce38e4b9a0ba4",
+    "html:thead_tbody": "5827681b3a0c6bc98155baa2093c3024b78a96ed4e3a90d5c5530c5c15265bb6",
+    "html:thead_holds_tbody": "a11e13cd5076723969a2e8747bc00a0e4afb935b098fe774e32c846f0e4f4652",
+    "html:spans": "42e99b336021b3b34b738f082b45f6aad5e442fad0d2ba43afa9c77f24f45266",
+    "html:th_rowspan_row": "175fc8d991be40004d6836f60592b8983235dd2edce9ad49daa21fcb53b497f7",
+    "html:rich_cells": "bee27b7e3acdaa6d8752e505f00408f5dddf16f120c89be41c6d70b4378275ac",
+    "html:formula_block": "8ec6083a2961a3663ec169996a4f38ba98be7b6f28d35b379c2d50536d665958",
+    "html:formula_plain": "5c353594153722c98ec66f70e98b5c74cb4d543e14bcb4d07662f1e7afb55300",
+    "html:ul_in_ul": "d26bc43d81e68b7e8b376f03c84a7bc8050cd75b383bc0073ab5c0f7604ee736",
+    "html:li_runs_sublist": "913d50f2d16f2364c30341f5267f288bb3385801971222c705487fe3eb5a21ec",
+    "html:ol_start": "7ca1cee4643029e3566e08204c35cba3cec97f8435ad235d81ce5455d44e7b4d",
+    "html:a_b_span": "dafe1cc9e6877810df927530ba4c813a8b7b98d95cc977ded45e15d9366959b9",
+    "html:a_empty_href": "eff3fc03443225248e82c53bfbe3ff182548c804d50441f3129273d4f3f4083c",
+    "html:hidden_in_hidden": "20b19d8303e69725c50ff479af2e7e934b4dd9d57db885cd43c9c42b29bbfc9f",
+    "html:noscript_holds": "45bb2b7811b9b4734c1feb8dd30c8bf4caee76024e2c5eafad1679b63e28e889",
+    "html:two_bodies": "4fa38a05b10a2c3092cf9e9f60eb4450ba18d12e84cfff5a7b1969429c3478ad",
+    "html:br_before_body": "0fa031d437d070048eb935777681ec4616ab9be8bbe5f306e6aeef54ac84da8a",
+    "html:headings_in_table": "774d65d9b5133fa93e1ae4045df2283b9457c9cebca3a4e178b4a7d6b7c9c862",
+    "html:h1_h4": "b3fd301070d18704dceacfc91de459676b600a4fde64b1dea1ec3a9b1a357b7a",
+    "html:footer_details_pre": "ec3a0dd5cfb7f06ed5cc27944317a5a263e7f964ba39fd74b5ccc0a284ad1e9e",
+    "html:figure": "24a9d29316d9deb92479b801d312abf8659891a3b0ca0d51061c2a652c876ba2",
+    "html:img_in_a": "51eeb50c011d9b3585751682a980c1588a5636ae160fa71a8234482343527a0a",
+    "html:over_max_depth": "c6c3828e428a55a139bb94af0b3182035efcee9affd6540a3e3f2e8bae9197c1",
+    "html:title_in_body": "0c194c9d7425fe428cfdeaff044621520ddfd8e6aa5be2b0e584793b419f5dfb",
+    "html:removed_body_first": "d5966a3856fc25d6315f952e9633b67b912d7b6c94a007cb6ada70a6eaf15cf3",
+    "html:removed_heading": "80e15d2944a2c37cdc1faba2891a35c4cd2eb36ac16d5abcb927a9e357f66f69",
+    "html:annotation_above_body": "d365b80114cb15138a941a515629e357a2cac60c4b5727a25bb90733f577ed9f",
 }
 
 
