@@ -202,29 +202,10 @@ class Tag:
             if not advanced:
                 stack.pop()
 
-    def find_all(
-        self,
-        names: _NameFilter = None,
-        recursive: bool = True,
-        attr_presence: Optional[str] = None,
-    ) -> list:
-        """All descendant (or direct-child) Tags matching a name filter.
-
-        ``attr_presence`` matches tags that carry the given attribute, which
-        is how the reference selects ``soup(hidden=True)``
-        (html_backend.py:277).
-        """
-        out = []
+    def find_all(self, names: _NameFilter = None, recursive: bool = True) -> list:
+        """All descendant (or direct-child) Tags matching a name filter."""
         pool = self.descendants() if recursive else iter(self.contents)
-        for node in pool:
-            if not isinstance(node, Tag):
-                continue
-            if not _name_match(node, names):
-                continue
-            if attr_presence is not None and attr_presence not in node.attrs:
-                continue
-            out.append(node)
-        return out
+        return [n for n in pool if isinstance(n, Tag) and _name_match(n, names)]
 
     def __call__(self, names: _NameFilter = None, recursive: bool = True) -> list:
         return self.find_all(names, recursive=recursive)
@@ -262,6 +243,29 @@ class Tag:
         return self.get_text()
 
 
+INDEXED_TAGS = frozenset(
+    {"title", "script", "noscript", "style", "body", "br", "inline-formula"}
+    | {f"h{k}" for k in range(1, 7)}
+)
+
+
+class Document(Tag):
+    """The parse root: a ``Tag`` plus the tag index built during the parse.
+
+    ``index`` lists, in document order, every tag named in ``INDEXED_TAGS``
+    and every tag carrying a ``hidden`` attribute, so the extraction walker
+    serves its whole-document lookups without rescanning the tree. Entries
+    are never removed: a caller that detaches tags checks that an entry is
+    still attached before counting it.
+    """
+
+    __slots__ = ("index",)
+
+    def __init__(self) -> None:
+        super().__init__("[document]")
+        self.index: list[Tag] = []
+
+
 class _TreeParser(HTMLParser):
     """Feeds the stdlib token stream into a Tag tree.
 
@@ -274,40 +278,39 @@ class _TreeParser(HTMLParser):
     # a newline) or " ", unless inside a whitespace-preserving tag; and
     # consecutive handle_data chunks merge into ONE string node (bs4 buffers
     # in current_data and flushes at tag boundaries via endData)
-    _ASCII_SPACES = frozenset(" \n\t\x0c\r")
+    _ASCII_SPACES = " \n\t\x0c\r"
     _PRESERVE_WS = frozenset({"pre", "textarea"})
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self.root = Tag("[document]")
+        self.root = Document()
         self._open: list[Tag] = [self.root]
         self._data_buf: list[str] = []
         self._preserve_depth = 0
 
-    def _top(self) -> Tag:
-        return self._open[-1]
-
     def _flush_data(self) -> None:
-        if not self._data_buf:
-            return
+        """Append the buffered text as one node; call only with a non-empty
+        buffer."""
         data = "".join(self._data_buf)
         self._data_buf.clear()
-        if not data:
-            return
-        if self._preserve_depth == 0 and all(
-            c in self._ASCII_SPACES for c in data
-        ):
+        if self._preserve_depth == 0 and not data.strip(self._ASCII_SPACES):
             data = "\n" if "\n" in data else " "
-        self._top().append_child(TextNode(data))
+        self._open[-1].append_child(TextNode(data))
 
-    @staticmethod
-    def _attr_dict(attrs) -> dict:
+    def _add_tag(self, name: str, attrs) -> Tag:
+        if self._data_buf:
+            self._flush_data()
         d: dict = {}
         for k, v in attrs:
-            if k in d:  # first occurrence wins
-                continue
-            d[k] = "" if v is None else v
-        return d
+            if k not in d:  # first occurrence wins
+                d[k] = "" if v is None else v
+        tag = Tag(name, d)
+        top = self._open[-1]
+        tag.parent = top
+        top.contents.append(tag)
+        if name in INDEXED_TAGS or "hidden" in d:
+            self.root.index.append(tag)
+        return tag
 
     # hostile-input hardening: a 10^4-deep <div> nest would blow the
     # recursion limit of every later tree walk; html.parser itself has no
@@ -316,21 +319,18 @@ class _TreeParser(HTMLParser):
     MAX_DEPTH = 400
 
     def handle_starttag(self, name, attrs):
-        self._flush_data()
-        tag = Tag(name, self._attr_dict(attrs))
-        self._top().append_child(tag)
+        tag = self._add_tag(name, attrs)
         if name not in VOID_TAGS and len(self._open) < self.MAX_DEPTH:
             self._open.append(tag)
             if name in self._PRESERVE_WS:
                 self._preserve_depth += 1
 
     def handle_startendtag(self, name, attrs):
-        self._flush_data()
-        tag = Tag(name, self._attr_dict(attrs))
-        self._top().append_child(tag)
+        self._add_tag(name, attrs)
 
     def handle_endtag(self, name):
-        self._flush_data()
+        if self._data_buf:
+            self._flush_data()
         if name in VOID_TAGS:
             return
         for i in range(len(self._open) - 1, 0, -1):
@@ -346,27 +346,20 @@ class _TreeParser(HTMLParser):
         if data:
             self._data_buf.append(data)
 
-    def handle_comment(self, data):
-        self._flush_data()
-        self._top().append_child(MarkupNode(data))
+    def _add_markup(self, data: str) -> None:
+        if self._data_buf:
+            self._flush_data()
+        self._open[-1].append_child(MarkupNode(data))
 
-    def handle_decl(self, decl):
-        self._top().append_child(MarkupNode(decl))
-
-    def handle_pi(self, data):
-        self._flush_data()
-        self._top().append_child(MarkupNode(data))
-
-    def unknown_decl(self, data):
-        self._flush_data()
-        self._top().append_child(MarkupNode(data))
+    handle_comment = handle_decl = handle_pi = unknown_decl = _add_markup
 
 
-def parse_html(raw: Union[bytes, str]) -> Tag:
-    """Parse HTML bytes/text into a document-root ``Tag``."""
+def parse_html(raw: Union[bytes, str]) -> Document:
+    """Parse HTML bytes/text into a document root carrying the tag index."""
     text = decode_bytes(raw) if isinstance(raw, bytes) else raw
     p = _TreeParser()
     p.feed(text)
     p.close()
-    p._flush_data()
+    if p._data_buf:
+        p._flush_data()
     return p.root

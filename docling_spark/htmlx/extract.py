@@ -21,13 +21,13 @@ from __future__ import annotations
 import re
 from contextlib import contextmanager
 from pathlib import Path
-from typing import Optional, Union
+from typing import Optional, Sequence, Union
 from urllib.parse import urljoin, urlparse
 
 from pydantic import AnyUrl, ValidationError
 
 from ..model import BODY, FURNITURE, SUB, SUPER, Formatting, Item, SpanDoc, TableCellSpec
-from .dom import MarkupNode, Tag, TextNode, parse_html
+from .dom import Document, MarkupNode, Tag, TextNode, parse_html
 
 Hyperlink = Union[AnyUrl, Path, None]
 
@@ -53,7 +53,7 @@ BLOCK_TAGS = frozenset(
     }
 )
 
-CODE_TAGS = ("code", "kbd", "samp")
+CODE_TAGS = frozenset({"code", "kbd", "samp"})
 
 # tag -> formatting flag it switches on (order matters: parent-format scan
 # iterates in this order, mirroring the reference map's insertion order)
@@ -74,7 +74,15 @@ FORMAT_TAGS: dict[str, dict] = {
     "samp": {},
 }
 
-HEADING_TAGS = ["h1", "h2", "h3", "h4", "h5", "h6"]
+HEADING_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
+_REMOVED_TAGS = frozenset({"script", "noscript", "style"})
+_LIST_TAGS = frozenset({"ul", "ol"})
+_LIST_CHILD_TAGS = frozenset({"li", "ul", "ol"})
+_SECTION_TAGS = frozenset({"thead", "tbody"})
+_ROW_TAGS = frozenset({"tr"})
+_CELL_TAGS = frozenset({"td", "th"})
+# HtmlExtractor._ancestry's entry above the root: no format tag, no link
+_NO_ANCESTRY: tuple[tuple[str, ...], Optional[Tag]] = ((), None)
 
 # HTML-typical unicode normalization (same table as the reference's
 # _clean_unicode, html_backend.py:1312-1332 — a public, well-known cleanup set)
@@ -236,24 +244,81 @@ def resolve_href(loc: str, base: Optional[str]) -> str:
     return out
 
 
+# hostile-input hardening beyond the reference: a colspan/rowspan bomb
+# (e.g. colspan=10^9) would allocate a gigantic grid and stall a task;
+# goldens never exceed single digits, so a generous cap keeps parity
+# while bounding grid fill per anchor cell at ~65k cells.
+_SPAN_CAP = 256
+_DIGITS = re.compile(r"\d+")
+_WS_RUNS = re.compile(r"\s+|\n+")
+
+
+def _span(value: str) -> int:
+    if value and value[0].isnumeric():
+        m = _DIGITS.search(value)
+        if m:
+            return min(int(m.group()), _SPAN_CAP)
+    return 1
+
+
 def _cell_spans(cell: Tag) -> tuple[int, int]:
-    """(colspan, rowspan); non-numeric → 1 (html_backend.py:1338-1363)."""
+    """(colspan, rowspan); absent or non-numeric → 1 (html_backend.py:1338-1363)."""
+    attrs = cell.attrs
+    return (
+        _span(attrs["colspan"]) if "colspan" in attrs else 1,
+        _span(attrs["rowspan"]) if "rowspan" in attrs else 1,
+    )
 
-    # hostile-input hardening beyond the reference: a colspan/rowspan bomb
-    # (e.g. colspan=10^9) would allocate a gigantic grid and stall a task;
-    # goldens never exceed single digits, so a generous cap keeps parity
-    # while bounding grid fill per anchor cell at ~65k cells.
-    _SPAN_CAP = 256
 
-    def num(s: str) -> int:
-        s = str(s)
-        if s and s[0].isnumeric():
-            m = re.search(r"\d+", s)
-            if m:
-                return min(int(m.group()), _SPAN_CAP)
-        return 1
+def _child_tags(tag: Tag, names: frozenset) -> list[Tag]:
+    """The direct child tags of ``tag`` named in ``names``."""
+    return [c for c in tag.contents if isinstance(c, Tag) and c.tag_name in names]
 
-    return num(cell.get("colspan", "1")), num(cell.get("rowspan", "1"))
+
+def _table_rows(table: Tag) -> list[list[tuple[Tag, int, int]]]:
+    """Unwrap the table's direct thead/tbody children, then list its direct
+    rows as (cell, colspan, rowspan) triples, each span parsed once."""
+    for t in _child_tags(table, _SECTION_TAGS):
+        t.unwrap()
+    return [
+        [(cell, *_cell_spans(cell)) for cell in _child_tags(tr, _CELL_TAGS)]
+        for tr in _child_tags(table, _ROW_TAGS)
+    ]
+
+
+def _inside(tag: Tag, top: Tag, memo: dict) -> bool:
+    """Whether ``top`` is a proper ancestor of ``tag``.
+
+    ``memo`` maps each tag looked at before to the answer for it and starts
+    as ``{top: True}``; a batch of queries sharing it visits each ancestor
+    once, whatever the depth."""
+    path = []
+    p = tag.parent
+    while p is not None and p not in memo:
+        path.append(p)
+        p = p.parent
+    inside = p is not None and memo[p]
+    for q in path:
+        memo[q] = inside
+    return inside
+
+
+def _block_holders(top: Tag) -> set:
+    """The tags that have a ``BLOCK_TAGS`` descendant under ``top`` (and
+    ``top``'s ancestors when it has one); each tag is added once."""
+    holders: set = set()
+    stack = [top]
+    while stack:
+        for node in stack.pop().contents:
+            if isinstance(node, Tag):
+                if node.contents:
+                    stack.append(node)
+                if node.tag_name in BLOCK_TAGS:
+                    p = node.parent
+                    while p is not None and p not in holders:
+                        holders.add(p)
+                        p = p.parent
+    return holders
 
 
 def _concat_text(node) -> str:
@@ -284,6 +349,11 @@ class HtmlExtractor:
     def __init__(self, base_uri: Optional[str] = "None"):
         # "None" (the str) mirrors the reference default str(source_uri=None)
         self.base = base_uri
+        # per-document state set up by convert: the _ancestry memo, the tags
+        # with a block descendant, and whether the page has an inline-formula
+        self._ancestry_memo: dict = {}
+        self._holders: set = set()
+        self._has_formula = False
         self.level = 0
         self.parents: dict[int, Optional[Item]] = {
             i: None for i in range(self.MAX_LEVELS)
@@ -296,32 +366,48 @@ class HtmlExtractor:
 
     # ------------------------------------------------------------------ api
     def convert(self, raw: Union[bytes, str], name: str = "doc") -> SpanDoc:
-        root = parse_html(raw)
+        root: Document = parse_html(raw)
+        index = root.index
         doc = SpanDoc(name=name)
 
-        title = root.find("title")
-        if title:
+        title = next((t for t in index if t.tag_name == "title"), None)
+        if title is not None:
             t_orig = title.get_text(separator=" ", strip=True)
             doc.add_title(
                 text=clean_unicode(t_orig), orig=t_orig, content_layer=FURNITURE
             )
 
-        for t in root.find_all(["script", "noscript", "style"]):
-            t.decompose()
-        for t in root.find_all(attr_presence="hidden"):
-            t.decompose()
+        # detaching every removed tag gives the same tree in any order, and
+        # an entry under a removed tag is detached with it
+        for t in index:
+            if t.tag_name in _REMOVED_TAGS or "hidden" in t.attrs:
+                t.decompose()
 
-        content = root.find("body") or root
-        for br in content.find_all("br"):
-            br.parent.replace_child_with(br, TextNode("\n"))
+        under_root = {root: True}
+        content = next(
+            (
+                t
+                for t in index
+                if t.tag_name == "body" and _inside(t, root, under_root)
+            ),
+            root,
+        )
+        under_content = {content: True}
+        for t in index:
+            if t.tag_name == "br" and _inside(t, content, under_content):
+                t.parent.replace_child_with(t, TextNode("\n"))
 
-        headers = [
-            h
-            for h in content.find_all(HEADING_TAGS)
-            if h.find_parent("table") is None
-        ]
+        headers = any(
+            t.tag_name in HEADING_TAGS
+            and _inside(t, content, under_content)
+            and t.find_parent("table") is None
+            for t in index
+        )
         self.layer = FURNITURE if headers else BODY
 
+        self._ancestry_memo = {}
+        self._holders = _block_holders(content)
+        self._has_formula = any(t.tag_name == "inline-formula" for t in index)
         self.list_ordered.clear()
         self.list_start.clear()
         self._walk(content, doc)
@@ -340,7 +426,7 @@ class HtmlExtractor:
         return Formatting(**flags) if flags else None
 
     @contextmanager
-    def _push_format(self, tags: list[str]):
+    def _push_format(self, tags: Sequence[str]):
         if not tags:
             yield
             return
@@ -406,16 +492,29 @@ class HtmlExtractor:
                 self.layer = saved_layer
 
     # ------------------------------------------------------- text gathering
-    def _parent_format_tags(self, node) -> list[str]:
-        found = []
-        for ft in FORMAT_TAGS:
-            p = node.parent
-            while p is not None:
-                if p.name == ft:
-                    found.append(ft)
-                    break
-                p = p.parent
-        return found
+    def _ancestry(self, tag: Tag) -> tuple[tuple[str, ...], Optional[Tag]]:
+        """(``FORMAT_TAGS`` names among ``tag`` and its ancestors, in
+        ``FORMAT_TAGS`` order; the nearest of them that is an ``a`` with a
+        truthy href). Each entry is built from its parent's, so a tag's
+        ancestors are walked once per document."""
+        memo = self._ancestry_memo
+        path = []
+        while tag is not None and tag not in memo:
+            path.append(tag)
+            tag = tag.parent
+        entry = memo[tag] if tag is not None else _NO_ANCESTRY
+        for t in reversed(path):
+            name = t.tag_name
+            if name in FORMAT_TAGS and name not in entry[0]:
+                fmts = entry[0]
+                entry = (
+                    tuple(ft for ft in FORMAT_TAGS if ft == name or ft in fmts),
+                    entry[1],
+                )
+            elif name == "a" and t.get("href"):
+                entry = (entry[0], t)
+            memo[t] = entry
+        return entry
 
     def _gather(
         self,
@@ -426,23 +525,20 @@ class HtmlExtractor:
     ) -> list[AnnotText]:
         """Collect (text, link, formatting, code) fragments from a subtree
         (html_backend.py:637-715)."""
-        if find_parent_annotation:
-            fmt_tags = self._parent_format_tags(node)
-            p = node.parent
-            while p is not None:
-                if p.name == "a" and p.get("href"):
-                    with self._push_format(fmt_tags):
-                        with self._push_hyperlink(p):
-                            # NB: reference drops keep_newlines on this path
-                            return self._gather(node, ignore_list)
-                p = p.parent
+        if find_parent_annotation and node.parent is not None:
+            fmt_tags, link = self._ancestry(node.parent)
+            if link is not None:
+                with self._push_format(fmt_tags):
+                    with self._push_hyperlink(link):
+                        # NB: reference drops keep_newlines on this path
+                        return self._gather(node, ignore_list)
 
         if isinstance(node, MarkupNode):
             return []
 
         if isinstance(node, TextNode):
             stripped = node.strip()
-            code = any(ct in self.format_stack for ct in CODE_TAGS)
+            code = not CODE_TAGS.isdisjoint(self.format_stack)
             if stripped:
                 return [AnnotText(stripped, self.hyperlink, self._fmt, code)]
             # golden-derived: any whitespace-only string becomes a newline
@@ -471,6 +567,10 @@ class HtmlExtractor:
                         self._gather(child, ignore_list, keep_newlines=keep_newlines)
                     )
         return out
+
+    def _images(self, tag: Tag) -> list[Tag]:
+        # img is a block tag, so a tag outside the holder set has none
+        return tag.find_all("img") if tag in self._holders else []
 
     # --------------------------------------------------------------- walking
     def _walk(self, element: Tag, doc: SpanDoc) -> list[int]:
@@ -513,7 +613,7 @@ class HtmlExtractor:
 
         for node in list(element.contents):
             if isinstance(node, Tag):
-                name = node.tag_name.lower()
+                name = node.tag_name
                 if name == "img":
                     flush()
                     ref = self._emit_image(node, doc)
@@ -529,7 +629,7 @@ class HtmlExtractor:
                 elif name in BLOCK_TAGS:
                     flush()
                     emitted.extend(self._handle_block(node, doc))
-                elif node.find(BLOCK_TAGS):
+                elif node in self._holders:
                     flush()
                     emitted.extend(self._walk(node, doc))
                 else:
@@ -604,7 +704,7 @@ class HtmlExtractor:
             self.parents[self.level + 1] = item
             refs = [item.idx]
         self.level += 1
-        for img in tag.find_all("img"):
+        for img in self._images(tag):
             r = self._emit_image(img, doc)
             if r is not None:
                 refs.append(r)
@@ -612,7 +712,7 @@ class HtmlExtractor:
 
     # ----------------------------------------------------------------- lists
     def _handle_list(self, tag: Tag, doc: SpanDoc) -> int:
-        ordered = tag.tag_name.lower() == "ol"
+        ordered = tag.tag_name == "ol"
         start: Optional[int] = None
         if ordered:
             sa = tag.get("start")
@@ -631,8 +731,8 @@ class HtmlExtractor:
             self.list_start[group.idx] = start
         self.level += 1
 
-        for li in tag.find_all({"li", "ul", "ol"}, recursive=False):
-            if li.tag_name in {"ul", "ol"}:
+        for li in _child_tags(tag, _LIST_CHILD_TAGS):
+            if li.tag_name in _LIST_TAGS:
                 # invalid-HTML workaround: list directly nested in list
                 self._handle_block(li, doc)
                 continue
@@ -644,7 +744,7 @@ class HtmlExtractor:
             )
             frags = self._gather(li, ignore_list=True, find_parent_annotation=True)
             runs = coalesce_runs(frags)
-            li_text = re.sub(r"\s+|\n+", " ", "".join(f.text for f in runs)).strip()
+            li_text = _WS_RUNS.sub(" ", "".join(f.text for f in runs)).strip()
 
             if li_text:
                 if len(runs) > 1:
@@ -660,7 +760,7 @@ class HtmlExtractor:
                     with self._maybe_inline_group(runs, doc):
                         for frag in runs:
                             seg = clean_unicode(
-                                re.sub(r"\s+|\n+", " ", frag.text).strip()
+                                _WS_RUNS.sub(" ", frag.text).strip()
                             )
                             if frag.code:
                                 doc.add_code(
@@ -679,13 +779,13 @@ class HtmlExtractor:
                                     formatting=frag.formatting,
                                     hyperlink=_link_str(frag.hyperlink),
                                 )
-                    for sub in li.find_all({"ul", "ol"}, recursive=False):
+                    for sub in _child_tags(li, _LIST_TAGS):
                         self._handle_block(sub, doc)
                     self.parents[self.level] = None
                     self.level -= 1
                 else:
                     frag = runs[0]
-                    raw = re.sub(r"\s+|\n+", " ", frag.text).strip()
+                    raw = _WS_RUNS.sub(" ", frag.text).strip()
                     item = doc.add_list_item(
                         text=clean_unicode(raw),
                         enumerated=ordered,
@@ -697,16 +797,16 @@ class HtmlExtractor:
                         hyperlink=_link_str(frag.hyperlink),
                     )
                     self.parents[self.level + 1] = item
-                    for sub in li.find_all({"ul", "ol"}, recursive=False):
+                    for sub in _child_tags(li, _LIST_TAGS):
                         self.level += 1
                         self._handle_block(sub, doc)
                         self.parents[self.level + 1] = None
                         self.level -= 1
             else:
-                for sub in li.find_all({"ul", "ol"}, recursive=False):
+                for sub in _child_tags(li, _LIST_TAGS):
                     self._handle_block(sub, doc)
 
-            for img in li.find_all("img"):
+            for img in self._images(li):
                 self._emit_image(img, doc)
 
         self.parents[self.level + 1] = None
@@ -715,31 +815,27 @@ class HtmlExtractor:
 
     # ---------------------------------------------------------------- tables
     @staticmethod
-    def table_shape(tag: Tag) -> tuple[int, int]:
+    def table_shape(rows: list[list[tuple[Tag, int, int]]]) -> tuple[int, int]:
         """(rows, cols) accounting for spans; row-header-only rows don't
-        count (html_backend.py:1028-1051). Unwraps thead/tbody in place."""
-        for t in tag.find_all(["thead", "tbody"], recursive=False):
-            t.unwrap()
-        rows = 0
+        count (html_backend.py:1028-1051)."""
+        num_rows = 0
         cols = 0
-        for tr in tag.find_all("tr", recursive=False):
+        for cells in rows:
             width = 0
             header_only = True
-            for cell in tr.find_all(["td", "th"], recursive=False):
-                cspan, rspan = _cell_spans(cell)
+            for cell, cspan, rspan in cells:
                 width += cspan
                 if cell.tag_name == "td" or rspan == 1:
                     header_only = False
             cols = max(cols, width)
             if not header_only:
-                rows += 1
-        return rows, cols
+                num_rows += 1
+        return num_rows, cols
 
     def _is_rich_cell(self, cell: Tag) -> bool:
         """RichTableCell decision matrix (html_backend.py:366-400; ground
         truth: tests/test_backend_html.py:447-525)."""
-        children = cell.find_all()
-        if not children:
+        if not any(isinstance(c, Tag) for c in cell.contents):
             strings = [c for c in cell.contents if isinstance(c, TextNode)]
             return len(strings) > 1
         frags = self._gather(cell, find_parent_annotation=True)
@@ -751,20 +847,39 @@ class HtmlExtractor:
             return bool(f.formatting) or bool(f.hyperlink) or f.code
         return True
 
-    def _parse_table(self, tag: Tag, doc: SpanDoc, tbl: Item) -> None:
-        for t in tag.find_all(["thead", "tbody"], recursive=False):
-            t.unwrap()
+    def _replace_formula(self, formula: Tag, text: TextNode) -> None:
+        """Swap an inline-formula for its text and keep ``_holders`` exact:
+        an ancestor that held a block only through the formula stops being
+        a holder."""
+        parent = formula.parent
+        parent.replace_child_with(formula, text)
+        holders = self._holders
+        p = parent
+        while p is not None and p in holders:
+            if any(
+                isinstance(c, Tag) and (c.tag_name in BLOCK_TAGS or c in holders)
+                for c in p.contents
+            ):
+                break
+            holders.discard(p)
+            p = p.parent
+
+    def _parse_table(
+        self, tag: Tag, doc: SpanDoc, tbl: Item, rows: list[list[tuple[Tag, int, int]]]
+    ) -> None:
+        # reference quirk: the sections are unwrapped a second time, which
+        # reaches a tbody that sat inside a thead
+        if _child_tags(tag, _SECTION_TAGS):
+            rows = _table_rows(tag)
         num_rows, num_cols = tbl.num_rows, tbl.num_cols
         grid: list[list] = [[None] * num_cols for _ in range(num_rows)]
         start_row_span = 0
         row_idx = -1
 
-        for tr in tag.find_all("tr", recursive=False):
-            cells = tr.find_all(["td", "th"], recursive=False)
+        for cells in rows:
             col_header = True
             row_header = True
-            for cell in cells:
-                _, rspan = _cell_spans(cell)
+            for cell, _, rspan in cells:
                 if cell.tag_name == "td":
                     col_header = False
                     row_header = False
@@ -777,13 +892,12 @@ class HtmlExtractor:
                 start_row_span += 1
 
             col_idx = 0
-            for cell in cells:
-                for formula in cell.find_all("inline-formula"):
-                    parts = formula.text.split("$$")
-                    if len(parts) == 3:
-                        formula.parent.replace_child_with(
-                            formula, TextNode(f"$${parts[1]}$$")
-                        )
+            for cell, cspan, rspan in cells:
+                if self._has_formula:
+                    for formula in cell.find_all("inline-formula"):
+                        parts = formula.text.split("$$")
+                        if len(parts) == 3:
+                            self._replace_formula(formula, TextNode(f"$${parts[1]}$$"))
 
                 rich = self._is_rich_cell(cell)
                 rich_ref = -1
@@ -806,7 +920,6 @@ class HtmlExtractor:
                         rich = False
 
                 text = clean_unicode(_concat_text(cell).strip())
-                cspan, rspan = _cell_spans(cell)
                 if row_header:
                     rspan -= 1
                 while (
@@ -837,7 +950,7 @@ class HtmlExtractor:
     # ---------------------------------------------------------------- blocks
     def _handle_block(self, tag: Tag, doc: SpanDoc) -> list[int]:
         refs: list[int] = []
-        name = tag.tag_name.lower()
+        name = tag.tag_name
 
         if name == "figure":
             img = tag.find("img")
@@ -878,20 +991,21 @@ class HtmlExtractor:
                                     hyperlink=_link_str(frag.hyperlink),
                                 )
                             refs.append(it.idx)
-            for img in tag.find_all("img"):
+            for img in self._images(tag):
                 self._emit_image(img, doc)
 
         elif name == "table":
-            rows, cols = self.table_shape(tag)
+            rows = _table_rows(tag)
+            num_rows, num_cols = self.table_shape(rows)
             tbl = doc.add_table(
-                num_rows=rows,
-                num_cols=cols,
+                num_rows=num_rows,
+                num_cols=num_cols,
                 parent=self._parent(),
                 content_layer=self.layer,
             )
             refs.append(tbl.idx)
-            self._parse_table(tag, doc, tbl)
-            for _img in tag.find_all("img"):
+            self._parse_table(tag, doc, tbl, rows)
+            for _img in self._images(tag):
                 # reference quirk: passes the *table* tag to image emission,
                 # yielding a caption-less placeholder per nested <img>
                 r = self._emit_image(tag, doc)
@@ -933,12 +1047,10 @@ class HtmlExtractor:
         parent = self._parent()
 
         link = None
-        p = img.parent
-        while p is not None:
-            if p.name == "a" and p.get("href"):
-                link = p.get("href")
-                break
-            p = p.parent
+        if img.parent is not None:
+            a = self._ancestry(img.parent)[1]
+            if a is not None:
+                link = a.get("href")
         if link:
             caption.append(AnnotText(img.get("alt") or "", hyperlink=link))
 

@@ -8,6 +8,7 @@ output contract here is re-derived from the frozen golden files
 
 from __future__ import annotations
 
+import unicodedata
 from typing import Iterable, Optional
 
 from .model import BODY, Item, SpanDoc
@@ -347,6 +348,23 @@ def _is_int(s: str) -> bool:
         return False
 
 
+def _visible_width(s: str) -> int:
+    # wcswidth semantics (reference uses wcwidth for column padding):
+    # -1 for strings containing nonprintable chars; wide/fullwidth East
+    # Asian chars count 2; combining marks count 0; else 1 per char
+    if s.isascii() and s.isprintable():
+        return len(s)  # no control, combining or wide char among these
+    total = 0
+    for ch in s:
+        o = ord(ch)
+        if o < 32 or o == 0x7F:
+            return -1
+        if unicodedata.combining(ch):
+            continue
+        total += 2 if unicodedata.east_asian_width(ch) in ("W", "F") else 1
+    return total
+
+
 def _github_table(grid: list[list[str]]) -> str:
     if not grid:
         return ""
@@ -386,22 +404,6 @@ def _github_table(grid: list[list[str]]) -> str:
             cur = after_dot(body[r][c])
             pad = (most - cur) if cur >= 0 else (most + 1 if most >= 0 else 0)
             body[r][c] = body[r][c] + " " * pad
-
-    def _visible_width(s: str) -> int:
-        # wcswidth semantics (reference uses wcwidth for column padding):
-        # -1 for strings containing nonprintable chars; wide/fullwidth East
-        # Asian chars count 2; combining marks count 0; else 1 per char
-        import unicodedata
-
-        total = 0
-        for ch in s:
-            o = ord(ch)
-            if o < 32 or o == 0x7F:
-                return -1
-            if unicodedata.combining(ch):
-                continue
-            total += 2 if unicodedata.east_asian_width(ch) in ("W", "F") else 1
-        return total
 
     widths = []
     for c in range(ncols):

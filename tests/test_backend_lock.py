@@ -142,6 +142,7 @@ HTML_CASES = {
     "annotation_above_body": "<html><sup><sub><a href='/o'><a href=''><body>"
     "<p>x <i>y</i></p><a href='/in'><b><span>s</span></b></a>"
     "</body></a></a></sub></sup></html>",
+    "doctype_mid_text": "<div>a<!DOCTYPE x>b</div><p>c<?pi x?>d</p>",
 }
 
 
@@ -337,6 +338,7 @@ DIGESTS = {
     "html:removed_body_first": "d5966a3856fc25d6315f952e9633b67b912d7b6c94a007cb6ada70a6eaf15cf3",
     "html:removed_heading": "80e15d2944a2c37cdc1faba2891a35c4cd2eb36ac16d5abcb927a9e357f66f69",
     "html:annotation_above_body": "d365b80114cb15138a941a515629e357a2cac60c4b5727a25bb90733f577ed9f",
+    "html:doctype_mid_text": "7fff7bf3c4889282e30623085a38199f0109ae453f4f410d2ac59682237227ae",
 }
 
 

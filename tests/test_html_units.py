@@ -97,6 +97,17 @@ def test_clean_unicode():
     assert clean_unicode("a b–c’d…e­") == "a b-c'd...e"
 
 
+def test_markup_in_text_splits_the_run_alike():
+    # every markup token ends the text run before it, so a doctype in the
+    # middle of text reads like a comment there
+    def run(markup: str) -> str:
+        return md(f"<html><body><div>a{markup}b</div></body></html>".encode())
+
+    assert run("<!-- c -->") == "a b"
+    assert run("<!DOCTYPE x>") == "a b"
+    assert run("<?pi x?>") == "a b"
+
+
 def test_rich_table_cell_matrix():
     # mirrors tests/test_backend_html.py:447-525 (ground-truth booleans)
     from docling_spark.htmlx.dom import parse_html
