@@ -13,6 +13,18 @@ Layout:
     serialize.py  markdown / indented-text serializers (golden-file parity)
     schema.py   Spark StructTypes for all tables
     job.py      the Spark job: dispatch, mapInPandas branches, lineage, resume
+    zipcache.py stops Spark Python workers re-reading zip archives per task
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+# imported inside a Spark task: this process is a Python worker, which runs
+# importlib.invalidate_caches() at the start of every task
+_taskcontext = sys.modules.get("pyspark.taskcontext")
+if _taskcontext is not None and _taskcontext.TaskContext.get() is not None:
+    from docling_spark import zipcache
+
+    zipcache.install()
+del _taskcontext

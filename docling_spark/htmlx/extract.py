@@ -81,8 +81,10 @@ _LIST_CHILD_TAGS = frozenset({"li", "ul", "ol"})
 _SECTION_TAGS = frozenset({"thead", "tbody"})
 _ROW_TAGS = frozenset({"tr"})
 _CELL_TAGS = frozenset({"td", "th"})
-# HtmlExtractor._ancestry's entry above the root: no format tag, no link
-_NO_ANCESTRY: tuple[tuple[str, ...], Optional[Tag]] = ((), None)
+# HtmlExtractor._ancestry's entry: (format tag names, link, figure, in table)
+_Ancestry = tuple[tuple[str, ...], Optional[Tag], Optional[Tag], bool]
+# the entry above the root: no format tag, no link, no figure, no table
+_NO_ANCESTRY: _Ancestry = ((), None, None, False)
 
 # HTML-typical unicode normalization (same table as the reference's
 # _clean_unicode, html_backend.py:1312-1332 — a public, well-known cleanup set)
@@ -397,15 +399,15 @@ class HtmlExtractor:
             if t.tag_name == "br" and _inside(t, content, under_content):
                 t.parent.replace_child_with(t, TextNode("\n"))
 
+        self._ancestry_memo = {}
         headers = any(
             t.tag_name in HEADING_TAGS
             and _inside(t, content, under_content)
-            and t.find_parent("table") is None
+            and not self._ancestry(t.parent)[3]
             for t in index
         )
         self.layer = FURNITURE if headers else BODY
 
-        self._ancestry_memo = {}
         self._holders = _block_holders(content)
         self._has_formula = any(t.tag_name == "inline-formula" for t in index)
         self.list_ordered.clear()
@@ -492,11 +494,12 @@ class HtmlExtractor:
                 self.layer = saved_layer
 
     # ------------------------------------------------------- text gathering
-    def _ancestry(self, tag: Tag) -> tuple[tuple[str, ...], Optional[Tag]]:
-        """(``FORMAT_TAGS`` names among ``tag`` and its ancestors, in
-        ``FORMAT_TAGS`` order; the nearest of them that is an ``a`` with a
-        truthy href). Each entry is built from its parent's, so a tag's
-        ancestors are walked once per document."""
+    def _ancestry(self, tag: Tag) -> _Ancestry:
+        """Among ``tag`` and its ancestors: the ``FORMAT_TAGS`` names, in
+        ``FORMAT_TAGS`` order; the nearest ``a`` with a truthy href; the
+        nearest ``figure``; whether one is a ``table``. Each entry is built
+        from its parent's, so a tag's ancestors are walked once per
+        document."""
         memo = self._ancestry_memo
         path = []
         while tag is not None and tag not in memo:
@@ -509,10 +512,13 @@ class HtmlExtractor:
                 fmts = entry[0]
                 entry = (
                     tuple(ft for ft in FORMAT_TAGS if ft == name or ft in fmts),
-                    entry[1],
-                )
+                ) + entry[1:]
             elif name == "a" and t.get("href"):
-                entry = (entry[0], t)
+                entry = (entry[0], t, entry[2], entry[3])
+            elif name == "figure":
+                entry = (entry[0], entry[1], t, entry[3])
+            elif name == "table" and not entry[3]:
+                entry = entry[:3] + (True,)
             memo[t] = entry
         return entry
 
@@ -526,7 +532,7 @@ class HtmlExtractor:
         """Collect (text, link, formatting, code) fragments from a subtree
         (html_backend.py:637-715)."""
         if find_parent_annotation and node.parent is not None:
-            fmt_tags, link = self._ancestry(node.parent)
+            fmt_tags, link, _, _ = self._ancestry(node.parent)
             if link is not None:
                 with self._push_format(fmt_tags):
                     with self._push_hyperlink(link):
@@ -1042,15 +1048,11 @@ class HtmlExtractor:
         """Always placeholder mode (fetch_images=False default,
         backend_options.py:31-37); caption from figcaption/alt/link-alt
         (html_backend.py:1152-1215)."""
-        figure = img.find_parent("figure")
+        _, a, figure, _ = self._ancestry(img.parent)
         caption: list[AnnotText] = []
         parent = self._parent()
 
-        link = None
-        if img.parent is not None:
-            a = self._ancestry(img.parent)[1]
-            if a is not None:
-                link = a.get("href")
+        link = a.get("href") if a is not None else None
         if link:
             caption.append(AnnotText(img.get("alt") or "", hyperlink=link))
 

@@ -717,7 +717,9 @@ class ExtractionRunner:
         out = out.observe(
             metrics,
             F.count("*").alias("url_count"),
-            F.sum(F.coalesce("n_chars", F.lit(0))).alias("byte_count"),
+            F.sum(F.coalesce(F.octet_length("extracted_text"), F.lit(0))).alias(
+                "byte_count"
+            ),
             *(F.count_if(F.col("status") == s).alias(s) for s in STATUSES),
         )
         path = f"{cfg.output_path}/data/run_id={cfg.run_id}/chunk_id={k}"

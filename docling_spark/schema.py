@@ -93,6 +93,8 @@ LINEAGE_SCHEMA = StructType(
         StructField("chunk_id", IntegerType(), False),
         StructField("num_chunks", IntegerType(), False),
         StructField("url_count", LongType(), False),
+        # UTF-8 bytes of the chunk's extracted_text (markdown), summed;
+        # n_chars counts characters, so the two differ on non-ASCII text
         StructField("byte_count", LongType(), False),
         StructField("status_counts", MapType(StringType(), LongType()), False),
         StructField("wall_sec", DoubleType(), False),

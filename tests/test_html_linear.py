@@ -1,9 +1,9 @@
 """Linear time as a tested contract for the HTML backend.
 
 Each test times one input at two sizes, single-threaded, as the minimum of
-3 runs. A linear backend gives a ratio near the size ratio and a
-quadratic one near its square, so the bounds separate the two even with a
-host whose speed swings ~1.5x between runs.
+3 runs (5 for the ~30 ms image pages). A linear backend gives a ratio
+near the size ratio and a quadratic one near its square, so the bounds
+separate the two even with a host whose speed swings ~1.5x between runs.
 """
 
 from __future__ import annotations
@@ -19,25 +19,33 @@ from docling_spark.job import _extract_one
 RUNS = "<a href=x><span>w <b>x</b></span></a>" * 8000 + "<p>end</p>"
 
 
-def _best_of_3(fn) -> float:
+def _best_of(fn, runs: int = 3) -> float:
     times = []
-    for _ in range(3):
+    for _ in range(runs):
         t0 = time.perf_counter()
         fn()
         times.append(time.perf_counter() - t0)
     return min(times)
 
 
-def _nested(depth: int) -> bytes:
-    return f"<html><body>{'<div>' * depth}{RUNS}{'</div>' * depth}</body></html>".encode()
+def _nested(depth: int, inner: str = RUNS) -> bytes:
+    return f"<html><body>{'<div>' * depth}{inner}{'</div>' * depth}</body></html>".encode()
 
 
 def test_walk_time_does_not_grow_with_nesting_depth():
     # 390 stays under the parser's depth cap, so both pages nest fully
     shallow, deep = _nested(25), _nested(390)
-    t_shallow = _best_of_3(lambda: HtmlExtractor().convert(shallow))
-    t_deep = _best_of_3(lambda: HtmlExtractor().convert(deep))
+    t_shallow = _best_of(lambda: HtmlExtractor().convert(shallow))
+    t_deep = _best_of(lambda: HtmlExtractor().convert(deep))
     assert t_deep / t_shallow <= 2, (t_shallow, t_deep)
+
+
+def test_image_time_does_not_grow_with_nesting_depth():
+    # each image looks up its nearest figure and link ancestor
+    shallow, deep = _nested(25, "<img>" * 4000), _nested(390, "<img>" * 4000)
+    t_shallow = _best_of(lambda: HtmlExtractor().convert(shallow), runs=5)
+    t_deep = _best_of(lambda: HtmlExtractor().convert(deep), runs=5)
+    assert t_deep / t_shallow <= 1.5, (t_shallow, t_deep)
 
 
 def _page(n_bytes: int) -> bytes:
@@ -68,6 +76,6 @@ def test_extract_time_grows_linearly_with_page_size():
         row = _extract_one("https://x.test/p.html", raw, "html", "none", 60.0)
         assert row["status"] == "success", row["error"]
 
-    t_small = _best_of_3(lambda: run(small))
-    t_large = _best_of_3(lambda: run(large))
+    t_small = _best_of(lambda: run(small))
+    t_large = _best_of(lambda: run(large))
     assert t_large / t_small <= 8, (t_small, t_large)

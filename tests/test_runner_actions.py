@@ -57,13 +57,16 @@ class _SpyRunner(ExtractionRunner):
 
 def _pages(spark):
     """The synthetic pages plus every backend-lock input under its own url,
-    so the chunks hold success, failure, skipped and needs_ocr rows."""
+    so the chunks hold success, failure, skipped and needs_ocr rows, plus
+    one page whose text is not ASCII."""
     pages = synth_pages(spark, SF)
     ts = datetime(2024, 6, 1)
     extra = [
         (url.replace("lock.test/docs/", f"runner.test/{i}/"), ts, blob, "", "en")
         for i, (url, blob, _) in enumerate(CASES.values())
     ]
+    umlaut = "<html><body><p>Zürich – café naïve</p></body></html>".encode()
+    extra.append(("https://runner.test/umlaut.html", ts, umlaut, "", "de"))
     return pages.unionByName(spark.createDataFrame(extra, pages.schema))
 
 
@@ -113,23 +116,28 @@ def test_lineage_rows_equal_the_written_output(spark, run):
     )
     assert sorted(r.chunk_id for r in lineage) == list(range(K))
     seen = set()
+    non_ascii = False
     for row in lineage:
         agg = (
             spark.read.parquet(f"{out}/data/run_id={RUN}/chunk_id={row.chunk_id}")
             .groupBy("status")
             .agg(
                 F.count("*").alias("n"),
-                F.sum(F.coalesce("n_chars", F.lit(0))).alias("b"),
+                F.sum(F.coalesce(F.octet_length("extracted_text"), F.lit(0))).alias("b"),
+                F.sum(F.coalesce(F.length("extracted_text"), F.lit(0))).alias("c"),
             )
             .collect()
         )
         assert row.url_count == sum(r.n for r in agg)
         assert row.byte_count == sum(r.b for r in agg)
+        non_ascii |= row.byte_count != sum(r.c for r in agg)
         assert dict(row.status_counts) == {r.status: r.n for r in agg}
         assert row.num_chunks == K and row.wall_sec > 0 and row.docs_per_sec > 0
         seen |= set(row.status_counts)
     assert sum(r.url_count for r in lineage) == n_input
     assert {"success", "failure", "skipped", "needs_ocr"} <= seen
+    # byte_count counts UTF-8 bytes, not characters
+    assert non_ascii
 
 
 def test_leftover_temp_file_is_ignored(spark, run):
