@@ -18,7 +18,9 @@ Inputs, all built in the repo (no reference corpus needed):
   with relative links, an empty blob, ``oversize`` and ``other``;
 - a minimal METS-GBS tar.gz: a ``PROFILE="gbs"`` manifest plus one hOCR
   page;
-- small HTML pages, one per path of the HTML walker (``HTML_CASES``).
+- small HTML pages, one per path of the HTML walker (``HTML_CASES``);
+- a JATS article whose ``table-wrap`` takes every branch of the table
+  grid fill (``JATS_TABLE``).
 
 To regenerate after an intended output change, run
 ``PYTHONPATH=. python tests/test_backend_lock.py`` and paste the printed
@@ -84,7 +86,7 @@ HTML_LINKS = (
 
 
 # HTML walker paths: tables, lists, links, removals, body/br rules, headings,
-# images and the depth cap; each body is wrapped in <html><body> unless it
+# images, the depth cap and code runs; each body is wrapped in <html><body> unless it
 # carries its own document structure
 HTML_CASES = {
     "thead_tbody": "<table><thead><tr><th>H1</th><th>H2</th></tr></thead>"
@@ -143,7 +145,44 @@ HTML_CASES = {
     "<p>x <i>y</i></p><a href='/in'><b><span>s</span></b></a>"
     "</body></a></a></sub></sup></html>",
     "doctype_mid_text": "<div>a<!DOCTYPE x>b</div><p>c<?pi x?>d</p>",
+    # code runs: each fragment becomes a code or a text item
+    "code_kbd_samp_br": "<p>run <code>x = 1</code> then <kbd>Ctrl</kbd> "
+    "<samp>out</samp><br>next <code>y</code> end</p>",
+    "code_bold_italic": "<p><b><code>bold code</code></b> and "
+    "<i><code>it code</code></i> <b><i><code>both</code></i></b></p>",
+    "code_multiline": "<p><code>line one\nline two</code> after</p>"
+    "<div><code>a\n  b</code> tail</div>",
+    "li_text_code_link_sublist": "<ul><li>text <code>cd</code> "
+    "<a href='/l'>link</a><ul><li>sub <code>s</code></li></ul></li>"
+    "<li><code>only code</code></li></ul><ol start=3><li>n <kbd>k</kbd></li></ol>",
+    "div_flush": "<div>alpha <code>c</code> <b>beta</b>\n<span>gamma</span> "
+    "<div>inner <samp>smp</samp></div> tail <a href='/d'><code>lk</code></a></div>",
+    "address_summary": "<address>Addr <code>x</code><br>line2 <i>it</i></address>"
+    "<details><summary>Sum <b>b</b> <kbd>k</kbd></summary><p>body</p></details>",
+    "pre_code": "<pre><code>def f():\n    return 1\n</code></pre>"
+    "<pre><code>one</code> and <b>two</b></pre>",
+    "table_code_cells": "<table><tr><th><code>h</code></th><th>H2</th></tr>"
+    "<tr><td><code>c1</code></td><td>a <code>c2</code></td></tr>"
+    "<tr><td><b><code>c3</code></b></td><td><kbd>k</kbd><br><samp>s</samp></td></tr>"
+    "</table>",
 }
+
+# a JATS table-wrap: thead th rowspan, colspan, td rowspan, an inline
+# formula, a row of rowspan th only (a row-header row) and a non-numeric
+# colspan, parsed through the embedded XHTML table path
+JATS_TABLE = (
+    b'<?xml version="1.0"?>\n<article><front><article-meta><title-group>'
+    b"<article-title>Tables</article-title></title-group></article-meta>"
+    b"</front><body><sec><title>Results</title><p>See the table.</p>"
+    b'<table-wrap id="t1"><label>Table 1</label><caption><p>Spans and '
+    b"formulas.</p></caption><table><thead><tr><th rowspan=\"2\">Name</th>"
+    b'<th colspan="2">Wide</th></tr><tr><th>a</th><th>b</th></tr></thead>'
+    b'<tbody><tr><td rowspan="2">r</td><td><inline-formula>$$x$$'
+    b'</inline-formula> mid</td><td colspan="x">nn</td></tr>'
+    b'<tr><th rowspan="2">rh1</th><th rowspan="3">rh2</th></tr>'
+    b"<tr><td>v1</td><td>v2</td><td>v3</td></tr></tbody></table>"
+    b"</table-wrap></sec></body></article>"
+)
 
 
 def _html_case(body: str) -> bytes:
@@ -207,6 +246,7 @@ def _cases() -> dict[str, tuple[str, bytes, str]]:
         "edge:oversize": (BASE + "big.html", b"<html>" + b"x" * 64, "oversize"),
         "edge:other": (BASE + "notes.txt", b"plain prose\n", "other"),
         "edge:book.tar.gz": (BASE + "book.tar.gz", mets, sniff_content_type("book.tar.gz", mets)),
+        "edge:table.nxml": (BASE + "table.nxml", JATS_TABLE, "jats"),
     })
     for name, body in HTML_CASES.items():
         cases[f"html:{name}"] = (BASE + f"{name}.html", _html_case(body), "html")
@@ -312,6 +352,7 @@ DIGESTS = {
     "edge:oversize": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",
     "edge:other": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",
     "edge:book.tar.gz": "278d7cece4bf2314689b3d54ca4011d57d3f4f716bb86e86312ce38e4b9a0ba4",
+    "edge:table.nxml": "a2cb4388441fe4275a72aa05c5cc3b3d262c61c35347ea89ad80877daa130d2e",
     "html:thead_tbody": "5827681b3a0c6bc98155baa2093c3024b78a96ed4e3a90d5c5530c5c15265bb6",
     "html:thead_holds_tbody": "a11e13cd5076723969a2e8747bc00a0e4afb935b098fe774e32c846f0e4f4652",
     "html:spans": "42e99b336021b3b34b738f082b45f6aad5e442fad0d2ba43afa9c77f24f45266",
@@ -339,6 +380,14 @@ DIGESTS = {
     "html:removed_heading": "80e15d2944a2c37cdc1faba2891a35c4cd2eb36ac16d5abcb927a9e357f66f69",
     "html:annotation_above_body": "d365b80114cb15138a941a515629e357a2cac60c4b5727a25bb90733f577ed9f",
     "html:doctype_mid_text": "7fff7bf3c4889282e30623085a38199f0109ae453f4f410d2ac59682237227ae",
+    "html:code_kbd_samp_br": "b58c70eb8caec8e118dc9c93bdf4e960bdaf8332a573ada668c518bf235cb2ad",
+    "html:code_bold_italic": "ed72b6051808ca4942b9649784b73677ec5df0cd8aabbc7dc1958c7d40c16bd1",
+    "html:code_multiline": "368dace728c383aaf6c2c4dc35feaf1d8f7f7c5e77c5328c84e6bbd0c8608d35",
+    "html:li_text_code_link_sublist": "856113d682384ba9922c180d84c049df78a1e928d5411015892e8321d3a75745",
+    "html:div_flush": "193be8771dcbd3e7ae6206eebd3739763c224700290cdb4d446da6736adf838f",
+    "html:address_summary": "8ddc37c9016cdcc433c68a46758ef6acc140cf703aabeb1941114c564680820b",
+    "html:pre_code": "ba460df77a83d35b5df0354e44753c93610d2b908ba5f217cc02db820b35789f",
+    "html:table_code_cells": "66d28721117436eb28ead9cbc9155f54f253a68f54fccca387f68248d9e01278",
 }
 
 
