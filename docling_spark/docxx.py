@@ -46,10 +46,6 @@ REL = "{http://schemas.openxmlformats.org/package/2006/relationships}"
 _VAL = W + "val"
 
 
-def _qn(tag: str) -> str:
-    return W + tag
-
-
 # ======================================================================
 # Access layer (python-docx role, stdlib only)
 # ======================================================================

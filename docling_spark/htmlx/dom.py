@@ -91,15 +91,6 @@ class TextNode(str):
     # text nodes have no tag name — lets callers test ``node.name`` uniformly
     name = None
 
-    def extract_node(self) -> None:
-        """Detach from the tree."""
-        if self.parent is not None:
-            try:
-                self.parent.contents.remove(self)
-            except ValueError:
-                pass
-            self.parent = None
-
 
 class MarkupNode(TextNode):
     """Non-content markup: comments, doctypes, processing instructions.
@@ -140,9 +131,6 @@ class Tag:
     # --- attribute access -------------------------------------------------
     def get(self, key: str, default=None):
         return self.attrs.get(key, default)
-
-    def has_attr(self, key: str) -> bool:
-        return key in self.attrs
 
     # --- structure manipulation -------------------------------------------
     def append_child(self, node) -> None:
@@ -215,14 +203,6 @@ class Tag:
         for node in pool:
             if isinstance(node, Tag) and _name_match(node, names):
                 return node
-        return None
-
-    def find_parent(self, name: str) -> Optional["Tag"]:
-        p = self.parent
-        while p is not None:
-            if p.tag_name == name:
-                return p
-            p = p.parent
         return None
 
     # --- text -------------------------------------------------------------

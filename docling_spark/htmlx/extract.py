@@ -288,6 +288,77 @@ def _table_rows(table: Tag) -> list[list[tuple[Tag, int, int]]]:
     ]
 
 
+def table_shape(rows: list[list[tuple[Tag, int, int]]]) -> tuple[int, int]:
+    """(rows, cols) of (cell, colspan, rowspan) rows, accounting for spans;
+    row-header-only rows don't count (html_backend.py:1028-1051)."""
+    num_rows = 0
+    cols = 0
+    for cells in rows:
+        width = 0
+        header_only = True
+        for cell, cspan, rspan in cells:
+            width += cspan
+            if cell.tag_name == "td" or rspan == 1:
+                header_only = False
+        cols = max(cols, width)
+        if not header_only:
+            num_rows += 1
+    return num_rows, cols
+
+
+def place_cells(rows: list[list[tuple[Tag, int, int]]], num_rows: int, num_cols: int):
+    """Fill the table grid with span replication (html_backend.py:402-518).
+
+    Yields ``(cell, spec, cursor)`` per cell in row order: ``spec`` is a
+    ``TableCellSpec`` with the cell's position, spans and header flags and
+    no text yet; ``cursor`` is the column index before the skip over
+    filled slots, which the reference names rich-cell groups by. A row of
+    ``th`` cells that all span rows (a row-header row) does not advance the
+    row index: it lands one row further below the last other row per such
+    row in a run, and its cells span one row fewer."""
+    filled = [[False] * num_cols for _ in range(num_rows)]
+    start_row_span = 0
+    row_idx = -1
+    for cells in rows:
+        col_header = True
+        row_header = True
+        for cell, _, rspan in cells:
+            if cell.tag_name == "td":
+                col_header = False
+                row_header = False
+            elif rspan == 1:
+                row_header = False
+        if not row_header:
+            row_idx += 1
+            start_row_span = 0
+        else:
+            start_row_span += 1
+        start = row_idx + start_row_span
+
+        col_idx = 0
+        for cell, cspan, rspan in cells:
+            cursor = col_idx
+            if row_header:
+                rspan -= 1
+            while col_idx < num_cols and filled[start][col_idx]:
+                col_idx += 1
+            for r in range(start, min(start + rspan, num_rows)):
+                for c in range(col_idx, min(col_idx + cspan, num_cols)):
+                    filled[r][c] = True
+            spec = TableCellSpec(
+                text="",
+                row_span=rspan,
+                col_span=cspan,
+                start_row=start,
+                end_row=start + rspan,
+                start_col=col_idx,
+                end_col=col_idx + cspan,
+                column_header=col_header,
+                row_header=(not col_header) and cell.tag_name == "th",
+            )
+            yield cell, spec, cursor
+
+
 def _inside(tag: Tag, top: Tag, memo: dict) -> bool:
     """Whether ``top`` is a proper ancestor of ``tag``.
 
@@ -578,6 +649,31 @@ class HtmlExtractor:
         # img is a block tag, so a tag outside the holder set has none
         return tag.find_all("img") if tag in self._holders else []
 
+    # ------------------------------------------------------------- emitting
+    def _add_run(self, doc: SpanDoc, frag: AnnotText, text: str) -> Item:
+        """One fragment as a code or a text item under the current parent."""
+        where = dict(
+            parent=self._parent(),
+            content_layer=self.layer,
+            formatting=frag.formatting,
+            hyperlink=_link_str(frag.hyperlink),
+        )
+        if frag.code:
+            return doc.add_code(text, **where)
+        return doc.add_text("text", text, **where)
+
+    def _emit_parts(self, runs: list[AnnotText], doc: SpanDoc) -> list[int]:
+        """Emit coalesced runs split at newlines, each part in an inline
+        group when it has several fragments; blank fragments emit nothing."""
+        refs: list[int] = []
+        for part in split_on_newlines(runs):
+            with self._maybe_inline_group(part, doc):
+                for frag in part:
+                    seg = frag.text.strip()
+                    if seg:
+                        refs.append(self._add_run(doc, frag, clean_unicode(seg)).idx)
+        return refs
+
     # --------------------------------------------------------------- walking
     def _walk(self, element: Tag, doc: SpanDoc) -> list[int]:
         """Recursive DOM linearizer: buffers inline fragments, flushes at
@@ -588,34 +684,10 @@ class HtmlExtractor:
         def flush():
             if not buffer:
                 return
-            runs = coalesce_runs(list(buffer))
-            parts = split_on_newlines(runs)
+            runs = coalesce_runs(buffer)
             buffer.clear()
-            if not "".join(f.text for f in runs):
-                return
-            for part in parts:
-                with self._maybe_inline_group(part, doc):
-                    for frag in part:
-                        if frag.text.strip():
-                            seg = clean_unicode(frag.text.strip())
-                            if frag.code:
-                                it = doc.add_code(
-                                    text=seg,
-                                    parent=self._parent(),
-                                    content_layer=self.layer,
-                                    formatting=frag.formatting,
-                                    hyperlink=_link_str(frag.hyperlink),
-                                )
-                            else:
-                                it = doc.add_text(
-                                    label="text",
-                                    text=seg,
-                                    parent=self._parent(),
-                                    content_layer=self.layer,
-                                    formatting=frag.formatting,
-                                    hyperlink=_link_str(frag.hyperlink),
-                                )
-                            emitted.append(it.idx)
+            if any(f.text for f in runs):
+                emitted.extend(self._emit_parts(runs, doc))
 
         for node in list(element.contents):
             if isinstance(node, Tag):
@@ -765,26 +837,8 @@ class HtmlExtractor:
                     self.level += 1
                     with self._maybe_inline_group(runs, doc):
                         for frag in runs:
-                            seg = clean_unicode(
-                                _WS_RUNS.sub(" ", frag.text).strip()
-                            )
-                            if frag.code:
-                                doc.add_code(
-                                    text=seg,
-                                    parent=self._parent(),
-                                    content_layer=self.layer,
-                                    formatting=frag.formatting,
-                                    hyperlink=_link_str(frag.hyperlink),
-                                )
-                            else:
-                                doc.add_text(
-                                    label="text",
-                                    text=seg,
-                                    parent=self._parent(),
-                                    content_layer=self.layer,
-                                    formatting=frag.formatting,
-                                    hyperlink=_link_str(frag.hyperlink),
-                                )
+                            seg = _WS_RUNS.sub(" ", frag.text).strip()
+                            self._add_run(doc, frag, clean_unicode(seg))
                     for sub in _child_tags(li, _LIST_TAGS):
                         self._handle_block(sub, doc)
                     self.parents[self.level] = None
@@ -820,24 +874,6 @@ class HtmlExtractor:
         return group.idx
 
     # ---------------------------------------------------------------- tables
-    @staticmethod
-    def table_shape(rows: list[list[tuple[Tag, int, int]]]) -> tuple[int, int]:
-        """(rows, cols) accounting for spans; row-header-only rows don't
-        count (html_backend.py:1028-1051)."""
-        num_rows = 0
-        cols = 0
-        for cells in rows:
-            width = 0
-            header_only = True
-            for cell, cspan, rspan in cells:
-                width += cspan
-                if cell.tag_name == "td" or rspan == 1:
-                    header_only = False
-            cols = max(cols, width)
-            if not header_only:
-                num_rows += 1
-        return num_rows, cols
-
     def _is_rich_cell(self, cell: Tag) -> bool:
         """RichTableCell decision matrix (html_backend.py:366-400; ground
         truth: tests/test_backend_html.py:447-525)."""
@@ -877,81 +913,30 @@ class HtmlExtractor:
         # reaches a tbody that sat inside a thead
         if _child_tags(tag, _SECTION_TAGS):
             rows = _table_rows(tag)
-        num_rows, num_cols = tbl.num_rows, tbl.num_cols
-        grid: list[list] = [[None] * num_cols for _ in range(num_rows)]
-        start_row_span = 0
-        row_idx = -1
+        for cell, spec, cursor in place_cells(rows, tbl.num_rows, tbl.num_cols):
+            if self._has_formula:
+                for formula in cell.find_all("inline-formula"):
+                    parts = formula.text.split("$$")
+                    if len(parts) == 3:
+                        self._replace_formula(formula, TextNode(f"$${parts[1]}$$"))
 
-        for cells in rows:
-            col_header = True
-            row_header = True
-            for cell, _, rspan in cells:
-                if cell.tag_name == "td":
-                    col_header = False
-                    row_header = False
-                elif rspan == 1:
-                    row_header = False
-            if not row_header:
-                row_idx += 1
-                start_row_span = 0
-            else:
-                start_row_span += 1
-
-            col_idx = 0
-            for cell, cspan, rspan in cells:
-                if self._has_formula:
-                    for formula in cell.find_all("inline-formula"):
-                        parts = formula.text.split("$$")
-                        if len(parts) == 3:
-                            self._replace_formula(formula, TextNode(f"$${parts[1]}$$"))
-
-                rich = self._is_rich_cell(cell)
-                rich_ref = -1
-                if rich:
-                    saved_level = self.level
-                    provs = self._walk(cell, doc)
-                    self.level = saved_level
-                    if len(provs) >= 1:
-                        gname = (
-                            f"rich_cell_group_{doc.table_count}_{col_idx}_"
-                            f"{start_row_span + row_idx}"
-                        )
-                        grp = doc.add_group(
-                            label="unspecified", name=gname, parent=tbl.idx
-                        )
-                        for p in provs:
-                            doc.reparent(p, grp.idx)
-                        rich_ref = grp.idx
-                    else:
-                        rich = False
-
-                text = clean_unicode(_concat_text(cell).strip())
-                if row_header:
-                    rspan -= 1
-                while (
-                    col_idx < num_cols
-                    and grid[row_idx + start_row_span][col_idx] is not None
-                ):
-                    col_idx += 1
-                for r in range(start_row_span, start_row_span + rspan):
-                    for c in range(cspan):
-                        if row_idx + r < num_rows and col_idx + c < num_cols:
-                            grid[row_idx + r][col_idx + c] = text
-
-                tbl.cells.append(
-                    TableCellSpec(
-                        text=text,
-                        row_span=rspan,
-                        col_span=cspan,
-                        start_row=start_row_span + row_idx,
-                        end_row=start_row_span + row_idx + rspan,
-                        start_col=col_idx,
-                        end_col=col_idx + cspan,
-                        column_header=col_header,
-                        row_header=(not col_header) and cell.tag_name == "th",
-                        rich_ref=rich_ref,
+            if self._is_rich_cell(cell):
+                saved_level = self.level
+                provs = self._walk(cell, doc)
+                self.level = saved_level
+                if provs:
+                    gname = (
+                        f"rich_cell_group_{doc.table_count}_{cursor}_{spec.start_row}"
                     )
-                )
+                    grp = doc.add_group(
+                        label="unspecified", name=gname, parent=tbl.idx
+                    )
+                    for p in provs:
+                        doc.reparent(p, grp.idx)
+                    spec.rich_ref = grp.idx
+
+            spec.text = clean_unicode(_concat_text(cell).strip())
+            tbl.cells.append(spec)
 
     # ---------------------------------------------------------------- blocks
     def _handle_block(self, tag: Tag, doc: SpanDoc) -> list[int]:
@@ -973,36 +958,13 @@ class HtmlExtractor:
 
         elif name in {"p", "address", "summary"}:
             runs = coalesce_runs(self._gather(tag, find_parent_annotation=True))
-            for part in split_on_newlines(runs):
-                with self._maybe_inline_group(part, doc):
-                    for frag in part:
-                        seg = frag.text.strip()
-                        if seg:
-                            seg = clean_unicode(seg)
-                            if frag.code:
-                                it = doc.add_code(
-                                    text=seg,
-                                    parent=self._parent(),
-                                    content_layer=self.layer,
-                                    formatting=frag.formatting,
-                                    hyperlink=_link_str(frag.hyperlink),
-                                )
-                            else:
-                                it = doc.add_text(
-                                    label="text",
-                                    text=seg,
-                                    parent=self._parent(),
-                                    content_layer=self.layer,
-                                    formatting=frag.formatting,
-                                    hyperlink=_link_str(frag.hyperlink),
-                                )
-                            refs.append(it.idx)
+            refs.extend(self._emit_parts(runs, doc))
             for img in self._images(tag):
                 self._emit_image(img, doc)
 
         elif name == "table":
             rows = _table_rows(tag)
-            num_rows, num_cols = self.table_shape(rows)
+            num_rows, num_cols = table_shape(rows)
             tbl = doc.add_table(
                 num_rows=num_rows,
                 num_cols=num_cols,

@@ -294,8 +294,6 @@ class JatsExtractor:
     def _add_table_wrap(self, doc: SpanDoc, parent: Optional[int], node) -> None:
         import xml.etree.ElementTree as ET
 
-        from .model import TableCellSpec
-
         table_el = node.find("table")
         if table_el is None:
             table_el = node.find("alternatives/table")
@@ -315,8 +313,7 @@ class JatsExtractor:
         tbl = doc.add_table(
             num_rows=num_rows, num_cols=num_cols, parent=parent, caption=cap
         )
-        for cell in cells:
-            tbl.cells.append(TableCellSpec(**cell))
+        tbl.cells.extend(cells)
 
     # ---------------- the walk (reference _walk_linear, :715-819) ------
     def _walk(self, doc: SpanDoc, parent: Optional[int], node, parent_tag=None) -> str:
@@ -436,11 +433,11 @@ class JatsExtractor:
 
 
 def _parse_xhtml_table(content: str):
-    """Embedded XHTML table → (num_rows, num_cols, cell dicts). Port of the
-    reference parse_table_data (:545-641) over the htmlx DOM."""
-    from .htmlx.dom import parse_html
-    from .htmlx.extract import _cell_spans, _concat_text
-    from .htmlx.dom import TextNode
+    """Embedded XHTML table → (num_rows, num_cols, cells). Port of the
+    reference parse_table_data (:545-641) over the htmlx DOM and grid fill;
+    unlike the HTML backend it takes every descendant row and cell."""
+    from .htmlx.dom import TextNode, parse_html
+    from .htmlx.extract import _cell_spans, _concat_text, place_cells, table_shape
 
     soup = parse_html(content.encode("utf-8"))
     table = soup.find("table")
@@ -449,77 +446,22 @@ def _parse_xhtml_table(content: str):
     if table.find("table") is not None:
         return None  # nested tables unsupported (reference behavior)
 
-    rows = table.find_all("tr")
-    num_rows = 0
-    num_cols = 0
-    for row in rows:
-        col_count = 0
-        is_row_header = True
-        for cell in row.find_all(("td", "th")):
-            col_span, row_span = _cell_spans(cell)
-            col_count += col_span
-            if cell.tag_name == "td" or row_span == 1:
-                is_row_header = False
-        num_cols = max(num_cols, col_count)
-        if not is_row_header:
-            num_rows += 1
-
-    grid = [[None for _ in range(num_cols)] for _ in range(num_rows)]
-    cells_out = []
-    start_row_span = 0
-    row_idx = -1
-    for row in rows:
-        cells = row.find_all(("td", "th"))
-        col_header = True
-        row_header = True
-        for cell in cells:
-            _, row_span = _cell_spans(cell)
-            if cell.tag_name == "td":
-                col_header = False
-                row_header = False
-            elif row_span == 1:
-                row_header = False
-        if not row_header:
-            row_idx += 1
-            start_row_span = 0
-        else:
-            start_row_span += 1
-
-        col_idx = 0
-        for cell in cells:
-            # inline formulas become $$…$$ literals before text extraction
-            for formula in cell.find_all("inline-formula"):
-                parts = formula.get_text().split("$$")
-                if len(parts) == 3 and formula.parent is not None:
-                    idx = formula.parent.contents.index(formula)
-                    formula.parent.contents[idx] = TextNode(f"$${parts[1]}$$")
-            text = _concat_text(cell).strip()
-            col_span, row_span = _cell_spans(cell)
-            if row_header:
-                row_span -= 1
-            while (
-                col_idx < num_cols
-                and grid[row_idx + start_row_span][col_idx] is not None
-            ):
-                col_idx += 1
-            for r in range(start_row_span, start_row_span + row_span):
-                for c in range(col_span):
-                    if row_idx + r < num_rows and col_idx + c < num_cols:
-                        grid[row_idx + r][col_idx + c] = text
-            cells_out.append(
-                {
-                    "text": text,
-                    "row_span": row_span,
-                    "col_span": col_span,
-                    "start_row": start_row_span + row_idx,
-                    "end_row": start_row_span + row_idx + row_span,
-                    "start_col": col_idx,
-                    "end_col": col_idx + col_span,
-                    "column_header": col_header,
-                    "row_header": (not col_header) and cell.tag_name == "th",
-                }
-            )
-    return num_rows, num_cols, cells_out
+    rows = [
+        [(cell, *_cell_spans(cell)) for cell in row.find_all(("td", "th"))]
+        for row in table.find_all("tr")
+    ]
+    num_rows, num_cols = table_shape(rows)
+    cells = []
+    for cell, spec, _ in place_cells(rows, num_rows, num_cols):
+        # inline formulas become $$…$$ literals before text extraction
+        for formula in cell.find_all("inline-formula"):
+            parts = formula.get_text().split("$$")
+            if len(parts) == 3 and formula.parent is not None:
+                idx = formula.parent.contents.index(formula)
+                formula.parent.contents[idx] = TextNode(f"$${parts[1]}$$")
+        spec.text = _concat_text(cell).strip()
+        cells.append(spec)
+    return num_rows, num_cols, cells
 
 
 def extract_jats(raw: bytes, name: str = "file") -> SpanDoc:

@@ -34,15 +34,6 @@ class Formatting:
     strikethrough: bool = False
     script: Optional[str] = None  # None | "sub" | "super"
 
-    def any(self) -> bool:
-        return bool(
-            self.bold
-            or self.italic
-            or self.underline
-            or self.strikethrough
-            or self.script
-        )
-
 
 @dataclass
 class TableCellSpec:
@@ -293,11 +284,3 @@ class SpanDoc:
             tbl.captions.append(caption.idx)
         self.table_count += 1
         return tbl
-
-    # -- traversal -----------------------------------------------------------
-    def walk(self, start: int = 0, level: int = 0):
-        """Depth-first (item, depth) traversal from ``start`` inclusive."""
-        item = self.items[start]
-        yield item, level
-        for c in item.children:
-            yield from self.walk(c, level + 1)

@@ -105,32 +105,6 @@ def bucketed_candidates(
     )
 
 
-def embedding_cosine_dups(
-    embeddings: DataFrame,
-    n_planes: int = 6,
-    threshold: float = 0.95,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding near-dup detection: LSH candidates → exact cosine filter."""
-    cand = bucketed_candidates(embeddings, n_planes, dim=dim)
-    e_a = embeddings.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
-    )
-    e_b = embeddings.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b")
-    )
-    sim = _dot(F.col("emb_a"), F.col("emb_b")) / (
-        _norm(F.col("emb_a")) * _norm(F.col("emb_b"))
-    )
-    return (
-        cand.join(e_a, "vec_a")
-        .join(e_b, "vec_b")
-        .withColumn("cosine", F.round(sim, 4))
-        .filter(F.col("cosine") >= threshold)
-        .select("vec_a", "vec_b", "cosine")
-    )
-
-
 # ------------------------------------------------------------------ IVF path
 def fit_codebook(
     embeddings: DataFrame,

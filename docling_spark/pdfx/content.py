@@ -318,7 +318,3 @@ class TextInterpreter:
             except Exception:
                 pass
             operands = []
-
-
-def extract_runs(page: PdfPage) -> list[Run]:
-    return TextInterpreter(page).run()

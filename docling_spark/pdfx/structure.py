@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import re
 from collections import Counter
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 from .layout import Cell, paragraph_groups, sanitize_text
@@ -341,11 +341,6 @@ def doc_structured_blocks(pages_cells: list[list[Cell]]) -> list[PdfBlock]:
         blocks.extend(pblocks)
     assign_heading_levels(blocks)
     return blocks
-
-
-def doc_structured_spans(pages_cells: list[list[Cell]]) -> list[dict]:
-    """All pages' cells → one labeled, heading-parented span list."""
-    return blocks_to_spans(doc_structured_blocks(pages_cells))
 
 
 def blocks_to_spandoc(blocks: list[PdfBlock], page_sizes: list):

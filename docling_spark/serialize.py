@@ -34,31 +34,16 @@ def _escape_text(text: str, escape_html: bool = True) -> str:
 
 
 def _inline(item: Item, escape_html: bool = True) -> str:
-    """Inline form of a text item: formatting wrappers + hyperlink."""
-    if item.label == "code":
-        return _code_inline(item)
+    """Inline form of a text item: formatting wrappers + hyperlink. Code
+    renders in backticks, or fenced when it spans lines."""
     if item.label == "formula":
         return f"${item.text}$"
-    txt = _escape_text(item.text, escape_html)
-    f = item.formatting
-    if f is not None:
-        if f.bold and f.italic:
-            txt = f"***{txt}***"
-        elif f.bold:
-            txt = f"**{txt}**"
-        elif f.italic:
-            txt = f"*{txt}*"
-        if f.strikethrough:
-            txt = f"~~{txt}~~"
-    if item.hyperlink:
-        txt = f"[{txt}]({item.hyperlink})"
-    return txt
-
-
-def _code_inline(item: Item) -> str:
-    if "\n" in item.text:
-        return f"```\n{item.text}\n```"
-    txt = f"`{item.text}`"
+    if item.label == "code":
+        if "\n" in item.text:
+            return f"```\n{item.text}\n```"
+        txt = f"`{item.text}`"
+    else:
+        txt = _escape_text(item.text, escape_html)
     f = item.formatting
     if f is not None:
         if f.bold and f.italic:
@@ -91,16 +76,22 @@ class _MdWriter:
     def _visible(self, item: Item) -> bool:
         return item.content_layer in self.layers
 
-    def run(self) -> str:
-        for cidx in self.doc.items[0].children:
-            self._block(self.doc.items[cidx])
-        return "\n\n".join(self.blocks).strip()
+    def _inline_parts(self, group: Item) -> list[str]:
+        """The non-empty inline forms of an inline group's visible text
+        items."""
+        parts = []
+        for c in group.children:
+            ti = self.doc.items[c]
+            if ti.kind == "text" and self._visible(ti):
+                s = _inline(ti, self.escape_html)
+                if s:
+                    parts.append(s)
+        return parts
 
     def run_with_spans(self) -> "tuple[str, dict[int, tuple[int, int]]]":
         """markdown + per-item character offsets into it (north rule:
-        "extracted text + span offsets"). Invariants (test-pinned): the
-        markdown is byte-identical to :meth:`run`, and md[start:end] is
-        exactly the text the item emitted."""
+        "extracted text + span offsets"); md[start:end] is exactly the
+        text the item emitted (test-pinned)."""
         for cidx in self.doc.items[0].children:
             self._block(self.doc.items[cidx])
         md_full = "\n\n".join(self.blocks)
@@ -142,13 +133,7 @@ class _MdWriter:
                     self._put(("lines", line_owners), "\n".join(lines))
             elif item.label == "inline":
                 if self._visible(item):
-                    parts = [
-                        _inline(doc.items[c], self.escape_html)
-                        for c in item.children
-                        if doc.items[c].kind == "text"
-                        and self._visible(doc.items[c])
-                    ]
-                    text = " ".join(p for p in parts if p)
+                    text = " ".join(self._inline_parts(item))
                     if text:
                         self._put(item.idx, text)
             else:  # section / unspecified: transparent
@@ -172,12 +157,7 @@ class _MdWriter:
                 for c in item.children:
                     ch = doc.items[c]
                     if not item.text and ch.kind == "group" and ch.label == "inline":
-                        for t in ch.children:
-                            ti = doc.items[t]
-                            if ti.kind == "text" and self._visible(ti):
-                                s = _inline(ti, self.escape_html)
-                                if s:
-                                    inline_parts.append(s)
+                        inline_parts.extend(self._inline_parts(ch))
                     else:
                         plain_children.append(c)
                 joined = " ".join(([head] if head else []) + inline_parts)
@@ -251,16 +231,11 @@ class _MdWriter:
             for gidx in child.children:
                 sub = doc.items[gidx]
                 if sub.kind == "group" and sub.label == "inline":
-                    for t in sub.children:
-                        ti = doc.items[t]
-                        if ti.kind == "text" and self._visible(ti):
-                            s = _inline(ti, self.escape_html)
-                            if s:
-                                parts.append(s)
+                    parts.extend(self._inline_parts(sub))
                 elif sub.kind == "group" and sub.label == "list":
                     sublists.append(sub)
                 elif sub.kind == "text" and self._visible(sub):
-                    s = _inline(sub)
+                    s = _inline(sub, self.escape_html)
                     if s:
                         parts.append(s)
             # keep the item text's own trailing whitespace (pptx sample
@@ -305,7 +280,7 @@ def to_markdown(
     layers: Iterable[str] = DEFAULT_LAYERS,
     escape_html: bool = True,
 ) -> str:
-    return _MdWriter(doc, frozenset(layers), escape_html).run()
+    return to_markdown_with_spans(doc, layers, escape_html)[0]
 
 
 def to_markdown_with_spans(
@@ -315,7 +290,7 @@ def to_markdown_with_spans(
 ) -> "tuple[str, dict[int, tuple[int, int]]]":
     """markdown + {item_idx: (char_start, char_end)} offsets into it — the
     north rule's "extracted text + span offsets". The markdown is
-    byte-identical to :func:`to_markdown` (golden-pinned); offsets cover
+    :func:`to_markdown`'s (golden-pinned); offsets cover
     the block(s) each item emitted (heading line, paragraph, its list
     line, table grid, caption, image placeholder)."""
     return _MdWriter(doc, frozenset(layers), escape_html).run_with_spans()
@@ -500,10 +475,3 @@ def to_itxt(
 
     visit(0, 0)
     return "\n".join(lines)
-
-
-# ----------------------------------------------------------------- plain text
-def to_text(doc: SpanDoc, layers: Iterable[str] = DEFAULT_LAYERS) -> str:
-    """Plain extracted text: markdown minus markup — the `extracted_text`
-    output column's contract is markdown (goldens are .md files)."""
-    return to_markdown(doc, layers)

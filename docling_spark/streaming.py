@@ -15,7 +15,6 @@ complementing the batch runner's lineage table.
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,27 +26,35 @@ def read_pages_stream(
     spark: SparkSession,
     input_path: str,
     max_files_per_trigger: int = 16,
+    schema=PAGES_SCHEMA,
 ) -> DataFrame:
     """File-source stream over a growing pages directory (parquet)."""
     return (
-        spark.readStream.schema(PAGES_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )
 
 
-def extract_stream(
-    pages_stream: DataFrame,
-    base_uri_mode: str = "none",
-    max_bytes: int = 64 * 1024 * 1024,
-) -> DataFrame:
-    """Same logical plan as the batch path, minus the salted repartition
-    (micro-batches are already small; a shuffle per trigger buys nothing)."""
-    return extract_pages(
-        pages_stream,
-        base_uri_mode=base_uri_mode,
-        max_bytes=max_bytes,
-        shuffle_partitions=0,  # falsy → no repartition; streaming-safe plan
+def _per_batch_dirs(
+    stream: DataFrame, plan, output_path: str, checkpoint_path: str
+):
+    """Drain ``stream`` (availableNow) through foreachBatch, writing
+    ``plan(batch_df)`` of micro-batch N to ``output_path/batch_id=N``. The
+    directory write is idempotent under replay: a restart that re-runs
+    batch N overwrites N's directory rather than duplicating rows, so the
+    union of batch outputs is exactly-once across kill/restart."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        plan(batch_df).write.mode("overwrite").parquet(
+            f"{output_path}/batch_id={batch_id}"
+        )
+
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -61,8 +68,6 @@ def windowed_status_counts(
     batch runner's lineage `status_counts` — state is dropped once the
     watermark passes a window's end, so the aggregation runs forever on a
     crawl feed without unbounded memory."""
-    from pyspark.sql import functions as F
-
     return (
         extracted_stream.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), "status")
@@ -103,7 +108,6 @@ def stateful_dedup_stream(
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` on the
     session; the TTL belongs to continuous triggers."""
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
         StringType,
@@ -209,20 +213,18 @@ def bloom_probe_stream(
     m: "int | None" = None,
     k: "int | None" = None,
     max_files_per_trigger: int = 1,
-    schema=None,
+    schema=PAGES_SCHEMA,
 ):
     """Streaming Bloom membership — the natural INCREMENTAL dedup: new
     crawl rows arrive as micro-batches and are tested against the static
     history filter (``bloom``, a set-bit table from ops/bloom.bloom_build)
     without ever rescanning history.
 
-    Shape: foreachBatch applies the SAME ``bloom_maybe_dup`` plan as the
-    batch path (one plan, two drivers — the module's parity rule), writing
-    each micro-batch's verdicts to ``output_path/batch_id=N``. The
-    per-batch directory write is idempotent under replay: a restart that
-    re-runs batch N overwrites N's directory rather than duplicating rows,
-    so the final table equals the batch verdicts exactly-once across
-    kill/restart (tests/test_streaming.py)."""
+    Shape: each micro-batch runs the SAME ``bloom_maybe_dup`` plan as the
+    batch path (one plan, two drivers — the module's parity rule) into its
+    own ``batch_id=N`` directory (:func:`_per_batch_dirs`), so the final
+    table equals the batch verdicts exactly-once across kill/restart
+    (tests/test_streaming.py)."""
     from .ops import bloom as bloom_ops
 
     kwargs = {}
@@ -230,23 +232,11 @@ def bloom_probe_stream(
         kwargs["m"] = m
     if k is not None:
         kwargs["k"] = k
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts = bloom_ops.bloom_maybe_dup(batch_df, bloom, key_col, **kwargs)
-        verdicts.write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
-        )
-
-    reader = (
-        spark.readStream.schema(schema or PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-    return (
-        reader.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _per_batch_dirs(
+        read_pages_stream(spark, input_path, max_files_per_trigger, schema),
+        lambda batch_df: bloom_ops.bloom_maybe_dup(batch_df, bloom, key_col, **kwargs),
+        output_path,
+        checkpoint_path,
     )
 
 
@@ -257,7 +247,7 @@ def cdc_worklist_stream(
     output_path: str,
     checkpoint_path: str,
     max_files_per_trigger: int = 1,
-    schema=None,
+    schema=PAGES_SCHEMA,
 ):
     """Streaming crawl CDC — continuous ingestion of a fresh crawl:
     new-snapshot rows arrive as micro-batches and are classified against
@@ -267,32 +257,20 @@ def cdc_worklist_stream(
     rule). 'removed' detection inherently needs the full new snapshot
     and stays a batch job (ops/snapshot.snapshot_delta).
 
-    Shape: foreachBatch + per-batch directory write, idempotent under
-    replay exactly like bloom_probe_stream — a restart that re-runs
-    batch N overwrites N's directory, so the union of batch outputs
-    equals the batch work list exactly-once across kill/restart. The
-    old snapshot enters each micro-batch as the slim (url, hash)
-    projection, computed and PERSISTED once up front — the old blobs
-    are scanned and hashed a single time, not per micro-batch."""
+    Shape: per-batch directory writes (:func:`_per_batch_dirs`), so the
+    union of batch outputs equals the batch work list exactly-once across
+    kill/restart. The old snapshot enters each micro-batch as the slim
+    (url, hash) projection, computed and PERSISTED once up front — the old
+    blobs are scanned and hashed a single time, not per micro-batch."""
     from .ops.snapshot import delta_worklist, old_slim_frame
 
     old_slim = old_slim_frame(old_snapshot).persist()
     old_slim.count()  # materialize before the first batch
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        wl = delta_worklist(old_snapshot, batch_df, old_slim=old_slim)
-        wl.write.mode("overwrite").parquet(f"{output_path}/batch_id={batch_id}")
-
-    reader = (
-        spark.readStream.schema(schema or PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-    return (
-        reader.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _per_batch_dirs(
+        read_pages_stream(spark, input_path, max_files_per_trigger, schema),
+        lambda batch_df: delta_worklist(old_snapshot, batch_df, old_slim=old_slim),
+        output_path,
+        checkpoint_path,
     )
 
 
@@ -304,10 +282,12 @@ def run_stream(
     max_files_per_trigger: int = 16,
     trigger_once: bool = True,
 ):
-    """Start the streaming extraction. ``trigger_once`` drains what exists
+    """Start the streaming extraction: the batch ``extract_pages`` plan,
+    which without ``shuffle_partitions`` adds no salted repartition (a
+    micro-batch is already small). ``trigger_once`` drains what exists
     and stops (the batch-equivalent mode used by tests and backfills);
     otherwise runs continuously."""
-    stream = extract_stream(read_pages_stream(spark, input_path, max_files_per_trigger))
+    stream = extract_pages(read_pages_stream(spark, input_path, max_files_per_trigger))
     writer = (
         stream.writeStream.format("parquet")
         .option("path", output_path)

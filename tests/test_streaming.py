@@ -65,11 +65,8 @@ def test_stream_drain_and_incremental(spark, tmp_path):
 
 
 def test_windowed_status_counts_with_watermark(spark, tmp_path):
-    from docling_spark.streaming import (
-        extract_stream,
-        read_pages_stream,
-        windowed_status_counts,
-    )
+    from docling_spark.job import extract_pages
+    from docling_spark.streaming import read_pages_stream, windowed_status_counts
 
     inp = str(tmp_path / "win_in")
     out = str(tmp_path / "win_out")
@@ -77,7 +74,7 @@ def test_windowed_status_counts_with_watermark(spark, tmp_path):
     _write_slice(spark, inp, 0, 100)
 
     agg = windowed_status_counts(
-        extract_stream(read_pages_stream(spark, inp)),
+        extract_pages(read_pages_stream(spark, inp)),
         window="1 minute",
         watermark="0 seconds",
     )
@@ -104,7 +101,7 @@ def test_windowed_status_counts_with_watermark(spark, tmp_path):
     _write_slice(spark, inp, 200, 220)  # warc_ts 200..219s > window2 end
     q2 = (
         windowed_status_counts(
-            extract_stream(read_pages_stream(spark, inp)),
+            extract_pages(read_pages_stream(spark, inp)),
             window="1 minute",
             watermark="0 seconds",
         )
