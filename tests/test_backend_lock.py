@@ -165,6 +165,17 @@ HTML_CASES = {
     "<tr><td><code>c1</code></td><td>a <code>c2</code></td></tr>"
     "<tr><td><b><code>c3</code></b></td><td><kbd>k</kbd><br><samp>s</samp></td></tr>"
     "</table>",
+    # tokenizer paths: a self-closing non-void tag inside its namesake,
+    # attribute values with entities and Unicode spaces (in a value, after a
+    # tag name, between attributes), upper-case names and repeated attributes
+    "p_self_closing": "<p>a<p/>b</p><div>c<span/>d<br/>e</div>",
+    "attr_entities_unicode_space": "<p><a href='/q?a=1&amp;b=2&lt;3' title=\"caf&eacute;\">"
+    "amp link</a> <a href=/u\xa0v>nbsp value</a> <a\xa0href=/w>after name</a> "
+    "<a href=/x\u3000title=t>ideographic</a></p>"
+    "<img src=\"i.png\" alt=\"A&nbsp;B&#1;C\"><img src=j.png alt=\"x\u2003y\">",
+    "upper_case_duplicate_attrs": "<DIV><H2 ID=a id=b>Head</H2><P><A HREF='/first' "
+    "href='/second' Href=/third>dup link</A></P><IMG SRC=one.png src=two.png "
+    "ALT=Upper alt=lower><UL><LI>item</LI></UL></DIV>",
 }
 
 # a JATS table-wrap: thead th rowspan, colspan, td rowspan, an inline
@@ -388,6 +399,9 @@ DIGESTS = {
     "html:address_summary": "8ddc37c9016cdcc433c68a46758ef6acc140cf703aabeb1941114c564680820b",
     "html:pre_code": "ba460df77a83d35b5df0354e44753c93610d2b908ba5f217cc02db820b35789f",
     "html:table_code_cells": "66d28721117436eb28ead9cbc9155f54f253a68f54fccca387f68248d9e01278",
+    "html:p_self_closing": "80d162b5e458521f37cca1e2cf23ca5622e8be2af419047e98de6c598bc2c055",
+    "html:attr_entities_unicode_space": "02c72c6b9336cdd12a5b0ea6e2151033d8e89a3f67bee2daf05bfcbae8f9a2a0",
+    "html:upper_case_duplicate_attrs": "a16eddd52468ce2c9656c1c06efe9fd52fa79d8b91cbbc61809a316333fcf1bb",
 }
 
 
