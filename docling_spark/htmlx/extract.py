@@ -483,7 +483,7 @@ class HtmlExtractor:
         self._has_formula = any(t.tag_name == "inline-formula" for t in index)
         self.list_ordered.clear()
         self.list_start.clear()
-        self._walk(content, doc)
+        self._walk(content, doc, [])
         return doc
 
     # ------------------------------------------------------------- helpers
@@ -675,10 +675,11 @@ class HtmlExtractor:
         return refs
 
     # --------------------------------------------------------------- walking
-    def _walk(self, element: Tag, doc: SpanDoc) -> list[int]:
+    def _walk(self, element: Tag, doc: SpanDoc, emitted: list[int]) -> None:
         """Recursive DOM linearizer: buffers inline fragments, flushes at
-        block boundaries (html_backend.py:520-614). Returns emitted item idxs."""
-        emitted: list[int] = []
+        block boundaries (html_backend.py:520-614). Appends the emitted item
+        idxs to ``emitted``, which nested walks share, so an item's idx is
+        stored once however deep it sits."""
         buffer: list[AnnotText] = []
 
         def flush():
@@ -700,16 +701,16 @@ class HtmlExtractor:
                 elif name in FORMAT_TAGS:
                     flush()
                     with self._push_format([name]):
-                        emitted.extend(self._walk(node, doc))
+                        self._walk(node, doc, emitted)
                 elif name == "a":
                     with self._push_hyperlink(node):
-                        emitted.extend(self._walk(node, doc))
+                        self._walk(node, doc, emitted)
                 elif name in BLOCK_TAGS:
                     flush()
                     emitted.extend(self._handle_block(node, doc))
                 elif node in self._holders:
                     flush()
-                    emitted.extend(self._walk(node, doc))
+                    self._walk(node, doc, emitted)
                 else:
                     buffer.extend(
                         self._gather(
@@ -730,7 +731,6 @@ class HtmlExtractor:
                     )
 
         flush()
-        return emitted
 
     # -------------------------------------------------------------- headings
     def _handle_heading(self, tag: Tag, doc: SpanDoc) -> list[int]:
@@ -922,7 +922,8 @@ class HtmlExtractor:
 
             if self._is_rich_cell(cell):
                 saved_level = self.level
-                provs = self._walk(cell, doc)
+                provs: list[int] = []
+                self._walk(cell, doc, provs)
                 self.level = saved_level
                 if provs:
                     gname = (
@@ -997,11 +998,11 @@ class HtmlExtractor:
 
         elif name == "footer":
             with self._section_group(tag, doc, furniture=True):
-                self._walk(tag, doc)
+                self._walk(tag, doc, [])
 
         elif name == "details":
             with self._section_group(tag, doc):
-                self._walk(tag, doc)
+                self._walk(tag, doc, [])
 
         return refs
 

@@ -10,6 +10,9 @@ from __future__ import annotations
 
 import time
 
+import pytest
+
+from docling_spark.htmlx.dom import _TAG, parse_html
 from docling_spark.htmlx.extract import HtmlExtractor
 from docling_spark.job import _extract_one
 
@@ -78,4 +81,33 @@ def test_extract_time_grows_linearly_with_page_size():
 
     t_small = _best_of(lambda: run(small))
     t_large = _best_of(lambda: run(large))
+    assert t_large / t_small <= 8, (t_small, t_large)
+
+
+# Parser pages, one per way a tag meets the fused loop's patterns, whose
+# nested quantifiers must not backtrack into quadratic time
+ATTR_VALUE = "v" * 300
+PARSER_UNITS = {
+    # fast path: many attributes with long quoted and bare values
+    "many_long_attrs": "<div " + " ".join(
+        f'a{k}="{ATTR_VALUE}" b{k}=\'{ATTR_VALUE}\' c{k}={ATTR_VALUE}' for k in range(10)
+    ) + ">text</div>\n",
+    # an unterminated start tag runs into the next tag: it misses the fast
+    # pattern, and the stdlib parses it (up to the next ">")
+    "unterminated_runs": "<a b c d e f g h i j k l m n o <p>para</p>"
+    "<div x=1 y=\"2\" z\n<span>s</span>\n",
+    # text dense with literal "<" (no tag follows) and "&"
+    "lt_amp_text": "1 < 2 && 3 <4 & x &lt; y &amp z <= w &#1 & <- < ",
+}
+
+
+@pytest.mark.parametrize("name", sorted(PARSER_UNITS))
+def test_parse_time_grows_linearly_with_page_size(name):
+    unit = PARSER_UNITS[name]
+    if name == "unterminated_runs":
+        assert _TAG.match(unit, 0) is None
+    small = unit * (100_000 // len(unit))
+    large = small * 4
+    t_small = _best_of(lambda: parse_html(small))
+    t_large = _best_of(lambda: parse_html(large))
     assert t_large / t_small <= 8, (t_small, t_large)
