@@ -20,7 +20,11 @@ Inputs, all built in the repo (no reference corpus needed):
   page;
 - small HTML pages, one per path of the HTML walker (``HTML_CASES``);
 - a JATS article whose ``table-wrap`` takes every branch of the table
-  grid fill (``JATS_TABLE``).
+  grid fill (``JATS_TABLE``);
+- titles, headings, lists and code in markdown, AsciiDoc, DocTags, JATS,
+  the four USPTO dialects (ICE, grant v2.5, application v1.x, APS), a
+  DOCX and a PPTX (``STRUCT_CASES``, ``_docx_lists``, ``_pptx_deck``), so
+  every call site that builds such an item is run.
 
 To regenerate after an intended output change, run
 ``PYTHONPATH=. python tests/test_backend_lock.py`` and paste the printed
@@ -196,6 +200,156 @@ JATS_TABLE = (
 )
 
 
+# titles, headings, lists and code in every backend that builds them (the
+# HTML and PDF ones are reached above): markdown, AsciiDoc, DocTags, JATS,
+# the four USPTO dialects, and a DOCX and a PPTX built below
+STRUCT_CASES = {
+    "lists.md": b"# Top\n\n## Sub\n\nA `code span` here.\n\n"
+    b"- plain *emph* tail\n- b\n\n```\nfenced\n```\n\n    indented\n\n"
+    b"<div>html block</div>\n",
+    "lists.adoc": b"= Top\n\n== Section\n\nText.\n\n* a\n  * nested\n* b\n\n"
+    b"=== Deeper\n",
+    "lists.doctags.txt": b"<doctag><title>T</title>\n"
+    b"<section_header_level_2><loc_10><loc_20><loc_30><loc_40>Sec"
+    b"</section_header_level_2>\n<ordered_list><list_item>one</list_item>\n"
+    b"<list_item>two</list_item>\n</ordered_list>\n"
+    b"<unordered_list><list_item>u</list_item>\n</unordered_list>\n"
+    b"<code><_Python_>print(1)<caption>cap</caption></code>\n"
+    b"<code>plain</code>\n</doctag>",
+    "lists.nxml": b'<?xml version="1.0"?>\n<article><front><article-meta>'
+    b"<title-group><article-title>Lists</article-title></title-group>"
+    b"<abstract><title>Summary</title><p>Short abstract.</p></abstract>"
+    b"</article-meta></front><body><sec><title>Intro</title><p>Before "
+    b'<list list-type="bullet"><list-item><p>first</p></list-item>'
+    b"<list-item><p>second</p></list-item></list> after</p></sec></body>"
+    b'<back><ref-list><title>References</title><ref id="r1"><mixed-citation>'
+    b'Doe J. A paper. 2001.</mixed-citation></ref><ref id="r2">'
+    b"<element-citation><person-group><name><surname>Roe</surname>"
+    b"<given-names>R</given-names></name></person-group><article-title>"
+    b"Other</article-title><source>J</source><year>2002</year>"
+    b"</element-citation></ref></ref-list></back></article>",
+    "ice.xml": b'<?xml version="1.0" encoding="UTF-8"?>\n'
+    b'<!DOCTYPE us-patent-grant SYSTEM "us-patent-grant-v45-2014-04-03.dtd">\n'
+    b"<us-patent-grant><us-bibliographic-data-grant><invention-title>Widget"
+    b"</invention-title></us-bibliographic-data-grant><abstract><p>Abstract."
+    b'</p></abstract><description><heading level="1">BACKGROUND</heading>'
+    b"<p>Body text.</p></description><claims><claim><claim-text>A widget."
+    b"</claim-text></claim></claims></us-patent-grant>",
+    "grant-v2.xml": b'<?xml version="1.0"?>\n'
+    b'<!DOCTYPE PATDOC SYSTEM "ST32-US-Grant-025xml.dtd" [ ]>\n'
+    b"<PATDOC><SDOBI><B500><B540><STEXT><PDAT>Gizmo</PDAT></STEXT></B540>"
+    b"</B500></SDOBI><SDOAB><BTEXT><PARA><PTEXT><PDAT>An abstract.</PDAT>"
+    b'</PTEXT></PARA></BTEXT></SDOAB><SDODE><H LVL="1"><STEXT><PDAT>'
+    b"BACKGROUND</PDAT></STEXT></H><PARA><PTEXT><PDAT>Body.</PDAT></PTEXT>"
+    b"</PARA></SDODE><SDOCL><CL><CLM><PARA><PTEXT><PDAT>A gizmo.</PDAT>"
+    b"</PTEXT></PARA></CLM></CL></SDOCL></PATDOC>",
+    "app-v1.xml": b'<?xml version="1.0"?>\n<!DOCTYPE '
+    b'patent-application-publication SYSTEM "pap-v16-2002-01-01.dtd" [ ]>\n'
+    b"<patent-application-publication><subdoc-bibliographic-information>"
+    b"<technical-information><title-of-invention>Gadget</title-of-invention>"
+    b"</technical-information></subdoc-bibliographic-information>"
+    b"<subdoc-abstract><paragraph>An abstract.</paragraph></subdoc-abstract>"
+    b'<subdoc-description><heading lvl="1">BACKGROUND</heading><paragraph>'
+    b"Body.</paragraph></subdoc-description><subdoc-claims><claim>"
+    b"<claim-text>A gadget.</claim-text></claim></subdoc-claims>"
+    b"</patent-application-publication>",
+    "aps.txt": b"PATN\nWKU  039305000\nTTL  Apparatus\nABST\n"
+    b"PAL  An abstract line.\nBSUM\nPAC  BACKGROUND\nPAR  Body text.\n"
+    b"CLMS\nNUM  1.\nPAR  A claim.\n",
+}
+
+
+def _docx_lists() -> bytes:
+    """Title, two heading styles, a numbered list with a nested level and a
+    two-run item, then a bulleted list."""
+
+    def para(runs: str, ppr: str = "") -> str:
+        return f"<w:p><w:pPr>{ppr}</w:pPr>{runs}</w:p>"
+
+    def style(sid: str) -> str:
+        return f'<w:pStyle w:val="{sid}"/>'
+
+    def num(nid: int, ilvl: int) -> str:
+        return f'<w:numPr><w:ilvl w:val="{ilvl}"/><w:numId w:val="{nid}"/></w:numPr>'
+
+    def run(text: str, rpr: str = "") -> str:
+        return f"<w:r><w:rPr>{rpr}</w:rPr><w:t xml:space=\"preserve\">{text}</w:t></w:r>"
+
+    body = "".join((
+        para(run("Lists"), style("Title")),
+        para(run("First"), style("Heading1")),
+        para(run("Body.")),
+        para(run("one"), num(1, 0)),
+        para(run("one.a"), num(1, 1)),
+        para(run("two ", "<w:b/>") + run("plain"), num(1, 0)),
+        para(run("Second"), style("Heading2")),
+        para(run("bullet"), num(2, 0)),
+        para(run("After.")),
+    ))
+    styles = "".join(
+        f'<w:style w:type="paragraph" w:styleId="{sid}"><w:name w:val="{name}"/>'
+        "</w:style>"
+        for sid, name in (("Title", "Title"), ("Heading1", "heading 1"),
+                          ("Heading2", "heading 2"))
+    )
+    numbering = (
+        '<w:abstractNum w:abstractNumId="0"><w:lvl w:ilvl="0"><w:numFmt '
+        'w:val="decimal"/></w:lvl><w:lvl w:ilvl="1"><w:numFmt '
+        'w:val="lowerLetter"/></w:lvl></w:abstractNum><w:abstractNum '
+        'w:abstractNumId="1"><w:lvl w:ilvl="0"><w:numFmt w:val="bullet"/>'
+        '</w:lvl></w:abstractNum><w:num w:numId="1"><w:abstractNumId w:val="0"/>'
+        '</w:num><w:num w:numId="2"><w:abstractNumId w:val="1"/></w:num>'
+    )
+    return corpus._zip_bytes({
+        "word/document.xml": f"<w:document {corpus._W_NS}><w:body>{body}"
+        "</w:body></w:document>",
+        "word/styles.xml": f"<w:styles {corpus._W_NS}>{styles}"
+        '<w:style w:type="paragraph" w:default="1" w:styleId="Normal">'
+        '<w:name w:val="Normal"/></w:style></w:styles>',
+        "word/numbering.xml": f"<w:numbering {corpus._W_NS}>{numbering}"
+        "</w:numbering>",
+    })
+
+
+def _pptx_deck() -> bytes:
+    """One slide: a title placeholder, then a shape with a bullet, an
+    indented auto-numbered paragraph and a plain one."""
+    ns = ('xmlns:p="http://schemas.openxmlformats.org/presentationml/2006/main" '
+          'xmlns:a="http://schemas.openxmlformats.org/drawingml/2006/main" '
+          'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/'
+          'relationships"')
+
+    def shape(ph: str, paras: str) -> str:
+        return (f"<p:sp><p:nvSpPr><p:cNvPr id=\"2\" name=\"s\"/><p:cNvSpPr/>"
+                f"<p:nvPr>{ph}</p:nvPr></p:nvSpPr><p:spPr><a:xfrm>"
+                '<a:off x="100" y="200"/><a:ext cx="300" cy="400"/></a:xfrm>'
+                f"</p:spPr><p:txBody>{paras}</p:txBody></p:sp>")
+
+    def para(text: str, ppr: str = "") -> str:
+        return f"<a:p>{ppr}<a:r><a:t>{text}</a:t></a:r></a:p>"
+
+    slide = (
+        f"<p:sld {ns}><p:cSld><p:spTree>"
+        + shape('<p:ph type="title"/>', para("Deck title"))
+        + shape("", para("bullet one", '<a:pPr><a:buChar char="-"/></a:pPr>')
+                + para("numbered", '<a:pPr lvl="1"><a:buAutoNum '
+                       'type="arabicPeriod"/></a:pPr>')
+                + para("plain"))
+        + "</p:spTree></p:cSld></p:sld>"
+    )
+    rels_ns = 'xmlns="http://schemas.openxmlformats.org/package/2006/relationships"'
+    return corpus._zip_bytes({
+        "ppt/presentation.xml": f"<p:presentation {ns}><p:sldIdLst>"
+        '<p:sldId id="256" r:id="rId2"/></p:sldIdLst>'
+        '<p:sldSz cx="9144000" cy="6858000"/></p:presentation>',
+        "ppt/_rels/presentation.xml.rels": f"<Relationships {rels_ns}>"
+        '<Relationship Id="rId2" Type="http://schemas.openxmlformats.org/'
+        'officeDocument/2006/relationships/slide" Target="slides/slide1.xml"/>'
+        "</Relationships>",
+        "ppt/slides/slide1.xml": slide,
+    })
+
+
 def _html_case(body: str) -> bytes:
     if body.startswith("<html>"):
         return body.encode()
@@ -261,6 +415,9 @@ def _cases() -> dict[str, tuple[str, bytes, str]]:
     })
     for name, body in HTML_CASES.items():
         cases[f"html:{name}"] = (BASE + f"{name}.html", _html_case(body), "html")
+    for name, raw in {**STRUCT_CASES, "lists.docx": _docx_lists(),
+                      "deck.pptx": _pptx_deck()}.items():
+        cases[f"struct:{name}"] = (BASE + name, raw, sniff_content_type(name, raw))
     return cases
 
 
@@ -402,6 +559,16 @@ DIGESTS = {
     "html:p_self_closing": "80d162b5e458521f37cca1e2cf23ca5622e8be2af419047e98de6c598bc2c055",
     "html:attr_entities_unicode_space": "02c72c6b9336cdd12a5b0ea6e2151033d8e89a3f67bee2daf05bfcbae8f9a2a0",
     "html:upper_case_duplicate_attrs": "a16eddd52468ce2c9656c1c06efe9fd52fa79d8b91cbbc61809a316333fcf1bb",
+    "struct:lists.md": "4c0f6fc1bc5d207c759eeceb6796da50bdaa0419f87ea51d9144ae6d7e786231",
+    "struct:lists.adoc": "0dc3f69c64823456efc5f7d7123899ba4340143b73575d6020579d87404ec6b2",
+    "struct:lists.doctags.txt": "5a9532d16b4ac12c31984d487b8c6ea7359112240aa72ebfb73a24208c6b73e5",
+    "struct:lists.nxml": "29a36bee153e2a0b6f5212d938254007218372e0fb9c49e2f6630d9790e80f8f",
+    "struct:ice.xml": "c226de73be823f9c1b35baead7ec18ea0b93eae1c2e09f147846530c4f7a34bd",
+    "struct:grant-v2.xml": "71d70b8858c1062350e55334aed357b5e500a11122938c45965b0ba8f54ca27b",
+    "struct:app-v1.xml": "f5c6b36112fd41390ebc9989032690a5caeb34ae185f9bcaf59a67284d42cbf2",
+    "struct:aps.txt": "717ead80a174b97b23e8165e9c15a31fd67aab258b74416fcd0c043f0daff4d5",
+    "struct:lists.docx": "d2bac4aff3d711e789cf551878f819b01b37ec6e71e3de8af380aa018fceabc6",
+    "struct:deck.pptx": "b23440811a44c505d814f6aac9b53402a8a154d5d7ab743157eda4ae78a41c0f",
 }
 
 
