@@ -23,7 +23,7 @@ def convert_main(argv: list[str]) -> int:
     """Reference-CLI parity (`docling <sources> --to md --output dir`,
     /root/reference/docling/cli/main.py:307): convert local files through
     the job's format sniff and backends, no Spark session needed."""
-    from .job import CONTENT_TYPES, _doc_backend, sniff_content_type
+    from .job import CONTENT_TYPES, RESULT_TYPES, _doc_backend, sniff_content_type
 
     ext_map = {
         "md": ".md",
@@ -105,6 +105,7 @@ def convert_main(argv: list[str]) -> int:
 
     from pathlib import Path
 
+    from .metsx import extract_mets_gbs
     from .pdfx.extract import extract_pdf_text
     from .serialize import to_itxt, to_markdown
     from .serialize_doctags import to_doctags
@@ -122,14 +123,22 @@ def convert_main(argv: list[str]) -> int:
             if args.from_formats is not None and fmt not in args.from_formats:
                 print(f"skipped {path.name}: format {fmt} not in --from")
                 continue
-            if fmt == "pdf":
-                # the PDF text path has no SpanDoc: md/text outputs only
-                res = extract_pdf_text(
-                    raw,
-                    password=args.pdf_password,
-                    page_range=args.page_range,
-                    max_num_pages=args.max_num_pages,
-                )
+            if fmt in RESULT_TYPES:
+                # PDF and METS take the job's text paths: md/text only
+                if fmt == "pdf":
+                    kind = "PDF"
+                    res = extract_pdf_text(
+                        raw,
+                        password=args.pdf_password,
+                        page_range=args.page_range,
+                        max_num_pages=args.max_num_pages,
+                    )
+                else:
+                    kind = "METS"
+                    res = extract_mets_gbs(raw)
+                if res.status == "skipped":
+                    print(f"skipped {path.name}: {res.error}")
+                    continue
                 if res.status == "failure":
                     raise RuntimeError(res.error or res.status)
                 outputs = {"md": res.text, "text": res.text}
@@ -137,7 +146,7 @@ def convert_main(argv: list[str]) -> int:
                 if dropped:
                     print(
                         f"skipped {path.name} outputs {','.join(dropped)}: "
-                        "the PDF text path writes md and text only"
+                        f"the {kind} text path writes md and text only"
                     )
             else:
                 routed = _doc_backend(fmt, raw, path.name, "none")

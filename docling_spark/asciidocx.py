@@ -98,13 +98,14 @@ class AsciiDocExtractor:
         doc = SpanDoc(name)
         for line in raw.decode("utf-8").split("\n"):
             if _TITLE_RE.match(line):
-                self.parents[0] = doc.add_title(line[2:].strip()).idx
+                self.parents[0] = doc.add_text("title", line[2:].strip()).idx
             elif _IS_HEADER_RE.match(line):
                 m = _HEADER_RE.match(line)
                 level = m.group(1).count("=") - 1
-                self.parents[level] = doc.add_heading(
+                self.parents[level] = doc.add_text(
+                    "section_header",
                     m.group(2).strip(),
-                    level,
+                    level=level,
                     parent=self.parents.get(level - 1),
                 ).idx
                 for k in self.parents:
@@ -115,13 +116,13 @@ class AsciiDocExtractor:
                 level = self._level()
                 if not self.in_list:
                     self.in_list = True
-                    self.parents[level + 1] = doc.add_list_group(
-                        name="list", parent=self.parents[level], content_layer="body"
+                    self.parents[level + 1] = doc.add_group(
+                        "list", "list", self.parents[level], content_layer="body"
                     ).idx
                     self.indents[level + 1] = item["indent"]
                 elif item["indent"] > (self.indents[level] or 0):
-                    self.parents[level + 1] = doc.add_list_group(
-                        name="list", parent=self.parents[level], content_layer="body"
+                    self.parents[level + 1] = doc.add_group(
+                        "list", "list", self.parents[level], content_layer="body"
                     ).idx
                     self.indents[level + 1] = item["indent"]
                 elif (
@@ -135,9 +136,7 @@ class AsciiDocExtractor:
                         self.parents[level] = None
                         self.indents[level] = None
                         level -= 1
-                doc.add_list_item(
-                    item["text"], False, marker="", parent=self._parent()
-                )
+                doc.add_text("list_item", item["text"], parent=self._parent())
             elif self.in_list:
                 self.in_list = False
                 level = self._level()

@@ -77,19 +77,14 @@ class _Parser:
         return self.parent_stack[-1][0] if self.parent_stack else None
 
     def _add_text(self, label: str, text: str, provs, level: int = 1):
-        doc = self.doc
-        parent = self._parent()
-        if label == "title":
-            it = doc.add_title(text, parent=parent)
-        elif label == "section_header":
-            it = doc.add_heading(text, level=level, parent=parent)
-        elif label == "list_item":
-            ordered = self.parent_stack[-1][1] if self.parent_stack else False
-            it = doc.add_list_item(
-                text, parent=parent, enumerated=ordered, marker=""
-            )
-        else:
-            it = doc.add_text(label, text, parent=parent)
+        ordered = self.parent_stack[-1][1] if self.parent_stack else False
+        it = self.doc.add_text(
+            label,
+            text,
+            parent=self._parent(),
+            level=level,
+            enumerated=label == "list_item" and ordered,
+        )
         it.prov_list = self._prov(provs)
         return it
 
@@ -202,7 +197,7 @@ class _Parser:
         m = re.match(r"^<(ordered_list|unordered_list)>", part)
         if m:
             ordered = m.group(1) == "ordered_list"
-            g = doc.add_list_group("list", self._parent(), "body")
+            g = doc.add_group("list", "list", self._parent(), "body")
             self.parent_stack.append((g.idx, ordered))
             part = part[m.end() :]
             if not part:
@@ -243,7 +238,7 @@ class _Parser:
                 inner = inner[lm.end() :]
             cap_at = inner.find("<caption>")
             text = inner if cap_at < 0 else inner[:cap_at]
-            it = doc.add_code(text, parent=self._parent())
+            it = doc.add_text("code", text, parent=self._parent())
             it.prov_list = self._prov(provs)
             it.code_language = lang
             if cap_at >= 0:

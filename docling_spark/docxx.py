@@ -679,8 +679,8 @@ class DocxExtractor:
         if style_token in ["Title"]:
             for key in range(len(self.parents)):
                 self.parents[key] = None
-            te = doc.add_title(
-                text, parent=None, content_layer=self.content_layer
+            te = doc.add_text(
+                "title", text, parent=None, content_layer=self.content_layer
             )
             self.parents[0] = te.idx
             refs.append(te.idx)
@@ -830,9 +830,10 @@ class DocxExtractor:
                 text = f"{self.heading_counters[upper_level]}.{text}"
                 upper_level -= 1
 
-        hd = doc.add_heading(
+        hd = doc.add_text(
+            "section_header",
             text,
-            bump_level,
+            level=bump_level,
             parent=self.parents[parent_level],
             content_layer=self.content_layer,
         )
@@ -855,9 +856,10 @@ class DocxExtractor:
         if len(elements) == 1:
             text, fmt, link = elements[0]
             if text:
-                doc.add_list_item(
+                doc.add_text(
+                    "list_item",
                     text,
-                    enumerated,
+                    enumerated=enumerated,
                     marker=marker,
                     parent=parent_idx,
                     formatting=fmt,
@@ -865,9 +867,10 @@ class DocxExtractor:
                     content_layer=self.content_layer,
                 )
         else:
-            item = doc.add_list_item(
+            item = doc.add_text(
+                "list_item",
                 "",
-                enumerated,
+                enumerated=enumerated,
                 marker=marker,
                 parent=parent_idx,
                 content_layer=self.content_layer,
@@ -899,7 +902,8 @@ class DocxExtractor:
         ):  # open new list
             self.list_anchor_level = level
             self._reset_list_counters(numid)
-            gr = doc.add_list_group(
+            gr = doc.add_group(
+                "list",
                 name="list",
                 parent=self.parents[level - 1],
                 content_layer=self.content_layer,
@@ -920,7 +924,8 @@ class DocxExtractor:
                 self.list_anchor_level + last_indent + 1,
                 self.list_anchor_level + ilevel + 1,
             ):
-                gr1 = doc.add_list_group(
+                gr1 = doc.add_group(
+                    "list",
                     name="list",
                     parent=self.parents[i - 1],
                     content_layer=self.content_layer,

@@ -152,7 +152,6 @@ def extract_document(
                 password=password,
                 page_range=page_range,
                 max_num_pages=max_num_pages,
-                with_page_texts=True,
             )
             if pr.status in ("failure",):
                 res.status = "failure"

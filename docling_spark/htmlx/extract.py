@@ -446,8 +446,8 @@ class HtmlExtractor:
         title = next((t for t in index if t.tag_name == "title"), None)
         if title is not None:
             t_orig = title.get_text(separator=" ", strip=True)
-            doc.add_title(
-                text=clean_unicode(t_orig), orig=t_orig, content_layer=FURNITURE
+            doc.add_text(
+                "title", clean_unicode(t_orig), orig=t_orig, content_layer=FURNITURE
             )
 
         # detaching every removed tag gives the same tree in any order, and
@@ -652,15 +652,14 @@ class HtmlExtractor:
     # ------------------------------------------------------------- emitting
     def _add_run(self, doc: SpanDoc, frag: AnnotText, text: str) -> Item:
         """One fragment as a code or a text item under the current parent."""
-        where = dict(
+        return doc.add_text(
+            "code" if frag.code else "text",
+            text,
             parent=self._parent(),
             content_layer=self.layer,
             formatting=frag.formatting,
             hyperlink=_link_str(frag.hyperlink),
         )
-        if frag.code:
-            return doc.add_code(text, **where)
-        return doc.add_text("text", text, **where)
 
     def _emit_parts(self, runs: list[AnnotText], doc: SpanDoc) -> list[int]:
         """Emit coalesced runs split at newlines, each part in an inline
@@ -743,7 +742,8 @@ class HtmlExtractor:
             for k in self.parents:
                 self.parents[k] = None
             self.level = 0
-            item = doc.add_title(
+            item = doc.add_text(
+                "title",
                 text,
                 orig=single.text,
                 content_layer=self.layer,
@@ -770,7 +770,8 @@ class HtmlExtractor:
                     if k > lvl + 1:
                         self.parents[k] = None
                 self.level = lvl
-            item = doc.add_heading(
+            item = doc.add_text(
+                "section_header",
                 text,
                 level=self.level,
                 orig=single.text,
@@ -800,8 +801,8 @@ class HtmlExtractor:
         else:
             gname = "list"
 
-        group = doc.add_list_group(
-            name=gname, parent=self._parent(), content_layer=self.layer
+        group = doc.add_group(
+            "list", name=gname, parent=self._parent(), content_layer=self.layer
         )
         self.parents[self.level + 1] = group
         self.list_ordered[group.idx] = ordered
@@ -826,7 +827,8 @@ class HtmlExtractor:
 
             if li_text:
                 if len(runs) > 1:
-                    holder = doc.add_list_item(
+                    holder = doc.add_text(
+                        "list_item",
                         text="",
                         enumerated=ordered,
                         marker=marker,
@@ -846,7 +848,8 @@ class HtmlExtractor:
                 else:
                     frag = runs[0]
                     raw = _WS_RUNS.sub(" ", frag.text).strip()
-                    item = doc.add_list_item(
+                    item = doc.add_text(
+                        "list_item",
                         text=clean_unicode(raw),
                         enumerated=ordered,
                         marker=marker,
@@ -987,7 +990,8 @@ class HtmlExtractor:
             )
             with self._maybe_inline_group(runs, doc):
                 for frag in runs:
-                    it = doc.add_code(
+                    it = doc.add_text(
+                        "code",
                         text=clean_unicode(frag.text.strip()),
                         parent=self._parent(),
                         content_layer=self.layer,

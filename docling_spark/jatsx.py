@@ -33,14 +33,6 @@ _DEFAULT_ABSTRACT = "Abstract"
 _DEFAULT_REFERENCES = "References"
 _DEFAULT_ETAL = "et al."
 
-JATS_DTD_MARKERS = ("JATS-journalpublishing", "JATS-archive")
-
-
-def looks_like_jats(raw: bytes) -> bool:
-    head = raw[:8192].decode("utf-8", "replace")
-    return any(m in head for m in JATS_DTD_MARKERS)
-
-
 def _get_text(node, sep: Optional[str] = None) -> str:
     """Recursive text concat skipping term/formula nodes (reference
     _get_text, :173-189)."""
@@ -138,7 +130,7 @@ class JatsExtractor:
 
     def _add_metadata(self, doc: SpanDoc, tree) -> None:
         title = self._parse_title(tree)
-        self.root = doc.add_title(title, parent=None).idx
+        self.root = doc.add_text("title", title, parent=None).idx
         authors = self._parse_authors(tree)
         authors_str = ", ".join(a["name"] for a in authors)
         affiliations = [
@@ -152,9 +144,10 @@ class JatsExtractor:
         for abstract in self._parse_abstracts(tree):
             if not abstract["content"]:
                 continue
-            parent = doc.add_heading(
+            parent = doc.add_text(
+                "section_header",
                 abstract["label"] or _DEFAULT_ABSTRACT,
-                self.hlevel + 1,
+                level=self.hlevel + 1,
                 parent=self.root,
             )
             doc.add_text("text", abstract["content"], parent=parent.idx)
@@ -260,10 +253,8 @@ class JatsExtractor:
 
     def _add_citation(self, doc: SpanDoc, parent: Optional[int], text: str):
         p = doc.items[parent] if parent is not None else None
-        if p is not None and p.kind == "group" and p.label == "list":
-            doc.add_list_item(text, False, marker="", parent=parent)
-        else:
-            doc.add_text("text", text, parent=parent)
+        in_list = p is not None and p.kind == "group" and p.label == "list"
+        doc.add_text("list_item" if in_list else "text", text, parent=parent)
 
     # ---------------- figures / tables / equations ---------------------
     def _caption_text(self, node) -> tuple[str, Optional[str]]:
@@ -344,17 +335,17 @@ class JatsExtractor:
                     text = _DEFAULT_ACK
                 if text:
                     self.hlevel += 1
-                    new_parent = doc.add_heading(
-                        text, self.hlevel, parent=parent
+                    new_parent = doc.add_text(
+                        "section_header", text, level=self.hlevel, parent=parent
                     ).idx
             elif child.tag == "list":
-                new_parent = doc.add_list_group(
-                    name="list", parent=parent, content_layer="body"
+                new_parent = doc.add_group(
+                    "list", name="list", parent=parent, content_layer="body"
                 ).idx
             elif child.tag == "list-item":
                 text = _get_text(child).strip()
-                new_parent = doc.add_list_item(
-                    text, False, marker="", parent=parent
+                new_parent = doc.add_text(
+                    "list_item", text, parent=parent
                 ).idx
                 stop_walk = True
             elif child.tag == "fig":
@@ -378,9 +369,11 @@ class JatsExtractor:
                     if header is not None
                     else _DEFAULT_REFERENCES
                 )
-                new_parent = doc.add_heading(text, 1, parent=parent).idx
-                new_parent = doc.add_list_group(
-                    name="list", parent=new_parent, content_layer="body"
+                new_parent = doc.add_text(
+                    "section_header", text, level=1, parent=parent
+                ).idx
+                new_parent = doc.add_group(
+                    "list", name="list", parent=new_parent, content_layer="body"
                 ).idx
             elif child.tag == "element-citation":
                 text = self._parse_element_citation(child)

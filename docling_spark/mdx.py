@@ -812,12 +812,13 @@ class MarkdownExtractor:
 
     def _create_heading(self, doc, parent, text, level, formatting, hyperlink):
         if level == 1:
-            return doc.add_title(
-                text, parent=parent, formatting=formatting, hyperlink=hyperlink
+            return doc.add_text(
+                "title", text, parent=parent, formatting=formatting, hyperlink=hyperlink
             )
-        return doc.add_heading(
+        return doc.add_text(
+            "section_header",
             text,
-            level - 1,
+            level=level - 1,
             parent=parent,
             formatting=formatting,
             hyperlink=hyperlink,
@@ -852,8 +853,8 @@ class MarkdownExtractor:
             )
             self._close_table(doc)
             if has_non_empty:
-                grp = doc.add_list_group(
-                    name="list", parent=parent_item, content_layer="body"
+                grp = doc.add_group(
+                    "list", name="list", parent=parent_item, content_layer="body"
                 )
                 parent_item = grp.idx
                 list_ordered_flag_by_ref[parent_item] = element.ordered
@@ -875,10 +876,10 @@ class MarkdownExtractor:
             ]
             if len(non_list_children) > 1:
                 parent_ref = parent_item
-                item = doc.add_list_item(
+                item = doc.add_text(
+                    "list_item",
                     "",
-                    enumerated,
-                    marker="",
+                    enumerated=enumerated,
                     parent=parent_item,
                     formatting=formatting,
                     hyperlink=hyperlink,
@@ -955,10 +956,10 @@ class MarkdownExtractor:
                                 else False
                             )
                             parent_ref = parent_item
-                            item = doc.add_list_item(
+                            item = doc.add_text(
+                                "list_item",
                                 snippet_text,
-                                enumerated,
-                                marker="",
+                                enumerated=enumerated,
                                 parent=parent_item,
                                 formatting=formatting,
                                 hyperlink=hyperlink,
@@ -986,7 +987,8 @@ class MarkdownExtractor:
 
         elif isinstance(element, CodeSpan):
             self._close_table(doc)
-            doc.add_code(
+            doc.add_text(
+                "code",
                 str(element.children).strip(),
                 parent=parent_item,
                 formatting=formatting,
@@ -1000,7 +1002,8 @@ class MarkdownExtractor:
             and len(snippet_text := child.children.strip()) > 0
         ):
             self._close_table(doc)
-            doc.add_code(
+            doc.add_text(
+                "code",
                 snippet_text,
                 parent=parent_item,
                 formatting=formatting,
@@ -1016,7 +1019,8 @@ class MarkdownExtractor:
             self._close_table(doc)
             if element.body.strip():
                 html_block = element.body.strip()
-                doc.add_code(
+                doc.add_text(
+                    "code",
                     f"{_START_MARKER}{html_block}{_STOP_MARKER}",
                     parent=parent_item,
                     formatting=formatting,

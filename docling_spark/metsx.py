@@ -30,10 +30,6 @@ _METS_NS = "{http://www.loc.gov/METS/}"
 _XLINK = "{http://www.w3.org/1999/xlink}"
 
 
-def looks_like_gzip(raw: bytes) -> bool:
-    return raw[:2] == b"\x1f\x8b"
-
-
 def _extract_bbox(title: str) -> Optional[tuple[int, int, int, int]]:
     for part in title.split(";"):
         part = part.strip()

@@ -122,61 +122,6 @@ class SpanDoc:
             Item(0, "group", label, name=name, content_layer=content_layer), parent
         )
 
-    def add_list_group(
-        self, name: str, parent: Optional[int], content_layer: str
-    ) -> Item:
-        return self._add(
-            Item(0, "group", "list", name=name, content_layer=content_layer), parent
-        )
-
-    def add_title(
-        self,
-        text: str,
-        orig: str = "",
-        parent: Optional[int] = None,
-        content_layer: str = BODY,
-        formatting: Optional[Formatting] = None,
-        hyperlink: Optional[str] = None,
-    ) -> Item:
-        return self._add(
-            Item(
-                0,
-                "text",
-                "title",
-                text=text,
-                orig=orig or text,
-                content_layer=content_layer,
-                formatting=formatting,
-                hyperlink=hyperlink,
-            ),
-            parent,
-        )
-
-    def add_heading(
-        self,
-        text: str,
-        level: int,
-        orig: str = "",
-        parent: Optional[int] = None,
-        content_layer: str = BODY,
-        formatting: Optional[Formatting] = None,
-        hyperlink: Optional[str] = None,
-    ) -> Item:
-        return self._add(
-            Item(
-                0,
-                "text",
-                "section_header",
-                text=text,
-                orig=orig or text,
-                level=level,
-                content_layer=content_layer,
-                formatting=formatting,
-                hyperlink=hyperlink,
-            ),
-            parent,
-        )
-
     def add_text(
         self,
         label: str,
@@ -186,7 +131,13 @@ class SpanDoc:
         content_layer: str = BODY,
         formatting: Optional[Formatting] = None,
         hyperlink: Optional[str] = None,
+        level: int = 1,
+        enumerated: bool = False,
+        marker: str = "",
     ) -> Item:
+        """Every text item: the label ("title", "section_header", "text",
+        "list_item", "code", ...) is data; ``level`` matters for section
+        headers, ``enumerated`` and ``marker`` for list items."""
         return self._add(
             Item(
                 0,
@@ -194,55 +145,9 @@ class SpanDoc:
                 label,
                 text=text,
                 orig=orig or text,
-                content_layer=content_layer,
-                formatting=formatting,
-                hyperlink=hyperlink,
-            ),
-            parent,
-        )
-
-    def add_code(
-        self,
-        text: str,
-        parent: Optional[int] = None,
-        content_layer: str = BODY,
-        formatting: Optional[Formatting] = None,
-        hyperlink: Optional[str] = None,
-    ) -> Item:
-        return self._add(
-            Item(
-                0,
-                "text",
-                "code",
-                text=text,
-                orig=text,
-                content_layer=content_layer,
-                formatting=formatting,
-                hyperlink=hyperlink,
-            ),
-            parent,
-        )
-
-    def add_list_item(
-        self,
-        text: str,
-        enumerated: bool,
-        marker: str,
-        orig: str = "",
-        parent: Optional[int] = None,
-        content_layer: str = BODY,
-        formatting: Optional[Formatting] = None,
-        hyperlink: Optional[str] = None,
-    ) -> Item:
-        return self._add(
-            Item(
-                0,
-                "text",
-                "list_item",
-                text=text,
-                orig=orig or text,
-                enumerated=enumerated,
+                level=level,
                 marker=marker,
+                enumerated=enumerated,
                 content_layer=content_layer,
                 formatting=formatting,
                 hyperlink=hyperlink,

@@ -35,13 +35,6 @@ from .model import SpanDoc
 _DEFAULT_NS = "http://www.ofdspec.org/2016"
 
 
-def looks_like_ofd(raw: bytes) -> bool:
-    """Cheap container probe (reference _probe_validity checks for OFD.xml)."""
-    if raw[:2] != b"PK":
-        return False
-    return b"OFD.xml" in raw
-
-
 def _to_float(value: Optional[str]) -> Optional[float]:
     if value is None:
         return None
@@ -407,7 +400,7 @@ def extract_ofd(raw: bytes, name: str = "file") -> SpanDoc:
     doc = SpanDoc(name)
     title = metadata.get("title")
     if title:
-        doc.add_title(title)
+        doc.add_text("title", title)
     for page in pages:
         lines = _group_lines(page.text_items)
         for paragraph in _build_paragraphs(lines):

@@ -10,6 +10,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Optional
 
+from ..model import SpanDoc
+
 
 @dataclass
 class PdfResult:
@@ -18,8 +20,8 @@ class PdfResult:
     error: Optional[str] = None
     pages: Optional[list] = None  # per-page cell counts
     spans: Optional[list] = None  # structured labeled spans (with_structure)
-    page_texts: Optional[list] = None  # per-page text (with_page_texts)
-    span_doc = None  # SpanDoc (with_structure + with_span_doc)
+    page_texts: Optional[list] = None  # per-page text of the pages with cells
+    span_doc: Optional[SpanDoc] = None  # with_structure + with_span_doc
     pictures: Optional[list] = None  # image-XObject placements (with_pictures)
 
 
@@ -30,7 +32,6 @@ def extract_pdf_text(
     password: "str | bytes" = "",
     page_range: "tuple[int, int]" = (1, 2**31 - 1),
     max_num_pages: Optional[int] = None,
-    with_page_texts: bool = False,
     with_span_doc: bool = False,
     with_pictures: bool = False,
 ) -> PdfResult:
@@ -113,7 +114,7 @@ def extract_pdf_text(
                 text="\n\n".join(page_texts),
                 error=f"document timeout after {len(pages_meta)} pages",
                 pages=pages_meta,
-                page_texts=page_texts if with_page_texts else None,
+                page_texts=page_texts,
             )
         if not pages_meta:
             return PdfResult(status="failure", error="no pages found")
@@ -137,15 +138,14 @@ def extract_pdf_text(
             spans = blocks_to_spans(blocks)
             if with_span_doc:
                 span_doc = blocks_to_spandoc(blocks, pages_sizes)
-        res = PdfResult(
+        return PdfResult(
             status=status,
             text="\n\n".join(page_texts),
             pages=pages_meta,
             spans=spans,
-            page_texts=page_texts if with_page_texts else None,
+            page_texts=page_texts,
+            span_doc=span_doc,
             pictures=pictures,
         )
-        res.span_doc = span_doc
-        return res
     except Exception as e:  # noqa: BLE001
         return PdfResult(status="failure", error=f"{type(e).__name__}: {e}"[:500])

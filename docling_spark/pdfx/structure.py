@@ -384,14 +384,14 @@ def blocks_to_spandoc(blocks: list[PdfBlock], page_sizes: list):
             while heading_stack and heading_stack[-1][0] >= b.level:
                 heading_stack.pop()
             parent = heading_stack[-1][1] if heading_stack else None
-            it = doc.add_heading(b.text, level=b.level, parent=parent)
+            it = doc.add_text("section_header", b.text, level=b.level, parent=parent)
             heading_stack.append((b.level, it.idx))
         elif b.label == "list_item":
             if list_group is None:
-                g = doc.add_list_group("list", parent, "body")
+                g = doc.add_group("list", "list", parent, "body")
                 list_group = g.idx
-            it = doc.add_list_item(
-                b.text, enumerated=b.enumerated, marker=b.marker,
+            it = doc.add_text(
+                "list_item", b.text, enumerated=b.enumerated, marker=b.marker,
                 parent=list_group,
             )
         elif b.label == "table" and b.grid:

@@ -298,8 +298,8 @@ class PptxExtractor:
 
             if is_a_list:
                 if not is_list_group_created:
-                    list_idx = doc.add_list_group(
-                        name="list", parent=parent_idx, content_layer="body"
+                    list_idx = doc.add_group(
+                        "list", name="list", parent=parent_idx, content_layer="body"
                     ).idx
                     is_list_group_created = True
                     enum_value = 0
@@ -307,9 +307,10 @@ class PptxExtractor:
                 if numbered:
                     enum_value += 1
                     marker = f"{enum_value}."
-                it = doc.add_list_item(
+                it = doc.add_text(
+                    "list_item",
                     p_text,
-                    numbered,
+                    enumerated=numbered,
                     marker=marker,
                     parent=list_idx,
                 )
@@ -320,10 +321,7 @@ class PptxExtractor:
                     label = "title"
                 # subtitle: the reference's branch is a bare no-op
                 # expression (:200-201) — label remains "paragraph"
-                if label == "title":
-                    it = doc.add_title(p_text, parent=parent_idx)
-                else:
-                    it = doc.add_text(label, p_text, parent=parent_idx)
+                it = doc.add_text(label, p_text, parent=parent_idx)
                 it.prov = prov
 
     # -- tables (reference handle_tables, :256-318) ----------------------

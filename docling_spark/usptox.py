@@ -108,13 +108,13 @@ class _Doc:
         self.tables = []
 
     def add_title(self, text: str, parent=None):
-        return self.doc.add_title(
-            text, parent=parent.idx if parent else None
+        return self.doc.add_text(
+            "title", text, parent=parent.idx if parent else None
         )
 
     def add_heading(self, text: str, level: int, parent=None):
-        return self.doc.add_heading(
-            text, level, parent=parent.idx if parent else None
+        return self.doc.add_text(
+            "section_header", text, parent=parent.idx if parent else None, level=level
         )
 
     def add_paragraph(self, text: str, parent=None):

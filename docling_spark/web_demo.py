@@ -8,9 +8,11 @@ wrapping `DocumentConverter.convert()`. This module keeps the SAME route
 shape and output formats (md / text / itxt / json / doctags) but routes
 through :func:`docling_spark.job.sniff_content_type` and
 :func:`docling_spark.job._extract_one` — the format rule table and the
-per-document core the Spark job runs — so the demo, the CLI and the
-cluster job share one conversion path. No Flask/CORS/yaml dependencies: `http.server` +
-a minimal multipart reader (this sandbox installs nothing).
+per-document core the Spark job runs — so the demo and the cluster job
+share one conversion path. (The CLI shares the rule table and the
+backends, ``job._doc_backend`` and the PDF and METS text paths, but not
+``_extract_one``.) No Flask/CORS/yaml dependencies: `http.server` + a
+minimal multipart reader, standard library only.
 
 Run: ``python -m docling_spark.web_demo [port]`` then POST a file to
 /api/upload (multipart field ``file``, or a raw body with ``?filename=``).

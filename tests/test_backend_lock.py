@@ -9,15 +9,14 @@ six rows, each minus ``proc_ms`` and serialized with
 
 Inputs, all built in the repo (no reference corpus needed):
 
-- the 22 inputs of ``tests/test_cli_convert.py``;
+- the 23 inputs of ``tests/test_cli_convert.py``;
 - the ``ops/corpus`` ``synth_*_bytes`` builders at several doc ids, one
   of them with a paragraph longer than the itxt width;
 - a long paragraph in each text format (itxt truncation);
 - one seeded 300-byte junk blob routed to each ``CONTENT_TYPES`` entry;
 - a truncated, a blank (needs_ocr) and an encrypted PDF, an HTML page
   with relative links, an empty blob, ``oversize`` and ``other``;
-- a minimal METS-GBS tar.gz: a ``PROFILE="gbs"`` manifest plus one hOCR
-  page;
+- the CLI's minimal METS-GBS tar.gz once more, as an edge case;
 - small HTML pages, one per path of the HTML walker (``HTML_CASES``);
 - a JATS article whose ``table-wrap`` takes every branch of the table
   grid fill (``JATS_TABLE``);
@@ -33,15 +32,12 @@ table into ``DIGESTS``.
 
 from __future__ import annotations
 
-import gzip
 import hashlib
-import io
 import json
 import random
-import tarfile
 
 import pytest
-from test_cli_convert import CONVERTED, JATS_NO_DTD, SKIPPED
+from test_cli_convert import CONVERTED, JATS_NO_DTD, SKIPPED, mets_tar_gz
 
 from docling_spark.job import CONTENT_TYPES, _extract_one, sniff_content_type
 from docling_spark.ops import corpus
@@ -53,29 +49,6 @@ FLAG_SETS = (
     {"with_doc_json": True, "with_doctags": True},
     {"with_structure": False},
 )
-
-METS_MANIFEST = b"""<?xml version="1.0"?>
-<mets:mets xmlns:mets="http://www.loc.gov/METS/"
-           xmlns:xlink="http://www.w3.org/1999/xlink" PROFILE="gbs">
- <mets:fileSec>
-  <mets:fileGrp USE="coordOCR">
-   <mets:file ID="ocr1"><mets:FLocat xlink:href="00000001.html"/></mets:file>
-  </mets:fileGrp>
- </mets:fileSec>
- <mets:structMap>
-  <mets:div TYPE="volume">
-   <mets:div TYPE="page" ORDER="1"><mets:fptr FILEID="ocr1"/></mets:div>
-  </mets:div>
- </mets:structMap>
-</mets:mets>
-"""
-METS_HOCR = b"""<html><body>
-<div class="ocr_page" title="bbox 0 0 1000 1400">
-<span class="ocr_line" title="bbox 100 100 700 140; x_wconf 95">Chapter One</span>
-<span class="ocr_line" title="bbox 100 200 900 220; x_wconf 91">It was a dark and stormy night,</span>
-<span class="ocr_line" title="bbox 100 224 880 244; x_wconf 90">and the rain fell in torrents.</span>
-</div></body></html>
-"""
 
 # long enough that every itxt line it lands in is truncated at width 70
 WORDS = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
@@ -273,7 +246,7 @@ def _docx_lists() -> bytes:
         return f'<w:numPr><w:ilvl w:val="{ilvl}"/><w:numId w:val="{nid}"/></w:numPr>'
 
     def run(text: str, rpr: str = "") -> str:
-        return f"<w:r><w:rPr>{rpr}</w:rPr><w:t xml:space=\"preserve\">{text}</w:t></w:r>"
+        return f'<w:r><w:rPr>{rpr}</w:rPr><w:t xml:space="preserve">{text}</w:t></w:r>'
 
     body = "".join((
         para(run("Lists"), style("Title")),
@@ -356,17 +329,6 @@ def _html_case(body: str) -> bytes:
     return f"<html><body>{body}</body></html>".encode()
 
 
-def _mets_tar_gz() -> bytes:
-    buf = io.BytesIO()
-    with tarfile.open(fileobj=buf, mode="w") as tar:
-        for name, data in (("book/mets.xml", METS_MANIFEST),
-                           ("00000001.html", METS_HOCR)):
-            info = tarfile.TarInfo(name)
-            info.size, info.mtime = len(data), 0
-            tar.addfile(info, io.BytesIO(data))
-    return gzip.compress(buf.getvalue(), mtime=0)
-
-
 def _cases() -> dict[str, tuple[str, bytes, str]]:
     """case id -> (url, blob, content type)."""
     cases = {
@@ -400,7 +362,7 @@ def _cases() -> dict[str, tuple[str, bytes, str]]:
         junk = random.Random(1000 + k).randbytes(300)
         cases[f"junk:{ct}"] = (BASE + f"junk-{ct}", junk, ct)
     pdf = corpus.synth_pdf_bytes(3, "three words here")
-    mets = _mets_tar_gz()
+    mets = mets_tar_gz()
     cases.update({
         "edge:truncated.pdf": (BASE + "truncated.pdf", pdf[: len(pdf) // 2], "pdf"),
         "edge:blank.pdf": (BASE + "blank.pdf", corpus._pdf_file([]), "pdf"),
@@ -455,6 +417,7 @@ DIGESTS = {
     "cli:page.json": "4513c22dbd3556b2720833be46646ca3fab14416fdbb0ed48991e188443e6f9e",
     "cli:doc.pdf": "305bcd9b441979eca4098a14809279d55fe5cd285fd5cfeda5a87989c87f17bb",
     "cli:struct.pdf": "1f3a2a365b3c69a395f89476fe4a8dd6d6ada4e9de70227abacb840aa122fd4b",
+    "cli:book.tar.gz": "278d7cece4bf2314689b3d54ca4011d57d3f4f716bb86e86312ce38e4b9a0ba4",
     "cli:notes.txt": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",
     "cli:empty.txt": "260438f423f84dd9d53d16a6e2fb84d80d34c71584cd2d6ee0c5661d427f3fa1",
     "cli:blob.bin": "5570ba033571d5ab294660f2a4d952e86e170e2854a09fde716ec6280638e748",

@@ -3,11 +3,14 @@
 The CLI sniffs each file with the job's rule table (job.sniff_content_type)
 and converts it with the job's backends, so its md/itxt/json must equal
 what the job's per-document core (job._extract_one) produces for the same
-bytes. Unsupported content types are reported as skipped."""
+bytes. PDFs and METS archives take their text paths (md and text only).
+Unsupported content types are reported as skipped."""
 
 from __future__ import annotations
 
 import gzip
+import io
+import tarfile
 
 import pytest
 
@@ -43,6 +46,42 @@ JATS_NO_DTD = (
 )
 DOCTAGS = b"<doctag><title>T</title>\n<text>hello doctags</text>\n</doctag>"
 
+# a minimal METS-GBS archive, one hOCR page
+METS_MANIFEST = b"""<?xml version="1.0"?>
+<mets:mets xmlns:mets="http://www.loc.gov/METS/"
+           xmlns:xlink="http://www.w3.org/1999/xlink" PROFILE="gbs">
+ <mets:fileSec>
+  <mets:fileGrp USE="coordOCR">
+   <mets:file ID="ocr1"><mets:FLocat xlink:href="00000001.html"/></mets:file>
+  </mets:fileGrp>
+ </mets:fileSec>
+ <mets:structMap>
+  <mets:div TYPE="volume">
+   <mets:div TYPE="page" ORDER="1"><mets:fptr FILEID="ocr1"/></mets:div>
+  </mets:div>
+ </mets:structMap>
+</mets:mets>
+"""
+METS_HOCR = b"""<html><body>
+<div class="ocr_page" title="bbox 0 0 1000 1400">
+<span class="ocr_line" title="bbox 100 100 700 140; x_wconf 95">Chapter One</span>
+<span class="ocr_line" title="bbox 100 200 900 220; x_wconf 91">It was a dark and stormy night,</span>
+<span class="ocr_line" title="bbox 100 224 880 244; x_wconf 90">and the rain fell in torrents.</span>
+</div></body></html>
+"""
+
+
+def mets_tar_gz() -> bytes:
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tar:
+        for name, data in (("book/mets.xml", METS_MANIFEST),
+                           ("00000001.html", METS_HOCR)):
+            info = tarfile.TarInfo(name)
+            info.size, info.mtime = len(data), 0
+            tar.addfile(info, io.BytesIO(data))
+    return gzip.compress(buf.getvalue(), mtime=0)
+
+
 # file name -> (bytes, content type the job's table gives it)
 CONVERTED = {
     "page.html": (HTML, "html"),
@@ -68,6 +107,7 @@ CONVERTED = {
         synth_pdf_structured_bytes(9, "nine words in a structured pdf body"),
         "pdf",
     ),
+    "book.tar.gz": (mets_tar_gz(), "mets_gbs"),
 }
 SKIPPED = {
     "notes.txt": (b"just some prose, nothing else\nmore prose\n", "other"),
@@ -100,11 +140,12 @@ def test_cli_output_equals_job_core(tmp_path, capsys, name):
     stem = src.stem
     assert (out / f"{stem}.md").read_text() == want["extracted_text"]
     assert (out / f"{stem}.txt").read_text() == want["extracted_text"]
-    if fmt == "pdf":  # the PDF text path writes md/text only, and says so
+    if fmt in ("pdf", "mets_gbs"):  # text paths write md/text only, and say so
+        kind = "PDF" if fmt == "pdf" else "METS"
         assert sorted(p.name for p in out.iterdir()) == [f"{stem}.md", f"{stem}.txt"]
         assert capsys.readouterr().out.splitlines() == [
             f"skipped {name} outputs itxt,json,html,doctags: "
-            "the PDF text path writes md and text only",
+            f"the {kind} text path writes md and text only",
             f"converted {name}",
         ]
         return
@@ -122,7 +163,14 @@ def test_cli_skips_unsupported_types(tmp_path, capsys, name):
     src = _write(tmp_path, name, raw)
     out = tmp_path / "out"
     assert convert_main([str(src), "--to", "md", "--output", str(out)]) == 0
-    assert f"skipped {name}: unsupported format {fmt}" in capsys.readouterr().out
+    # a gzip that is no METS archive is skipped by the METS backend, which
+    # gives the reason the job's row carries
+    reason = (
+        _extract_one(name, raw, fmt, "none", 60.0)["error"]
+        if fmt == "mets_gbs"
+        else f"unsupported format {fmt}"
+    )
+    assert capsys.readouterr().out.splitlines() == [f"skipped {name}: {reason}"]
     assert list(out.iterdir()) == []
 
 

@@ -9,8 +9,9 @@ or the same exception.
 
 Inputs: every input of ``tests/test_backend_lock.py`` (CLI inputs,
 ``ops/corpus`` ``synth_*_bytes`` builds, junk blobs, HTML cases, the JATS
-table, the METS manifest and hOCR page), ``test_hostile_html.CASES``, a
-named edge list and 50,000 seeded token-soup strings.
+table), the METS manifest and hOCR page of ``tests/test_cli_convert.py``,
+``test_hostile_html.CASES``, a named edge list and 50,000 seeded
+token-soup strings.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from html import parser as stdlib_parser
 
 import pytest
 import test_backend_lock as lock
+from test_cli_convert import METS_HOCR, METS_MANIFEST
 from test_hostile_html import CASES as HOSTILE
 
 from docling_spark.htmlx import dom
@@ -130,7 +132,7 @@ def test_only_ascii_whitespace_ends_a_tag_name():
 
 def test_backend_lock_inputs_match_stdlib():
     blobs = [blob for _, blob, _ in lock.CASES.values()]
-    blobs += [lock.METS_MANIFEST, lock.METS_HOCR, lock.JATS_TABLE, lock.HTML_LINKS]
+    blobs += [METS_MANIFEST, METS_HOCR, lock.JATS_TABLE, lock.HTML_LINKS]
     for blob in blobs:
         _assert_same(dom.decode_bytes(blob))
 

@@ -12,7 +12,8 @@ from pathlib import Path
 
 import pytest
 
-from docling_spark.jatsx import extract_jats, looks_like_jats
+from docling_spark.jatsx import extract_jats
+from docling_spark.job import sniff_content_type
 from docling_spark.serialize import to_itxt, to_markdown
 from docling_spark.serialize_json import to_docling_dict
 
@@ -53,8 +54,8 @@ def test_jats_json_golden(path: Path):
 
 def test_jats_sniff():
     for p in FIXTURES:
-        assert looks_like_jats(p.read_bytes())
-    assert not looks_like_jats(b"<html><body>no</body></html>")
+        assert sniff_content_type(None, p.read_bytes()) == "jats"
+    assert sniff_content_type(None, b"<html><body>no</body></html>") != "jats"
 
 
 def test_jats_spark_dispatch():

@@ -8,7 +8,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from docling_spark.metsx import extract_mets_gbs, looks_like_gzip
+from docling_spark.job import sniff_content_type
+from docling_spark.metsx import extract_mets_gbs
 
 FIXTURE = Path(
     "/root/reference/tests/data/mets_gbs/32044009881525_select.tar.gz"
@@ -34,7 +35,7 @@ def test_mets_containment():
     assert extract_mets_gbs(b"not gzip").status == "skipped"
     # a gzip that is not a tar
     assert extract_mets_gbs(gzip.compress(b"hello")).status == "skipped"
-    assert looks_like_gzip(gzip.compress(b"x"))
+    assert sniff_content_type(None, gzip.compress(b"x")) == "mets_gbs"
 
 
 def test_mets_spark_dispatch():

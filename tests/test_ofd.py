@@ -14,7 +14,8 @@ from pathlib import Path
 
 import pytest
 
-from docling_spark.ofdx import extract_ofd, looks_like_ofd
+from docling_spark.job import sniff_content_type
+from docling_spark.ofdx import extract_ofd
 from docling_spark.serialize import to_markdown
 
 OFD_DIR = Path("/root/reference/tests/data/ofd")
@@ -23,7 +24,7 @@ OFD_DIR = Path("/root/reference/tests/data/ofd")
 @pytest.mark.parametrize("name", ["1.ofd", "999.ofd", "ano.ofd", "helloworld.ofd"])
 def test_all_fixtures_parse(name):
     raw = (OFD_DIR / name).read_bytes()
-    assert looks_like_ofd(raw)
+    assert sniff_content_type(None, raw) == "ofd"
     doc = extract_ofd(raw, name=name[:-4])
     texts = [it.text for it in doc.items if it.kind == "text" and it.text]
     assert texts, f"{name}: no text extracted"
